@@ -20,34 +20,12 @@ import graft.streaming.StreamingOps
   *  - every query ends in a total ORDER BY on a unique key.
   */
 object SparkEntry {
+  import Par.{par2, par3}
 
   private val D = "2024-01-15" // fixed business date for billing-parity queries
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-
-  /** Run independent driver-blocking steps concurrently (the
-    * ann_recall_audit pattern): Spark schedules jobs from several
-    * driver threads FIFO, so a second search's tasks back-fill the
-    * executor slots the first one's tail leaves idle. Only for steps
-    * with no ordering dependency — results are identical by
-    * construction, just not serialized on the driver. */
-  private def par2[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(a); val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-  }
-
-  private def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(a); val fb = Future(b); val fc = Future(c)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf),
-      Await.result(fc, Duration.Inf))
-  }
 
   /** The synthetic event log has stored `ts` as parquet TIMESTAMP(NANOS)
     * (read as long via the legacy conf, rebuilt as µs — same truncation

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Par.par2
+
 /** A log-structured table with snapshot isolation, time travel,
   * compaction, checkpointing and vacuum — the lakehouse transaction
   * pattern of the Delta Lake paper (Armbrust et al., VLDB 2020 —
@@ -1791,20 +1793,6 @@ class LogStore(spark: SparkSession, val root: String,
     }
   }
 
-  /** Run two independent driver-blocking write steps concurrently
-    * (guide §2.6): Spark schedules jobs from both threads FIFO, so
-    * the second write's tasks back-fill the first's idle tail. Used
-    * by the copy-on-write paths whose kept-rows segment and cdc
-    * segment are independent reads of the same immutable snapshot —
-    * the commit that publishes both still happens strictly after. */
-  private def par2w[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(a); val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-  }
-
   private def writeSegment(df: DataFrame,
       evolvedB64: Option[String] = None): Segment = {
     val name = s"seg-${java.util.UUID.randomUUID().toString.take(12)}"
@@ -2562,9 +2550,9 @@ class LogStore(spark: SparkSession, val root: String,
     * commit records the micro-batch id, and a replay of an
     * already-recorded batch is a NO-OP, so foreachBatch's
     * at-least-once delivery becomes exactly-once table content (the
-    * same fence discipline as the sketch-state maintainers, here
-    * carried inside the table's own log). Returns the committed
-    * version, or -1 for a fenced replay. */
+    * fence the StreamingOps state maintainers share through
+    * [[rebuildWithFence]]). Returns the committed version, or -1 for
+    * a fenced replay. */
   def appendStream(df: DataFrame, batchId: Long): Long = {
     if (batchId <= lastTxn()) return -1L
     val base = latestVersion()
@@ -2607,11 +2595,12 @@ class LogStore(spark: SparkSession, val root: String,
     * changed no data and contributes nothing — dataChange=false
     * semantics.
     *
-    * This is what downstream INCREMENTAL consumers (the
-    * maintainAggState family) should read instead of diffing
-    * snapshots: O(changed rows) per sync, not O(table). Reads behind
-    * the vacuum horizon refuse loudly like time travel — their change
-    * segments may be physically gone. */
+    * This is what downstream INCREMENTAL consumers
+    * (`StreamingOps.syncSumCountFromLog`, `syncLogToLog`,
+    * `mirrorLogToLog`) read instead of diffing snapshots: O(changed
+    * rows) per sync, not O(table). Reads behind the vacuum horizon
+    * refuse loudly like time travel — their change segments may be
+    * physically gone. */
   def readChanges(fromVersion: Long,
       toVersion: Long = Long.MaxValue): DataFrame = {
     import org.apache.spark.sql.functions.{lit => flit}
@@ -2725,7 +2714,7 @@ class LogStore(spark: SparkSession, val root: String,
     // the kept rewrite and the cdc segment are independent scans of
     // the same immutable snapshot — overlap their writes (§2.6)
     val (keptSeg, goneSeg) =
-      par2w(writeSegment(kept), writeChangeSegment(gone))
+      par2(writeSegment(kept), writeChangeSegment(gone))
     commit(v + 1, Seq(keptSeg), old, cdc = Seq(goneSeg))
   }
 
@@ -2800,7 +2789,7 @@ class LogStore(spark: SparkSession, val root: String,
       .withColumn("_change_type", flit("delete"))
     // independent scans of the same immutable snapshot — overlap (§2.6)
     val (keptSeg, goneSeg) =
-      par2w(writeSegment(kept), writeChangeSegment(gone))
+      par2(writeSegment(kept), writeChangeSegment(gone))
     DeleteResult(
       commitRevalidated(v, Seq(keptSeg),
         touched.map(_.name),
@@ -2957,7 +2946,7 @@ class LogStore(spark: SparkSession, val root: String,
         .withColumn("_change_type", flit("delete"))
       // the vector write (+ per-segment renames) and the cdc segment
       // both read only the cached `matched` set — overlap them (§2.6)
-      val (dvActions, goneSeg) = par2w({
+      val (dvActions, goneSeg) = par2({
         // one partitioned write, then each bucket renamed to its dv dir
         val tmp = s"$root/_opt-dv-${java.util.UUID.randomUUID()
           .toString.take(12)}"
@@ -3888,7 +3877,7 @@ class LogStore(spark: SparkSession, val root: String,
         .withColumn("_change_type", flit("insert")))
     // the rewrite and the cdc segment read only checkpointed change
     // sets + the immutable touched segments — overlap them (§2.6)
-    val (rewSeg, chSeg) = par2w(
+    val (rewSeg, chSeg) = par2(
       writeSegment(rewritten, schemaAct), writeChangeSegment(changes))
     MergeResult(
       commitRevalidated(v, Seq(rewSeg),
@@ -4022,7 +4011,7 @@ class LogStore(spark: SparkSession, val root: String,
         allowMissingColumns = true)
     // the rewrite and the cdc segment read only checkpointed change
     // sets + the immutable touched segments — overlap them (§2.6)
-    val (rewSeg, chSeg) = par2w(
+    val (rewSeg, chSeg) = par2(
       writeSegment(rewritten, schemaAct), writeChangeSegment(changes))
     commit(v + 1, Seq(rewSeg),
       touched.map(_.name),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Par.par2
 import graft.catalog.LogStore
 import graft.functions.VectorFunctions.{vec_dot, vec_norm}
 
@@ -97,18 +98,6 @@ object AnnIndex {
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.toSeq.asJava, schema)
-  }
-
-  /** Run two independent driver-blocking steps concurrently (guide
-    * §2.6): Spark schedules jobs from both threads FIFO, so the
-    * second step's tasks back-fill the first's idle tail. Results
-    * identical by construction — only driver serialization removed. */
-  private def par2[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(a); val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
   }
 
   /** The deterministic codebook rows (cell_id, embedding, nrm) — the

@@ -640,10 +640,7 @@ object Dedup {
     // cluster concurrently instead of back-to-back; the standalone
     // lexical variant's second checkpoint (signatures) is dropped —
     // the signature agg's self-join reuses its own exchange.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val lexF = Future {
+    val (lex, sem) = graft.Par.par2({
       // the checkpoint carries BOTH shingle keys: the md5 form (the
       // MinHash semantics the oracle replicates) and an 8-byte xxhash64
       // join key so the Jaccard verify's shuffles move longs, not
@@ -678,13 +675,10 @@ object Dedup {
               .cast("double")).as("jaccard"))
         .where(col("jaccard") >= tLex)
         .select(col("id_a"), col("id_b"), col("jaccard"))
-    }
-    val semF = Future {
+    }, {
       Similarity.lshNearDupPairs(embeddings, threshold = tSem)
         .select(col("id_a"), col("id_b"), col("cos"))
-    }
-    val lex = Await.result(lexF, Duration.Inf)
-    val sem = Await.result(semF, Duration.Inf)
+    })
     lex.join(sem, Seq("id_a", "id_b"), "full_outer")
       .select(col("id_a"), col("id_b"), col("jaccard"), col("cos"),
         (when(col("jaccard").isNotNull, 1).otherwise(0) +

@@ -1,19 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** S5: the reference's written-but-avoided UPDATE path
-  * (`/root/reference/src/services/bigquery.ts:168-190` — per-record
-  * `UPDATE … WHERE shop AND billing_date`, deliberately bypassed in
-  * production for the append-only pattern, `billing.ts:161-163`).
-  *
-  * Offered here as an explicit MERGE-style operator so engine users get
-  * both models: `mergeByKey` is the relational upsert (anti-join +
-  * union), `replaceTable` the atomic swap that lands it on parquet.
-  * At scale the swap rewrites only what it must when the table is
-  * partitioned — callers merge one `billing_date` partition at a time,
-  * which is exactly the reference's daily-batch access pattern.
+/** S5: the reference's written-but-avoided UPDATE path (per-record
+  * `UPDATE … WHERE shop AND billing_date` in its `bigquery.ts`,
+  * deliberately bypassed in production for the append-only pattern)
+  * as an explicit MERGE-style operator: `mergeByKey` is the relational
+  * upsert (anti-join + union). Landing a merged result durably is the
+  * table layer's job — [[graft.catalog.LogStore.merge]] /
+  * `applyChangesKeyed` commit it as one transaction.
   */
 object MergeOps {
 
@@ -26,43 +22,5 @@ object MergeOps {
     current
       .join(broadcast(updates.select(keyCols: _*).distinct()), keys, "left_anti")
       .unionByName(updates.select(current.columns.map(col): _*))
-  }
-
-  /** Replace the table at `path` with `df` via the write-new/rename-swap
-    * protocol, hardened so no failure window loses the ONLY copy of the
-    * data:
-    *
-    *   1. materialize to a sibling tmp dir,
-    *   2. rename the live dir ASIDE (live → .bak) — never delete first,
-    *   3. rename tmp → live,
-    *   4. drop the .bak.
-    *
-    * Every rename's boolean result is CHECKED (HDFS-style filesystems
-    * report failure by returning false, not by throwing); a failed swap
-    * throws with the .bak path so the caller can restore. A crash
-    * between 2 and 3 leaves both tmp and .bak on disk — recoverable by
-    * hand — whereas delete-then-rename would have a window where the
-    * data exists only in tmp. Note the swap is atomic per rename but the
-    * protocol as a whole is not a transaction; on object stores without
-    * atomic rename, front this with a manifest/table format. */
-  def replaceTable(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val suffix = System.nanoTime()
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp-" + suffix)
-    val bak = new org.apache.hadoop.fs.Path(path + ".bak-" + suffix)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val hadLive = fs.exists(hPath)
-    if (hadLive && !fs.rename(hPath, bak))
-      throw new java.io.IOException(
-        s"replaceTable: failed to move live table aside: $hPath -> $bak")
-    if (!fs.rename(tmp, hPath)) {
-      // restore the old table before failing so readers still see data
-      if (hadLive) fs.rename(bak, hPath)
-      throw new java.io.IOException(
-        s"replaceTable: failed to install new table: $tmp -> $hPath" +
-          (if (hadLive) s" (previous table restored from $bak)" else ""))
-    }
-    if (hadLive) fs.delete(bak, true)
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
+import graft.catalog.LogStore
+
 /** Cumulative page-view state per shop, emitted by the stateful stream. */
 final case class ShopTotal(shop: String, total: Long)
 
@@ -213,38 +215,6 @@ object StreamingOps {
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"))
 
-  /** Idempotent micro-batch append — the exactly-once streaming sink
-    * over an [[graft.catalog.AppendStore]]. Structured Streaming
-    * replays a failed micro-batch with the SAME batchId, so the sink
-    * stamps every row with `batch_id` and skips batches the store has
-    * already absorbed: at-least-once delivery + idempotent write =
-    * exactly-once table contents. The already-applied probe reads only
-    * the `batch_id` column (column-pruned scan) and short-circuits via
-    * limit(1). Factored out of the foreachBatch closure so replay
-    * behavior is unit-testable without a streaming runtime. */
-  def idempotentBatchAppend(store: graft.catalog.AppendStore,
-      expected: StructType)(df: DataFrame, batchId: Long): Unit = {
-    val withBatch = StructType(expected.fields :+
-      org.apache.spark.sql.types.StructField("batch_id",
-        org.apache.spark.sql.types.LongType, nullable = true))
-    val applied = store.readOrEmpty(withBatch)
-      .select("batch_id").where(col("batch_id") === batchId)
-      .limit(1).count() > 0
-    if (!applied) store.append(df.withColumn("batch_id", lit(batchId)))
-  }
-
-  /** Streaming append into the catalog store: file stream → foreachBatch
-    * with the idempotent sink above. Exactly-once contents under
-    * micro-batch replay. */
-  def streamingAppendToStore(spark: SparkSession, sourceDir: String,
-      schema: StructType, store: graft.catalog.AppendStore,
-      checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(idempotentBatchAppend(store, schema) _)
-      .start()
-
   /** UPDATE-MODE streaming aggregation → KEYED UPSERTS into a
     * graft-log table, exactly once — the write-side twin of the keyed
     * change-feed mirror ([[mirrorLogToLogKeyed]] consumes a table's
@@ -346,67 +316,80 @@ object StreamingOps {
     }
   }
 
+  /** The one state protocol every maintainer below shares. The state
+    * at `statePath` is a [[LogStore]] table the caller seeds (one
+    * `append` of the initial state, empty or not), and its `txn`
+    * action is the fence: the last batch folded in. A batch at or
+    * behind the fence returns at once — [[LogStore.lastTxn]] is
+    * driver metadata, no Spark job — so at-least-once micro-batch
+    * delivery yields exactly-once state. Otherwise `step` folds the
+    * batch into the current state and [[LogStore.rebuildWithFence]]
+    * lands the result and the fence in ONE commit: a step or write
+    * that fails leaves the old snapshot and fence in place, and a
+    * replay of the same batch then applies it once. One driver
+    * writes a state table at a time, as foreachBatch does. Live
+    * state is what `step` returns; superseded segments are reclaimed
+    * by `vacuum`, as for every LogStore table. */
+  private[streaming] def foldState(spark: SparkSession, statePath: String,
+      batchId: Long)(step: DataFrame => DataFrame): Unit = {
+    val store = LogStore.configured(spark, statePath)
+    if (batchId > store.lastTxn())
+      store.rebuildWithFence(step(store.read()), batchId,
+        targetSegments = 1): Unit
+  }
+
+  /** The current snapshot of a [[foldState]] table — every read side
+    * below goes through it. */
+  private def readState(spark: SparkSession, statePath: String): DataFrame =
+    LogStore.configured(spark, statePath).read()
+
   /** One micro-batch of streaming aggregate maintenance: fold a batch
     * of `RelationalOps.snapshotDiff` change rows into the stored
     * per-key (cnt, sm) state at `statePath` — the streaming face of
-    * CDC-driven incremental aggregation. State is stamped with the
-    * batch id and a replayed batch (id ≤ the stored stamp) is a no-op,
-    * so at-least-once micro-batch delivery still yields exactly-once
-    * state: applying a diff twice would otherwise double-count, the
-    * same hazard `idempotentBatchAppend` guards for appends. The new
-    * state lands via `MergeOps.replaceTable`'s checked rename swap
-    * (write-new first, never a window without a live table). State
-    * size is O(#groups) regardless of stream age; the DECIMAL sums
-    * telescope exactly, so state after N batches is bit-identical to
-    * a full recompute of the final snapshot. Factored out of the
-    * foreachBatch closure so replay is unit-testable. */
+    * CDC-driven incremental aggregation. [[foldState]]'s fence makes a
+    * replayed batch a no-op, so at-least-once micro-batch delivery
+    * still yields exactly-once state: applying a diff twice would
+    * otherwise double-count. Live state is O(#groups); the DECIMAL
+    * sums telescope exactly, so state after N batches is
+    * bit-identical to a full recompute of the final snapshot.
+    * Factored out of the foreachBatch closure so replay is
+    * unit-testable. */
   def maintainAggState(statePath: String, key: String, value: String)(
-      diff: DataFrame, batchId: Long): Unit = {
-    val s = diff.sparkSession
-    val state = s.read.parquet(statePath) // caller seeds initial state
-    val lastApplied = state.agg(max(col("_batch_id"))).head.getLong(0)
-    if (lastApplied < batchId) {
-      val next = graft.operators.RelationalOps
-        .applyDiffToSumCount(state.drop("_batch_id"), diff, key, value)
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
-    }
-  }
+      diff: DataFrame, batchId: Long): Unit =
+    foldState(diff.sparkSession, statePath, batchId)(
+      foldSumCount(_, diff, key, value))
+
+  /** `RelationalOps.applyDiffToSumCount` with `sm` cast back to the
+    * state's own type: the fold widens the DECIMAL sum, and the state
+    * table refuses a type change between rebuilds. */
+  private def foldSumCount(state: DataFrame, diff: DataFrame,
+      key: String, value: String): DataFrame =
+    graft.operators.RelationalOps
+      .applyDiffToSumCount(state, diff, key, value)
+      .withColumn("sm", col("sm").cast(state.schema("sm").dataType))
 
   /** One micro-batch of streaming Count-Min maintenance: build the
     * partial sketch of this batch's keys and counter-add it into the
     * stored d×w state — the streaming face of mergeable-sketch
     * frequency tracking (the same union-then-estimate life cycle as
-    * the HLL partials in `agg_hll_mergeable`, with the same batch-id
-    * fence as [[maintainAggState]] so micro-batch replay cannot
-    * double-count). State stays ≤ d·w rows forever; after N batches
-    * it is bit-identical to the batch sketch of the concatenated
-    * stream because Count-Min merge IS counter addition. */
+    * the HLL partials in `agg_hll_mergeable`, with [[foldState]]'s
+    * fence so micro-batch replay cannot double-count). Live state is
+    * ≤ d·w rows; after N batches it is bit-identical to the batch
+    * sketch of the concatenated stream because Count-Min merge IS
+    * counter addition. */
   def maintainCountMinState(statePath: String, keyCol: String,
-      d: Int = 4, w: Int = 256)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val state = s.read.parquet(statePath) // caller seeds initial state
-    // an EMPTY seed (no counters yet) is legitimate for a sketch —
-    // max() over it is NULL, which must read as "nothing applied"
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
-      val partial = graft.operators.Sketches.countMin(batch,
-        col(keyCol), d, w)
-      val next = state.drop("_batch_id").unionByName(partial)
-        .groupBy(col("r"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
-    }
-  }
+      d: Int = 4, w: Int = 256)(batch: DataFrame, batchId: Long): Unit =
+    foldState(batch.sparkSession, statePath, batchId)(
+      _.unionByName(graft.operators.Sketches.countMin(batch,
+          col(keyCol), d, w))
+        .groupBy(col("r"), col("bucket")).agg(sum(col("cnt")).as("cnt")))
 
   /** Exactly-once per-group HLL upkeep — the streaming face of
     * `agg_hll_mergeable`'s union-then-estimate life cycle, completing
     * the mergeable-sketch trio (Count-Min: frequencies, KLL:
     * quantiles, HLL: distinct counts). State is one Datasketches HLL
-    * binary per group plus the [[maintainAggState]] batch-id fence, so
-    * it stays O(#groups) forever and replays are no-ops.
+    * binary per group (g STRING, sk BINARY) behind [[foldState]]'s
+    * fence, so live state is O(#groups) and replays are no-ops.
     *
     * Unlike the KLL upkeep (one global sketch, merged driver-side),
     * the merge here is FULLY distributed: the batch's partial sketches
@@ -415,41 +398,33 @@ object StreamingOps {
     * idempotent, so after N batches the state estimates exactly what
     * the batch sketch of the concatenated stream would. */
   def maintainHllState(statePath: String, groupCol: String,
-      valueCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val state = s.read.parquet(statePath) // (g STRING, sk BINARY, _batch_id)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
+      valueCol: String)(batch: DataFrame, batchId: Long): Unit =
+    foldState(batch.sparkSession, statePath, batchId) { state =>
       val partial = batch
         .select(col(groupCol).cast("string").as("g"),
           col(valueCol).as("v"))
         .where(col("v").isNotNull)
         .groupBy(col("g")).agg(hll_sketch_agg(col("v")).as("psk"))
-      val next = state.select(col("g"), col("sk"))
+      state.select(col("g"), col("sk"))
         .join(partial, Seq("g"), "full_outer")
         .select(col("g"),
           when(col("sk").isNull, col("psk"))
             .when(col("psk").isNull, col("sk"))
             .otherwise(hll_union(col("sk"), col("psk"))).as("sk"))
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
     }
-  }
 
   /** Per-group distinct-count estimates from a maintained HLL state
     * table — the read side of [[maintainHllState]]. */
   def hllStateEstimates(spark: SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(statePath)
+    readState(spark, statePath)
       .select(col("g"), hll_sketch_estimate(col("sk")).as("approx"))
 
   /** Exactly-once Misra–Gries upkeep — the last of the mergeable
     * sketches to gain a streaming face (CMS: frequencies, KLL:
     * quantiles, HLL: distinct, KMV: set ops, MG: heavy hitters).
-    * State is the sketch's ≤ k (item, cnt) rows plus the batch-id
-    * fence; per batch the partial sketch aggregates distributed and
-    * merges with the stored one via the SAME
+    * State is the sketch's ≤ k (item LONG, cnt LONG) rows behind
+    * [[foldState]]'s fence; per batch the partial sketch aggregates
+    * distributed and merges with the stored one via the SAME
     * `MisraGriesAggregator.merge` the batch surface uses (Agarwal et
     * al.'s mergeable-summaries rule: sum counts, subtract the
     * (k+1)-th largest). Unlike the other maintainers the CONTRACT is
@@ -462,13 +437,8 @@ object StreamingOps {
       k: Int = 8)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
     import s.implicits._
-    import graft.operators.MisraGriesAggregator
-    val state = s.read.parquet(statePath) // (item LONG, cnt LONG, _batch_id)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
-      val agg = new MisraGriesAggregator(k)
+    val agg = new graft.operators.MisraGriesAggregator(k)
+    foldState(s, statePath, batchId) { state =>
       val partial: Map[Long, Long] = batch
         .select(col(keyCol).cast("long").as("x"))
         .where(col("x").isNotNull).as[Long]
@@ -477,78 +447,61 @@ object StreamingOps {
         .collect().headOption.map(_._2).getOrElse(Map.empty)
       val prior: Map[Long, Long] = state.select(col("item"), col("cnt"))
         .as[(Long, Long)].collect().toMap
-      val next = agg.merge(prior, partial).toSeq
-      graft.operators.MergeOps.replaceTable(s,
-        next.toDF("item", "cnt").withColumn("_batch_id", lit(batchId)),
-        statePath)
+      agg.merge(prior, partial).toSeq.toDF("item", "cnt")
     }
   }
 
   /** Incremental aggregate sync FROM a log table's Change Data Feed —
     * the consumer side of the table's exactly-once story: the state
-    * table carries the per-key (cnt, sm) aggregate plus the last log
-    * version it has absorbed (`_synced_version` — the same fence
-    * discipline as the batch-id maintainers, carried as TABLE-version
-    * progress instead). Each sync reads ONLY
-    * `readChanges(last+1, latest)` — O(changed rows), never O(table) —
-    * adapts it with `cdcToDiff`, folds it in with
-    * `applyDiffToSumCount`, and lands atomically via the checked
-    * rename swap. A replayed or concurrent re-sync sees
-    * latest ≤ fence and is a no-op, so crash-restart delivery is
-    * exactly-once; after N syncs the state is bit-identical to a full
-    * recompute of the latest snapshot (DECIMAL sums telescope).
-    * Returns the version now absorbed. Seed: the aggregate at some
-    * version V stamped `_synced_version` = V — or an empty aggregate
-    * stamped -1 to build from the feed alone. */
+    * table carries the per-key (cnt, sm) aggregate, and its
+    * [[foldState]] fence is the last SOURCE version it has absorbed
+    * (the cursor pattern of the ANN index maintainers). Each sync
+    * reads ONLY `readChanges(last+1, latest)` — O(changed rows),
+    * never O(table) — adapts it with `cdcToDiff`, and folds it in
+    * with `applyDiffToSumCount` in one commit. A replayed re-sync
+    * sees latest ≤ fence and is a no-op, so crash-restart delivery
+    * is exactly-once; after N syncs the state
+    * is bit-identical to a full recompute of the latest snapshot
+    * (DECIMAL sums telescope). Returns the version now absorbed.
+    * Seed: the aggregate at some version V landed with
+    * `appendStream(agg, batchId = V)` — or an empty aggregate landed
+    * with a plain `append` to build from the feed alone. */
   def syncSumCountFromLog(spark: SparkSession,
-      store: graft.catalog.LogStore, statePath: String, idCol: String,
+      store: LogStore, statePath: String, idCol: String,
       key: String, value: String): Long = {
-    val state = spark.read.parquet(statePath)
-    val last = state
-      .agg(coalesce(max(col("_synced_version")), lit(-1L)))
-      .head.getLong(0)
+    val last = math.max(LogStore.configured(spark, statePath).lastTxn(),
+      -1L)
     val latest = store.latestVersion()
     if (latest <= last) return last // fenced: nothing new to absorb
     val diff = graft.operators.RelationalOps.cdcToDiff(
       store.readChanges(last + 1, latest), idCol, key, value)
-    val next = graft.operators.RelationalOps
-      .applyDiffToSumCount(state.drop("_synced_version"), diff,
-        key, value)
-      .withColumn("_synced_version", lit(latest))
-    graft.operators.MergeOps.replaceTable(spark, next, statePath)
+    foldState(spark, statePath, latest)(foldSumCount(_, diff, key, value))
     latest
   }
 
   /** Exactly-once upkeep of the per-group TRUE counts behind the ε-DP
     * count release — the streaming face of
-    * `AnalyticsOps.dpNoisyCounts`, with the same batch-id fence as the
-    * sketch maintainers. Only the additive true counts are state
-    * (O(#groups) forever); the geometric noise is applied ON READ by
-    * [[dpCountStateRelease]], because the draw is a deterministic
-    * function of (salt, group) alone — independent of n and of arrival
-    * order — so a release read from maintained state after N batches
-    * is bit-identical to the batch release over the concatenated
-    * stream. Noise-on-read is also the correct DP lifecycle: noising
-    * per micro-batch and summing would compound N draws (and N·ε of
-    * budget) where the release spends one. */
+    * `AnalyticsOps.dpNoisyCounts`, behind [[foldState]]'s fence like
+    * the sketch maintainers. Only the additive true counts
+    * (g STRING, n LONG) are state, O(#groups) live; the geometric
+    * noise is applied ON READ by [[dpCountStateRelease]], because the
+    * draw is a deterministic function of (salt, group) alone —
+    * independent of n and of arrival order — so a release read from
+    * maintained state after N batches is bit-identical to the batch
+    * release over the concatenated stream. Noise-on-read is also the
+    * correct DP lifecycle: noising per micro-batch and summing would
+    * compound N draws (and N·ε of budget) where the release spends
+    * one. */
   def maintainDpCountState(statePath: String, groupCol: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val state = s.read.parquet(statePath) // (g STRING, n LONG, _batch_id)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
+      batch: DataFrame, batchId: Long): Unit =
+    foldState(batch.sparkSession, statePath, batchId) { state =>
       val partial = batch
         .select(col(groupCol).cast("string").as("g"))
         .where(col("g").isNotNull)
         .groupBy(col("g")).agg(count(lit(1)).as("n"))
-      val next = state.select(col("g"), col("n")).unionByName(partial)
+      state.select(col("g"), col("n")).unionByName(partial)
         .groupBy(col("g")).agg(sum(col("n")).cast("long").as("n"))
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
     }
-  }
 
   /** The read side of [[maintainDpCountState]]: the ε-DP count release
     * over the maintained state — delegates to the SAME
@@ -558,27 +511,22 @@ object StreamingOps {
   def dpCountStateRelease(spark: SparkSession, statePath: String,
       salt: String = "dp"): DataFrame =
     graft.operators.AnalyticsOps.dpReleaseFromCounts(
-      spark.read.parquet(statePath).select(col("g"), col("n")),
+      readState(spark, statePath).select(col("g"), col("n")),
       "g", salt)
 
   /** Exactly-once upkeep of the (true count, clipped integer sum)
-    * state behind the ε-DP MEAN release — the streaming face of
-    * `AnalyticsOps.dpNoisyMean`, completing the DP streaming surface
-    * beside [[maintainDpCountState]]. The clipping happens PER ROW at
+    * state (g STRING, n LONG, clipped_units LONG) behind the ε-DP
+    * MEAN release — the streaming face of `AnalyticsOps.dpNoisyMean`,
+    * completing the DP streaming surface beside
+    * [[maintainDpCountState]]. The clipping happens PER ROW at
     * accumulation (the shared `dpClippedUnits` definition), so the
     * additive state telescopes exactly; both noise draws apply ON READ
     * via [[dpMeanStateRelease]] — one draw per release, not per
-    * micro-batch. State is O(#groups) of pure integers forever. */
+    * micro-batch. Live state is O(#groups) of pure integers. */
   def maintainDpMeanState(statePath: String, groupCol: String,
       valueCol: String, clip: Double = 100.0)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    // (g STRING, n LONG, clipped_units LONG, _batch_id)
-    val state = s.read.parquet(statePath)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
+      batch: DataFrame, batchId: Long): Unit =
+    foldState(batch.sparkSession, statePath, batchId) { state =>
       val partial = batch
         .select(col(groupCol).cast("string").as("g"),
           graft.operators.AnalyticsOps.dpClippedUnits(valueCol, clip)
@@ -586,15 +534,12 @@ object StreamingOps {
         .where(col("g").isNotNull)
         .groupBy(col("g"))
         .agg(count(lit(1)).as("n"), sum(col("u")).as("clipped_units"))
-      val next = state.select(col("g"), col("n"), col("clipped_units"))
+      state.select(col("g"), col("n"), col("clipped_units"))
         .unionByName(partial)
         .groupBy(col("g"))
         .agg(sum(col("n")).cast("long").as("n"),
           sum(col("clipped_units")).cast("long").as("clipped_units"))
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
     }
-  }
 
   /** The read side of [[maintainDpMeanState]]: the ε-DP mean release
     * over the maintained state, through the SAME
@@ -603,42 +548,34 @@ object StreamingOps {
   def dpMeanStateRelease(spark: SparkSession, statePath: String,
       clip: Double = 100.0, salt: String = "dp"): DataFrame =
     graft.operators.AnalyticsOps.dpMeanReleaseFromState(
-      spark.read.parquet(statePath)
+      readState(spark, statePath)
         .select(col("g"), col("n"), col("clipped_units")),
       "g", clip, salt)
 
   /** Exactly-once upkeep of the per-bin slice counts behind the PSI
     * drift readout — the streaming face of `AnalyticsOps.psiDrift`,
-    * with the same batch-id fence as the sketch maintainers. State is
-    * the additive (bin, c_ref, c_cur) relation — O(#bins) forever;
-    * the smoothing, log grid, and total all apply ON READ via
-    * [[psiStateRelease]] through the SAME `psiFromBinCounts` step the
-    * batch surface uses, so a release after N micro-batches is
-    * bit-identical to the batch PSI over the concatenated stream. */
+    * behind [[foldState]]'s fence like the sketch maintainers. State
+    * is the additive (bin STRING, c_ref LONG, c_cur LONG) relation —
+    * O(#bins) live; the smoothing, log grid, and total all apply ON
+    * READ via [[psiStateRelease]] through the SAME `psiFromBinCounts`
+    * step the batch surface uses, so a release after N micro-batches
+    * is bit-identical to the batch PSI over the concatenated
+    * stream. */
   def maintainPsiState(statePath: String, binCol: String,
-      isRefCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    // (bin STRING, c_ref LONG, c_cur LONG, _batch_id)
-    val state = s.read.parquet(statePath)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
+      isRefCol: String)(batch: DataFrame, batchId: Long): Unit =
+    foldState(batch.sparkSession, statePath, batchId) { state =>
       val partial = batch
         .select(col(binCol).cast("string").as("bin"), col(isRefCol))
         .where(col("bin").isNotNull)
         .groupBy(col("bin"))
         .agg(sum(when(col(isRefCol), 1L).otherwise(0L)).as("c_ref"),
           sum(when(col(isRefCol), 0L).otherwise(1L)).as("c_cur"))
-      val next = state.select(col("bin"), col("c_ref"), col("c_cur"))
+      state.select(col("bin"), col("c_ref"), col("c_cur"))
         .unionByName(partial)
         .groupBy(col("bin"))
         .agg(sum(col("c_ref")).cast("long").as("c_ref"),
           sum(col("c_cur")).cast("long").as("c_cur"))
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
     }
-  }
 
   /** The read side of [[maintainPsiState]]: the PSI readout over the
     * maintained bin counts, through the SAME `psiFromBinCounts` step
@@ -647,7 +584,7 @@ object StreamingOps {
     * psi_total). */
   def psiStateRelease(spark: SparkSession, statePath: String): DataFrame =
     graft.operators.AnalyticsOps.psiFromBinCounts(
-      spark.read.parquet(statePath)
+      readState(spark, statePath)
         .select(col("bin"), col("c_ref"), col("c_cur")))
 
   /** Exactly-once upkeep of the daily two-arm sufficient statistics
@@ -655,38 +592,27 @@ object StreamingOps {
     * `AnalyticsOps.msprtSequential`, and the op's NATIVE habitat: the
     * whole point of an always-valid p-value is that someone reads it
     * continuously while data arrives. State is the additive
-    * (grp, day, da, dxa, db, dxb) daily relation — O(groups × days)
-    * forever, never the event stream; the cumulative scan, mixture
-    * ratio, and running max all apply ON READ via
+    * (grp STRING, day DATE, da, dxa, db, dxb LONG) daily relation —
+    * O(groups × days) live, never the event stream; the cumulative
+    * scan, mixture ratio, and running max all apply ON READ via
     * [[msprtStateRelease]] through the SAME `msprtFromDaily` step the
     * batch surface uses, so a release after N micro-batches is
     * bit-identical to the batch readout over the concatenated
-    * stream. Batch-id fence: a replayed micro-batch is a no-op. */
+    * stream. [[foldState]]'s fence: a replayed micro-batch is a
+    * no-op. */
   def maintainMsprtState(statePath: String, groupCol: String,
       tsCol: String, armCol: String, successCol: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    // (grp STRING, day DATE, da, dxa, db, dxb LONG, _batch_id)
-    val state = s.read.parquet(statePath)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
-      val partial = graft.operators.AnalyticsOps
-        .msprtDaily(batch, groupCol, tsCol, armCol, successCol)
-      val next = state
-        .select(col("grp"), col("day"), col("da"), col("dxa"),
+      batch: DataFrame, batchId: Long): Unit =
+    foldState(batch.sparkSession, statePath, batchId)(
+      _.select(col("grp"), col("day"), col("da"), col("dxa"),
           col("db"), col("dxb"))
-        .unionByName(partial)
+        .unionByName(graft.operators.AnalyticsOps
+          .msprtDaily(batch, groupCol, tsCol, armCol, successCol))
         .groupBy(col("grp"), col("day"))
         .agg(sum(col("da")).cast("long").as("da"),
           sum(col("dxa")).cast("long").as("dxa"),
           sum(col("db")).cast("long").as("db"),
-          sum(col("dxb")).cast("long").as("dxb"))
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
-    }
-  }
+          sum(col("dxb")).cast("long").as("dxb")))
 
   /** The read side of [[maintainMsprtState]]: the always-valid
     * sequential readout over the maintained daily relation, through
@@ -695,7 +621,7 @@ object StreamingOps {
   def msprtStateRelease(spark: SparkSession, statePath: String,
       tauSqNum: Long = 1L, tauSqDen: Long = 100L): DataFrame =
     graft.operators.AnalyticsOps.msprtFromDaily(
-      spark.read.parquet(statePath)
+      readState(spark, statePath)
         .select(col("grp"), col("day"), col("da"), col("dxa"),
           col("db"), col("dxb")),
       tauSqNum, tauSqDen)
@@ -704,30 +630,21 @@ object StreamingOps {
     * sample-ratio-mismatch guardrail — the assignment sanity check
     * experimentation platforms run CONTINUOUSLY as exposures stream
     * in, because an SRM caught on day one saves the experiment.
-    * State is the additive (grp, n_a, n_b) relation — O(groups)
-    * forever; the χ² clears on read via [[srmStateRelease]] through
-    * the SAME `srmFromCounts` step as the batch surface. */
+    * State is the additive (grp STRING, n_a LONG, n_b LONG) relation
+    * — O(groups) live; the χ² clears on read via [[srmStateRelease]]
+    * through the SAME `srmFromCounts` step as the batch surface. */
   def maintainSrmState(statePath: String, groupCol: String,
-      armCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    // (grp STRING, n_a LONG, n_b LONG, _batch_id)
-    val state = s.read.parquet(statePath)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
+      armCol: String)(batch: DataFrame, batchId: Long): Unit =
+    foldState(batch.sparkSession, statePath, batchId) { state =>
       val partial = batch.groupBy(col(groupCol).as("grp"))
         .agg(sum(when(col(armCol) === 0, 1L).otherwise(0L)).as("n_a"),
           sum(when(col(armCol) === 0, 0L).otherwise(1L)).as("n_b"))
-      val next = state.select(col("grp"), col("n_a"), col("n_b"))
+      state.select(col("grp"), col("n_a"), col("n_b"))
         .unionByName(partial)
         .groupBy(col("grp"))
         .agg(sum(col("n_a")).cast("long").as("n_a"),
           sum(col("n_b")).cast("long").as("n_b"))
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
     }
-  }
 
   /** The read side of [[maintainSrmState]]: the χ² guardrail over the
     * maintained arm counts, through the SAME `srmFromCounts` step as
@@ -736,7 +653,7 @@ object StreamingOps {
   def srmStateRelease(spark: SparkSession, statePath: String,
       ratioA: Long = 1L, ratioB: Long = 1L): DataFrame =
     graft.operators.AnalyticsOps.srmFromCounts(
-      spark.read.parquet(statePath)
+      readState(spark, statePath)
         .select(col("grp"), col("n_a"), col("n_b")),
       ratioA, ratioB)
 
@@ -757,19 +674,16 @@ object StreamingOps {
     * the exact seen-set would grow with the stream forever (the
     * standard trade: a false positive DROPS a genuinely-new row with
     * probability ≈ fill⁴, never emits a duplicate; size [bits] to the
-    * expected key volume). State is ONE row — (bloom_hex, n_keys,
-    * _batch_id) — whatever the stream's length; the filter k = 4
+    * expected key volume). Live state is ONE row — (bloom_hex STRING,
+    * n_keys LONG) — whatever the stream's length; the filter k = 4
     * positions use the same md5-slice recipe as the LogStore segment
     * blooms, computed by a codegen'd expression per row (no UDF).
-    * Batch-id fenced like every maintainer here. */
+    * Fenced by [[foldState]] like every maintainer here. */
   def maintainBloomDedupState(statePath: String, keyCol: String,
       bits: Int = 4096)(batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    val state = s.read.parquet(statePath)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
+    import s.implicits._
+    foldState(s, statePath, batchId) { state =>
       val prior = state.select(col("bloom_hex"), col("n_keys"))
         .collect().headOption
       val hex = prior.map(_.getString(0)).getOrElse("0" * (bits / 4))
@@ -796,11 +710,7 @@ object StreamingOps {
           (if (nib(1)) 2 else 0) | (if (nib(2)) 4 else 0) |
           (if (nib(3)) 8 else 0))
       }.mkString
-      import s.implicits._
-      graft.operators.MergeOps.replaceTable(s,
-        Seq((outHex, nKeys + newKeys, batchId))
-          .toDF("bloom_hex", "n_keys", "_batch_id"),
-        statePath)
+      Seq((outHex, nKeys + newKeys)).toDF("bloom_hex", "n_keys")
     }
   }
 
@@ -812,7 +722,7 @@ object StreamingOps {
   def bloomDedupNew(spark: SparkSession, statePath: String,
       batch: DataFrame, keyCol: String, bits: Int = 4096): DataFrame =
     bloomNewRows(batch,
-      keyCol, spark.read.parquet(statePath)
+      keyCol, readState(spark, statePath)
         .select(col("bloom_hex")).head.getString(0), bits)
 
   private def bloomNewRows(batch: DataFrame, keyCol: String,
@@ -851,9 +761,9 @@ object StreamingOps {
           successCol) _)
       .start()
 
-  /** Exactly-once KLL upkeep, same batch-id fencing as Count-Min: the
-    * state table is the sketch's long form (level, v) plus the fence —
-    * weight (and hence count) is reconstructible as Σ 2^level, so no
+  /** Exactly-once KLL upkeep behind [[foldState]]'s fence: the state
+    * table is the sketch's long form (level INT, v DOUBLE) — weight
+    * (and hence count) is reconstructible as Σ 2^level, so no
     * separate count row. Per batch: aggregate the batch into a partial
     * sketch (distributed), merge it with the prior state driver-side
     * (two O(cap·log n) objects — bounded whatever the stream length),
@@ -863,11 +773,7 @@ object StreamingOps {
     val s = batch.sparkSession
     import s.implicits._
     import graft.operators.{Kll, KllState, KllStateAggregator}
-    val state = s.read.parquet(statePath) // (level INT, v DOUBLE, _batch_id)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
+    foldState(s, statePath, batchId) { state =>
       // nulls (null input or uncastable value) must not reach the
       // primitive-Double typed aggregation: a single null row would
       // throw, and foreachBatch replays re-hit it — a poison pill that
@@ -892,12 +798,9 @@ object StreamingOps {
             levels)
         }
       val next = Kll.merge(capacity)(prior, partial)
-      val rows = next.levels.zipWithIndex.flatMap { case (xs, l) =>
+      next.levels.zipWithIndex.flatMap { case (xs, l) =>
         xs.map(v => (l, v))
-      }
-      graft.operators.MergeOps.replaceTable(s,
-        rows.toDF("level", "v").withColumn("_batch_id", lit(batchId)),
-        statePath)
+      }.toDF("level", "v")
     }
   }
 
@@ -925,36 +828,30 @@ object StreamingOps {
       .foreachBatch(maintainCountMinState(statePath, keyCol, d, w) _)
       .start()
 
-  /** Exactly-once KMV/theta upkeep, same batch-id fencing as the other
-    * sketches: the state table is the sketch's long form — one row per
-    * kept hash (g, h) plus the fence. Per batch the new hashes union
-    * with the prior kept set and ONE distributed typed aggregation
-    * re-truncates to the k smallest per group (KMV merge ≡ reduce over
-    * the union — associativity is what makes the incremental state
-    * exactly equal to a from-scratch [[graft.operators.Sketches.kmvDistinct]]
-    * over the full history, which the spec asserts bit-for-bit).
-    * Replays of an applied batch are no-ops. State is O(k·|groups|)
+  /** Exactly-once KMV/theta upkeep behind [[foldState]]'s fence: the
+    * state table is the sketch's long form — one row per kept hash
+    * (g STRING, h LONG). Per batch the new hashes union with the
+    * prior kept set and ONE distributed typed aggregation re-truncates
+    * to the k smallest per group (KMV merge ≡ reduce over the union —
+    * associativity is what makes the incremental state exactly equal
+    * to a from-scratch [[graft.operators.Sketches.kmvDistinct]] over
+    * the full history, which the spec asserts bit-for-bit). Replays
+    * of an applied batch are no-ops. Live state is O(k·|groups|)
     * regardless of stream age. */
   def maintainKmvState(statePath: String, groupCol: String,
       valueCol: String, k: Int = 64)(batch: DataFrame,
       batchId: Long): Unit = {
     val s = batch.sparkSession
     import s.implicits._
-    val state = s.read.parquet(statePath) // (g, h, _batch_id)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
+    foldState(s, statePath, batchId) { state =>
       val batchHashes = batch.where(col(valueCol).isNotNull)
         .select(col(groupCol).cast("string").as("g"),
           graft.operators.Sketches.kmvHash(col(valueCol)).as("h"))
-      val next = state.select(col("g"), col("h")).union(batchHashes)
+      state.select(col("g"), col("h")).union(batchHashes)
         .as[(String, Long)].groupByKey(_._1).mapValues(_._2)
         .agg(new graft.operators.KmvAggregator(k).toColumn.name("sk"))
         .toDF("g", "sk")
         .select(col("g"), explode(col("sk")).as("h"))
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
     }
   }
 
@@ -964,7 +861,7 @@ object StreamingOps {
   def kmvStateEstimates(spark: SparkSession, statePath: String,
       k: Int = 64): DataFrame = {
     val space = 1152921504606846976L // 2^60, the kmvHash space
-    spark.read.parquet(statePath)
+    readState(spark, statePath)
       .groupBy(col("g"))
       .agg(count(lit(1)).as("n_kept"), max(col("h")).as("mx"))
       .select(col("g"), col("n_kept"),
@@ -976,8 +873,8 @@ object StreamingOps {
             col("theta").cast("double")).as("est_distinct"))
   }
 
-  /** Exactly-once Poisson-bootstrap upkeep, same batch-id fencing as
-    * the sketches: the state table is the
+  /** Exactly-once Poisson-bootstrap upkeep behind [[foldState]]'s
+    * fence: the state table is the
     * [[graft.operators.AnalyticsOps.bootstrapMoments]] relation —
     * (group, replicate b, Σw, Σw·v) in exact scaled longs plus the
     * point row at b = −1 — which is elementwise-ADDITIVE (merge is
@@ -987,26 +884,17 @@ object StreamingOps {
     * `bootstrapMeanCi` exactly. The per-row Poisson coins hash only
     * the row's OWN id, so a row's weights are the same whether it
     * arrives in batch 0 or batch 9 — the property that makes the
-    * resample well-defined under streaming arrival at all. State is
-    * O((B+1)·|groups|) regardless of stream age; replays are no-ops. */
+    * resample well-defined under streaming arrival at all. Live state
+    * is O((B+1)·|groups|) regardless of stream age; replays are
+    * no-ops. */
   def maintainBootstrapState(statePath: String, typeCol: String,
       idCol: String, valueCol: String, b: Int = 100)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val state = s.read.parquet(statePath) // (<typeCol>, b, nw, swl, _batch_id)
-    val lastApplied = state
-      .agg(coalesce(max(col("_batch_id")), lit(Long.MinValue)))
-      .head.getLong(0)
-    if (lastApplied < batchId) {
-      val partial = graft.operators.AnalyticsOps.bootstrapMoments(
-        batch, typeCol, idCol, valueCol, b)
-      val next = state.drop("_batch_id").unionByName(partial)
+      batch: DataFrame, batchId: Long): Unit =
+    foldState(batch.sparkSession, statePath, batchId)(
+      _.unionByName(graft.operators.AnalyticsOps.bootstrapMoments(
+          batch, typeCol, idCol, valueCol, b))
         .groupBy(col(typeCol), col("b"))
-        .agg(sum(col("nw")).as("nw"), sum(col("swl")).as("swl"))
-        .withColumn("_batch_id", lit(batchId))
-      graft.operators.MergeOps.replaceTable(s, next, statePath)
-    }
-  }
+        .agg(sum(col("nw")).as("nw"), sum(col("swl")).as("swl")))
 
   /** CI readout from a maintained bootstrap-moment state table — the
     * read side of [[maintainBootstrapState]]; delegates to the same
@@ -1015,7 +903,7 @@ object StreamingOps {
   def bootstrapStateCi(spark: SparkSession, statePath: String,
       typeCol: String, b: Int = 100): DataFrame =
     graft.operators.AnalyticsOps.bootstrapCiFromMoments(
-      spark.read.parquet(statePath).drop("_batch_id"), typeCol, b)
+      readState(spark, statePath), typeCol, b)
 
   /** Streaming bootstrap upkeep: a file stream of raw rows keeps the
     * per-(group, replicate) moment table current; CI readouts touch

@@ -238,11 +238,11 @@ class LogStoreSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("grp"), col("cnt"), col("sm").cast("double"))
         .as[(String, Long, Double)].collect().toSet
-    def stateRows() = rows(spark.read.parquet(statePath))
+    def stateRows() = rows(new LogStore(spark, statePath).read())
 
-    // cold start: an EMPTY aggregate stamped -1 — the feed builds it
-    agg(Seq.empty[(Long, String, Double)].toDF("id", "grp", "v"))
-      .withColumn("_synced_version", lit(-1L)).write.parquet(statePath)
+    // cold start: an EMPTY aggregate with no fence — the feed builds it
+    new LogStore(spark, statePath)
+      .append(agg(Seq.empty[(Long, String, Double)].toDF("id", "grp", "v")))
 
     t.append(Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "grp", "v"))
     assert(StreamingOps.syncSumCountFromLog(spark, t, statePath,
@@ -851,12 +851,12 @@ class LogStoreSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("grp"), col("cnt"), col("sm").cast("double"))
         .as[(String, Long, Double)].collect().toSet
-    def stateRows() = rows(spark.read.parquet(statePath))
+    def stateRows() = rows(new LogStore(spark, statePath).read())
     def sync() = StreamingOps.syncSumCountFromLog(spark, t, statePath,
       "id", "grp", "v")
 
-    agg(Seq.empty[(Long, String, Double)].toDF("id", "grp", "v"))
-      .withColumn("_synced_version", lit(-1L)).write.parquet(statePath)
+    new LogStore(spark, statePath)
+      .append(agg(Seq.empty[(Long, String, Double)].toDF("id", "grp", "v")))
     t.append(Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0))
       .toDF("id", "grp", "v"))                 // v0
     t.deleteWhere("grp = 'a'")                 // v1

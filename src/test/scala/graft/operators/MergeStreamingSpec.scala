@@ -26,21 +26,6 @@ class MergeStreamingSpec extends AnyFunSuite {
       ("c", 3, "failed")))
   }
 
-  test("S5 replaceTable: atomic swap rewrites the table in place") {
-    val path = Files.createTempDirectory("graft-merge").toString + "/t"
-    val v1 = Seq(("a", 1)).toDF("k", "v")
-    MergeOps.replaceTable(spark, v1, path)
-    assert(spark.read.parquet(path).count() == 1)
-    val v2 = Seq(("a", 2), ("b", 3)).toDF("k", "v")
-    MergeOps.replaceTable(spark, v2, path)
-    val out = spark.read.parquet(path).as[(String, Int)].collect().toSet
-    assert(out == Set(("a", 2), ("b", 3)))
-    // swap protocol leaves no tmp/bak residue behind on success
-    val parent = new java.io.File(path).getParentFile
-    assert(parent.listFiles().map(_.getName).toSeq == Seq("t"),
-      "no .tmp-/.bak- directories may survive a successful swap")
-  }
-
   test("streaming: watermarked tumbling agg matches the batch twin") {
     val dir = Files.createTempDirectory("graft-stream").toString + "/events"
     val events = Seq(

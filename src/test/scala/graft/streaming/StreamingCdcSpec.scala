@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.catalog.LogStore
 import graft.operators.RelationalOps
 
 class StreamingCdcSpec extends AnyFunSuite {
@@ -18,8 +19,17 @@ class StreamingCdcSpec extends AnyFunSuite {
     df.groupBy(col("grp")).agg(count(lit(1)).as("cnt"),
       sum(col("v").cast(DecimalType(18, 4))).as("sm"))
 
+  /** A maintainer's state table is a LogStore table: the caller seeds
+    * it with one plain append (no fence yet). */
+  private def seed(path: String, df: DataFrame): Unit = {
+    new LogStore(spark, path).append(df); ()
+  }
+
+  private def state(path: String): DataFrame =
+    new LogStore(spark, path).read()
+
   private def stateOf(path: String): Set[(String, Long, Double)] =
-    spark.read.parquet(path).drop("_batch_id")
+    state(path)
       .select(col("grp"), col("cnt"), col("sm").cast("double"))
       .as[(String, Long, Double)].collect().toSet
 
@@ -39,9 +49,8 @@ class StreamingCdcSpec extends AnyFunSuite {
     def diff(a: DataFrame, b: DataFrame) = RelationalOps
       .snapshotDiff(a, b, keys = Seq("id"), compare = Seq("grp", "v"))
 
-    // seed: the aggregate of the initial snapshot, stamped pre-stream
-    agg(s0).withColumn("_batch_id", lit(-1L))
-      .write.parquet(statePath)
+    // seed: the aggregate of the initial snapshot, no fence yet
+    seed(statePath, agg(s0))
 
     val diffSchema = diff(s0, s1).schema
     diff(s0, s1).write.parquet(srcDir)
@@ -61,11 +70,58 @@ class StreamingCdcSpec extends AnyFunSuite {
     } finally q.stop()
 
     // at-least-once replay: re-delivering an old batch must not
-    // double-apply (the state stamp fences it)
+    // double-apply (the state table's txn fence stops it)
     StreamingOps.maintainAggState(statePath, "grp", "v")(diff(s0, s1), 0L)
     assert(stateOf(statePath) ===
       agg(s2).select(col("grp"), col("cnt"), col("sm").cast("double"))
         .as[(String, Long, Double)].collect().toSet)
+  }
+
+  test("streaming CDC apply: an EMPTY seed state takes batch 0") {
+    val statePath =
+      Files.createTempDirectory("graft-cdc-empty").toString + "/state"
+    val s0 = Seq.empty[(Long, String, Double)].toDF("id", "grp", "v")
+    val s1 = Seq((1L, "a", 1.5), (2L, "a", 2.5), (3L, "b", 4.0))
+      .toDF("id", "grp", "v")
+    seed(statePath, agg(s0))
+    StreamingOps.maintainAggState(statePath, "grp", "v")(RelationalOps
+      .snapshotDiff(s0, s1, keys = Seq("id"), compare = Seq("grp", "v")),
+      0L)
+    assert(stateOf(statePath) === Set(("a", 2L, 4.0), ("b", 1L, 4.0)))
+    assert(new LogStore(spark, statePath).lastTxn() == 0L)
+  }
+
+  test("foldState: a step that fails leaves the snapshot and the fence " +
+      "unchanged; the replay applies the batch exactly once") {
+    val statePath =
+      Files.createTempDirectory("graft-fold-crash").toString + "/state"
+    val store = new LogStore(spark, statePath)
+    def rows() = state(statePath).as[(String, Long)].collect().toSet
+    def bump(df: DataFrame) = df.withColumn("n", col("n") + 1L)
+    seed(statePath, Seq(("a", 1L), ("b", 5L)).toDF("g", "n"))
+    StreamingOps.foldState(spark, statePath, 0L)(bump)
+    val (v0, rows0) = (store.latestVersion(), rows())
+    assert(rows0 == Set(("a", 2L), ("b", 6L)) && store.lastTxn() == 0L)
+
+    // the step throws on the driver, before any write
+    intercept[IllegalStateException] {
+      StreamingOps.foldState(spark, statePath, 1L)(_ =>
+        throw new IllegalStateException("step failed"))
+    }
+    // the step's plan fails inside the write job, after it started
+    intercept[Exception] {
+      StreamingOps.foldState(spark, statePath, 1L)(_.withColumn("n",
+        when(col("g") === "b", raise_error(lit("write failed")))
+          .otherwise(col("n")).cast("long")))
+    }
+    assert(store.latestVersion() == v0, "a failed step commits nothing")
+    assert(store.lastTxn() == 0L && rows() == rows0)
+
+    // the replay of batch 1 lands once; a second replay is fenced
+    StreamingOps.foldState(spark, statePath, 1L)(bump)
+    StreamingOps.foldState(spark, statePath, 1L)(bump)
+    assert(rows() == Set(("a", 3L), ("b", 7L)))
+    assert(store.lastTxn() == 1L && store.latestVersion() == v0 + 1)
   }
 
   test("streaming Count-Min: state after N micro-batches equals the " +
@@ -83,9 +139,8 @@ class StreamingCdcSpec extends AnyFunSuite {
       Sketches.countMin(df, col("k"))
         .as[(Int, Long, Long)].collect().toSet
 
-    // seed: empty counter state stamped pre-stream
-    Sketches.countMin(b0.limit(0), col("k"))
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    // seed: empty counter state, no fence yet
+    seed(statePath, Sketches.countMin(b0.limit(0), col("k")))
 
     b0.write.parquet(srcDir)
     val q = StreamingOps.streamingCountMin(spark, srcDir,
@@ -94,16 +149,14 @@ class StreamingCdcSpec extends AnyFunSuite {
       q.processAllAvailable()
       b1.write.mode("append").parquet(srcDir)
       q.processAllAvailable()
-      val state = spark.read.parquet(statePath).drop("_batch_id")
-        .as[(Int, Long, Long)].collect().toSet
-      assert(state === counters(b0.unionByName(b1)),
+      val st = state(statePath).as[(Int, Long, Long)].collect().toSet
+      assert(st === counters(b0.unionByName(b1)),
         "merged stream state must equal the batch sketch of all rows")
     } finally q.stop()
 
-    // replayed micro-batch is a no-op under the batch-id fence
+    // replayed micro-batch is a no-op under the txn fence
     StreamingOps.maintainCountMinState(statePath, "k")(b0, 0L)
-    val after = spark.read.parquet(statePath).drop("_batch_id")
-      .as[(Int, Long, Long)].collect().toSet
+    val after = state(statePath).as[(Int, Long, Long)].collect().toSet
     assert(after === counters(b0.unionByName(b1)))
   }
 
@@ -121,9 +174,8 @@ class StreamingCdcSpec extends AnyFunSuite {
       AnalyticsOps.dpNoisyCounts(df, "g", salt = "spec")
         .as[(String, Long, Long, Long)].collect().toSet
 
-    // seed: empty count state stamped pre-stream
-    Seq.empty[(String, Long)].toDF("g", "n")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    // seed: empty count state, no fence yet
+    seed(statePath, Seq.empty[(String, Long)].toDF("g", "n"))
 
     b0.write.parquet(srcDir)
     val q = StreamingOps.streamingDpCounts(spark, srcDir,
@@ -140,7 +192,7 @@ class StreamingCdcSpec extends AnyFunSuite {
           "of all rows — same noise, same floor, same columns")
     } finally q.stop()
 
-    // replayed micro-batch is a no-op under the batch-id fence: the
+    // replayed micro-batch is a no-op under the txn fence: the
     // true counts (and hence the released values) must not move
     StreamingOps.maintainDpCountState(statePath, "g")(b0, 0L)
     val after = StreamingOps
@@ -167,8 +219,8 @@ class StreamingCdcSpec extends AnyFunSuite {
       AnalyticsOps.psiDrift(df, "bin", "is_ref")
         .as[(String, Long, Long, Double, Double, Double)].collect().toSet
 
-    Seq.empty[(String, Long, Long)].toDF("bin", "c_ref", "c_cur")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    seed(statePath,
+      Seq.empty[(String, Long, Long)].toDF("bin", "c_ref", "c_cur"))
 
     StreamingOps.maintainPsiState(statePath, "bin", "is_ref")(b0, 0L)
     StreamingOps.maintainPsiState(statePath, "bin", "is_ref")(b1, 1L)
@@ -178,7 +230,7 @@ class StreamingCdcSpec extends AnyFunSuite {
       "PSI over maintained bin counts must equal the batch PSI of " +
         "all rows — same smoothing, same log grid, same total")
 
-    // replayed micro-batch is a no-op under the batch-id fence
+    // replayed micro-batch is a no-op under the txn fence
     StreamingOps.maintainPsiState(statePath, "bin", "is_ref")(b0, 1L)
     val after = StreamingOps.psiStateRelease(spark, statePath)
       .as[(String, Long, Long, Double, Double, Double)].collect().toSet
@@ -196,12 +248,12 @@ class StreamingCdcSpec extends AnyFunSuite {
       .toDF("bin", "is_ref")
     val b1 = (Seq.fill(5)(("b", true)) ++ Seq.fill(20)(("c", false)) ++
       Seq.fill(7)(("a", false))).toDF("bin", "is_ref")
-    Seq.empty[(String, Long, Long)].toDF("bin", "c_ref", "c_cur")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    seed(statePath,
+      Seq.empty[(String, Long, Long)].toDF("bin", "c_ref", "c_cur"))
     StreamingOps.maintainPsiState(statePath, "bin", "is_ref")(b0, 0L)
     StreamingOps.maintainPsiState(statePath, "bin", "is_ref")(b1, 1L)
     val released = AnalyticsOps.jsdFromBinCounts(
-        spark.read.parquet(statePath)
+        state(statePath)
           .select(col("bin"), col("c_ref"), col("c_cur")))
       .as[(String, Long, Long, Double, Double, Double, Double)]
       .collect().toSet
@@ -239,9 +291,9 @@ class StreamingCdcSpec extends AnyFunSuite {
       AnalyticsOps.msprtSequential(df, "grp", "ts", "arm", "succ")
         .as[(String, java.sql.Date, Long, Long, Long, Long, Double, Double, Boolean)].collect().toSet
 
-    Seq.empty[(String, java.sql.Date, Long, Long, Long, Long)]
-      .toDF("grp", "day", "da", "dxa", "db", "dxb")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    seed(statePath,
+      Seq.empty[(String, java.sql.Date, Long, Long, Long, Long)]
+        .toDF("grp", "day", "da", "dxa", "db", "dxb"))
 
     StreamingOps.maintainMsprtState(statePath, "grp", "ts", "arm",
       "succ")(b0, 0L)
@@ -255,7 +307,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     // the split day merged into ONE daily row, not two
     assert(released.size === 3)
 
-    // replayed micro-batch is a no-op under the batch-id fence
+    // replayed micro-batch is a no-op under the txn fence
     StreamingOps.maintainMsprtState(statePath, "grp", "ts", "arm",
       "succ")(b1, 1L)
     val after = StreamingOps.msprtStateRelease(spark, statePath)
@@ -268,8 +320,7 @@ class StreamingCdcSpec extends AnyFunSuite {
       "keys, replay is fenced") {
     val base = Files.createTempDirectory("graft-bloomdedup").toString
     val statePath = s"$base/state"
-    Seq.empty[(String, Long, Long)]
-      .toDF("bloom_hex", "n_keys", "_batch_id").write.parquet(statePath)
+    seed(statePath, Seq.empty[(String, Long)].toDF("bloom_hex", "n_keys"))
 
     def keys(r: Range) = r.map(i => s"key-$i.example").toDF("k")
     StreamingOps.maintainBloomDedupState(statePath, "k")(keys(0 to 9), 0L)
@@ -280,16 +331,15 @@ class StreamingCdcSpec extends AnyFunSuite {
     assert(survivors == (10 to 14).map(i => s"key-$i.example").toSet,
       s"seen keys must be claimed, new ones pass: $survivors")
     StreamingOps.maintainBloomDedupState(statePath, "k")(keys(5 to 14), 1L)
-    val st = spark.read.parquet(statePath)
-      .select("n_keys", "_batch_id").as[(Long, Long)].head()
+    val st = (state(statePath).select("n_keys").as[Long].head(),
+      new LogStore(spark, statePath).lastTxn())
     assert(st == ((15L, 1L)), s"10 + 5 distinct new keys: $st")
     // everything already ingested is claimed now
     assert(StreamingOps.bloomDedupNew(spark, statePath,
       keys(0 to 14), "k").count() == 0L)
-    // replayed micro-batch is a no-op under the batch-id fence
+    // replayed micro-batch is a no-op under the txn fence
     StreamingOps.maintainBloomDedupState(statePath, "k")(keys(0 to 9), 0L)
-    assert(spark.read.parquet(statePath).select("n_keys")
-      .as[Long].head() == 15L)
+    assert(state(statePath).select("n_keys").as[Long].head() == 15L)
   }
 
   test("streamingMsprtMonitor: a REAL file stream feeds the daily " +
@@ -306,9 +356,9 @@ class StreamingCdcSpec extends AnyFunSuite {
       ("exp", ts(2), i % 2, if (i % 8 < 5) 1 else 0))
       .toDF("grp", "ts", "arm", "succ")
 
-    Seq.empty[(String, java.sql.Date, Long, Long, Long, Long)]
-      .toDF("grp", "day", "da", "dxa", "db", "dxb")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    seed(statePath,
+      Seq.empty[(String, java.sql.Date, Long, Long, Long, Long)]
+        .toDF("grp", "day", "da", "dxa", "db", "dxb"))
 
     b0.write.parquet(srcDir)
     val q = StreamingOps.streamingMsprtMonitor(spark, srcDir,
@@ -350,8 +400,8 @@ class StreamingCdcSpec extends AnyFunSuite {
       AnalyticsOps.srmCheck(df, "grp", "arm")
         .as[(String, Long, Long, Double, Boolean)].collect().toSet
 
-    Seq.empty[(String, Long, Long)].toDF("grp", "n_a", "n_b")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    seed(statePath,
+      Seq.empty[(String, Long, Long)].toDF("grp", "n_a", "n_b"))
 
     StreamingOps.maintainSrmState(statePath, "grp", "arm")(b0, 0L)
     StreamingOps.maintainSrmState(statePath, "grp", "arm")(b1, 1L)
@@ -365,7 +415,7 @@ class StreamingCdcSpec extends AnyFunSuite {
     assert(byGrp("broken")._4 == 6.4 && byGrp("broken")._5)
     assert(byGrp("ok")._4 == 0.0 && !byGrp("ok")._5)
 
-    // replayed micro-batch is a no-op under the batch-id fence
+    // replayed micro-batch is a no-op under the txn fence
     StreamingOps.maintainSrmState(statePath, "grp", "arm")(b1, 1L)
     val after = StreamingOps.srmStateRelease(spark, statePath)
       .as[(String, Long, Long, Double, Boolean)].collect().toSet
@@ -389,8 +439,8 @@ class StreamingCdcSpec extends AnyFunSuite {
           col("noisy_n"), col("noisy_units"), col("released_mean"))
         .collect().toSet
 
-    Seq.empty[(String, Long, Long)].toDF("g", "n", "clipped_units")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    seed(statePath,
+      Seq.empty[(String, Long, Long)].toDF("g", "n", "clipped_units"))
     StreamingOps.maintainDpMeanState(statePath, "g", "v", clip = 10.0)(
       b0, 0L)
     StreamingOps.maintainDpMeanState(statePath, "g", "v", clip = 10.0)(
@@ -420,12 +470,11 @@ class StreamingCdcSpec extends AnyFunSuite {
       .toDF("x")
     val b1 = (Seq.fill(30)(2L) ++ Seq.fill(25)(1L) ++ (200L to 214L))
       .toDF("x")
-    Seq.empty[(Long, Long)].toDF("item", "cnt")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    seed(statePath, Seq.empty[(Long, Long)].toDF("item", "cnt"))
     StreamingOps.maintainMisraGriesState(statePath, "x", k)(b0, 0L)
     StreamingOps.maintainMisraGriesState(statePath, "x", k)(b1, 1L)
 
-    def sketch() = spark.read.parquet(statePath)
+    def sketch() = state(statePath)
       .select(col("item"), col("cnt")).as[(Long, Long)].collect().toMap
     val sk = sketch()
     val n = 40 + 20 + 10 + 30 + 25 + 15 // 140 total items
@@ -465,9 +514,8 @@ class StreamingCdcSpec extends AnyFunSuite {
         .agg(hll_sketch_estimate(hll_sketch_agg(col("u"))).as("approx"))
         .as[(String, Long)].collect().toSet
 
-    // seed: empty state stamped pre-stream
-    Seq.empty[(String, Array[Byte])].toDF("g", "sk")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    // seed: empty state, no fence yet
+    seed(statePath, Seq.empty[(String, Array[Byte])].toDF("g", "sk"))
 
     b0.write.parquet(srcDir)
     val q = StreamingOps.streamingHll(spark, srcDir, b0.schema,
@@ -482,7 +530,7 @@ class StreamingCdcSpec extends AnyFunSuite {
         "merged stream estimates must equal the batch sketch of all rows")
     } finally q.stop()
 
-    // replayed micro-batch is a no-op under the batch-id fence
+    // replayed micro-batch is a no-op under the txn fence
     StreamingOps.maintainHllState(statePath, "g", "u")(b0, 0L)
     val after = StreamingOps.hllStateEstimates(spark, statePath)
       .as[(String, Long)].collect().toSet
@@ -517,13 +565,12 @@ class StreamingCdcSpec extends AnyFunSuite {
         .as[(String, Long)].collect().toSet
     }
 
-    Seq.empty[(String, Array[Byte])].toDF("g", "sk")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    seed(statePath, Seq.empty[(String, Array[Byte])].toDF("g", "sk"))
     StreamingOps.maintainHllState(statePath, "g", "u")(b0, 0L)
     StreamingOps.maintainHllState(statePath, "g", "u")(b1, 1L)
 
     val fromState = sliding(
-      spark.read.parquet(statePath).select(col("g"), col("sk")))
+      state(statePath).select(col("g"), col("sk")))
     val fromBatch = sliding(all.groupBy(col("g"))
       .agg(hll_sketch_agg(col("u")).as("sk")))
     // HLL registers are max-merged, so batch-split vs one-shot
@@ -554,12 +601,11 @@ class StreamingCdcSpec extends AnyFunSuite {
     val b0 = v0.toDF("v")
     val b1 = v1.toDF("v")
 
-    // seed: empty state stamped pre-stream
-    Seq.empty[(Int, Double)].toDF("level", "v")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    // seed: empty state, no fence yet
+    seed(statePath, Seq.empty[(Int, Double)].toDF("level", "v"))
 
     def stateOf(): KllState = {
-      val rows = spark.read.parquet(statePath)
+      val rows = state(statePath)
         .select(col("level"), col("v")).as[(Int, Double)].collect()
       if (rows.isEmpty) Kll.zero
       else {
@@ -592,7 +638,7 @@ class StreamingCdcSpec extends AnyFunSuite {
       assert(err <= bound, s"q=$qq rank error $err > $bound")
     }
 
-    // replayed micro-batch is a no-op under the batch-id fence
+    // replayed micro-batch is a no-op under the txn fence
     val before = stateOf()
     StreamingOps.maintainKllState(statePath, "v", cap)(b0, 0L)
     assert(stateOf() == before)
@@ -603,15 +649,14 @@ class StreamingCdcSpec extends AnyFunSuite {
     import graft.operators.{Kll, KllState}
     val base = Files.createTempDirectory("graft-kll-null").toString
     val statePath = s"$base/state"
-    Seq.empty[(Int, Double)].toDF("level", "v")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    seed(statePath, Seq.empty[(Int, Double)].toDF("level", "v"))
     // null and uncastable rows used to throw inside the typed
     // aggregation — and foreachBatch replays re-hit the same rows, so
     // the failure was permanent. They must simply be dropped.
     val batch = (Seq("1.0", "2.0", "3.0") ++ Seq(null, "oops"))
       .toDF("v")
     StreamingOps.maintainKllState(statePath, "v", capacity = 16)(batch, 0L)
-    val rows = spark.read.parquet(statePath)
+    val rows = state(statePath)
       .select(col("level"), col("v")).as[(Int, Double)].collect()
     assert(rows.map(_._2).sorted.toSeq === Seq(1.0, 2.0, 3.0))
   }
@@ -654,9 +699,8 @@ class StreamingCdcSpec extends AnyFunSuite {
           col("est_distinct"))
         .as[(String, Long, Long, Double)].collect().toSet
 
-    // seed: empty long-form state stamped pre-stream
-    Seq.empty[(String, Long)].toDF("g", "h")
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    // seed: empty long-form state, no fence yet
+    seed(statePath, Seq.empty[(String, Long)].toDF("g", "h"))
 
     b0.write.parquet(srcDir)
     val q = StreamingOps.streamingKmv(spark, srcDir, b0.schema,
@@ -675,7 +719,7 @@ class StreamingCdcSpec extends AnyFunSuite {
         g == "b" && n == 8L && est == 8.0 })
     } finally q.stop()
 
-    // replayed micro-batch is a no-op under the batch-id fence
+    // replayed micro-batch is a no-op under the txn fence
     StreamingOps.maintainKmvState(statePath, "g", "u", k)(b0, 0L)
     val after = StreamingOps.kmvStateEstimates(spark, statePath, k)
       .as[(String, Long, Long, Double)].collect().toSet
@@ -703,9 +747,9 @@ class StreamingCdcSpec extends AnyFunSuite {
       AnalyticsOps.bootstrapMeanCi(df, b = bCount)
         .as[(String, Long, Double, Double, Double)].collect().toSet
 
-    // seed: empty moment state stamped pre-stream
-    AnalyticsOps.bootstrapMoments(b0.limit(0), b = bCount)
-      .withColumn("_batch_id", lit(-1L)).write.parquet(statePath)
+    // seed: empty moment state, no fence yet
+    seed(statePath,
+      AnalyticsOps.bootstrapMoments(b0.limit(0), b = bCount))
 
     b0.write.parquet(srcDir)
     val q = StreamingOps.streamingBootstrap(spark, srcDir, b0.schema,
@@ -722,7 +766,7 @@ class StreamingCdcSpec extends AnyFunSuite {
           "EXACTLY equal the batch CI of all rows")
     } finally q.stop()
 
-    // replayed micro-batch is a no-op under the batch-id fence
+    // replayed micro-batch is a no-op under the txn fence
     StreamingOps.maintainBootstrapState(statePath, "event_type",
       "event_id", "value", bCount)(b0, 0L)
     val after = StreamingOps

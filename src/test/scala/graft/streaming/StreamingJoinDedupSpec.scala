@@ -93,22 +93,17 @@ class StreamingJoinDedupSpec extends AnyFunSuite {
   }
 
   test("idempotent batch append: replayed batchId writes exactly once") {
-    val store = new graft.catalog.AppendStore(spark,
+    val store = new graft.catalog.LogStore(spark,
       Files.createTempDirectory("graft-idem").toString + "/t")
-    val expected = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType)))
-    val sink = StreamingOps.idempotentBatchAppend(store, expected) _
     val b0 = Seq((1L, 7L), (2L, 7L)).toDF("event_id", "user_id")
 
-    sink(b0, 0L)
-    sink(b0, 0L) // micro-batch replay after a simulated failure
-    val withBatch = StructType(expected.fields :+
-      StructField("batch_id", LongType))
-    assert(store.readOrEmpty(withBatch)
-      .where($"batch_id" === 0L).count() == 2, "replay must be a no-op")
+    store.appendStream(b0, 0L)
+    store.appendStream(b0, 0L) // micro-batch replay after a simulated failure
+    assert(store.read().count() == 2 && store.lastTxn() == 0L,
+      "replay must be a no-op")
 
-    sink(Seq((3L, 8L)).toDF("event_id", "user_id"), 1L) // next batch lands
-    assert(store.readOrEmpty(withBatch).count() == 3)
+    store.appendStream(Seq((3L, 8L)).toDF("event_id", "user_id"), 1L)
+    assert(store.read().count() == 3) // next batch lands
   }
 
   test("streamingScd2 closed intervals equal the batch builder's") {
@@ -177,31 +172,26 @@ class StreamingJoinDedupSpec extends AnyFunSuite {
     assert(streamed.size === 24)
   }
 
-  test("streamingAppendToStore: file stream lands exactly the source rows") {
+  test("streamingLogIngest: file stream lands just the source rows") {
     val src = Files.createTempDirectory("graft-sapp").toString + "/ev"
     val ckpt = Files.createTempDirectory("graft-sapp-ck").toString
     Seq(
       (1L, ts("2024-01-15 10:00:00"), 7L, "view"),
       (2L, ts("2024-01-15 10:01:00"), 7L, "click")
     ).toDF("event_id", "ts", "user_id", "event_type").write.parquet(src)
-    val store = new graft.catalog.AppendStore(spark,
+    val store = new graft.catalog.LogStore(spark,
       Files.createTempDirectory("graft-sapp-st").toString + "/t")
 
-    val q = StreamingOps.streamingAppendToStore(spark, src, schema,
-      store, ckpt)
+    val q = StreamingOps.streamingLogIngest(spark, src, schema, store, ckpt)
     q.processAllAvailable(); q.stop()
 
-    val withBatch = StructType(schema.fields :+
-      StructField("batch_id", LongType))
-    val got = store.readOrEmpty(withBatch)
-      .select("event_id").as[Long].collect().toSet
+    val got = store.read().select("event_id").as[Long].collect().toSet
     assert(got == Set(1L, 2L))
 
     // restart on the same checkpoint: nothing re-lands
-    val q2 = StreamingOps.streamingAppendToStore(spark, src, schema,
-      store, ckpt)
+    val q2 = StreamingOps.streamingLogIngest(spark, src, schema, store, ckpt)
     q2.processAllAvailable(); q2.stop()
-    assert(store.readOrEmpty(withBatch).count() == 2,
+    assert(store.read().count() == 2,
       "checkpoint restart must not duplicate rows")
   }
 }
