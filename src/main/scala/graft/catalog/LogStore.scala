@@ -56,11 +56,8 @@ class LogStore(spark: SparkSession, val root: String,
     dvDeletes: Boolean = false,
     extraProps: Map[String, String] = Map.empty,
     checkpointShardRows: Int = 32768,
-    bloomCols: Seq[String] = Nil,
-    checkpointBucketRows: Int = 1024) {
+    bloomCols: Seq[String] = Nil) {
   require(checkpointInterval > 0, "checkpointInterval must be positive")
-  require(checkpointBucketRows > 0,
-    "checkpointBucketRows must be positive")
   require(bloomBits > 0 && bloomBits % 4 == 0,
     "bloomBits must be a positive multiple of 4 (hex-serialized)")
   // configured column NAMES ride inside quoted log values (the `xs`
@@ -749,8 +746,9 @@ class LogStore(spark: SparkSession, val root: String,
     * ~100 MB and ~1 MB per checkpoint interval. Vacuum's log trim
     * parses surviving manifests and protects carried files until no
     * manifest references them. Bucket count is a power of two sized
-    * from [checkpointBucketRows] (so it changes only at table-size
-    * doublings — a K change forces one full rewrite, amortized);
+    * from [[LogStore.CheckpointBucketRows]] (so it changes only at
+    * table-size doublings — a K change forces one full rewrite,
+    * amortized);
     * buckets are sorted by segment name internally, so a checkpoint's
     * content is a pure function of (live set, K) and validation
     * compares live SETS, not insertion order.
@@ -857,11 +855,12 @@ class LogStore(spark: SparkSession, val root: String,
       write(checkpointPath(at),
         marker ++ st.live.values.view.map(addJson) ++ small)
     } else {
-      // bucket granularity: [checkpointBucketRows] per bucket, never
-      // coarser than the shard threshold itself (spec-sized configs
-      // with tiny thresholds still get real multi-part layouts)
+      // bucket granularity: [[LogStore.CheckpointBucketRows]] per
+      // bucket, never coarser than the shard threshold itself
+      // (spec-sized configs with tiny thresholds still get real
+      // multi-part layouts)
       val bucketRows =
-        math.min(checkpointBucketRows, checkpointShardRows)
+        math.min(LogStore.CheckpointBucketRows, checkpointShardRows)
       // previous checkpoint's bucket layout, when it is v2 — both the
       // carry source and the K-stickiness anchor
       val prevLists: Option[(Long, Array[String], Array[String])] =
@@ -1987,6 +1986,26 @@ class LogStore(spark: SparkSession, val root: String,
     expected
   }
 
+  /** The optimistic-concurrency retry loop every re-deriving commit
+    * path shares: run `attempt` — which re-reads the head, re-derives
+    * and commits — again after a lost commit race, at most
+    * `maxAttempts` times in all. `canRetry` runs after each lost race
+    * and may refuse the retry (the original exception then
+    * propagates); any other failure propagates at once. */
+  private def retryCommits(maxAttempts: Int = LogStore.CommitAttempts,
+      canRetry: () => Boolean = () => true)(attempt: => Long): Long = {
+    require(maxAttempts >= 1, "need at least one attempt")
+    var n = 1
+    while (true) {
+      try return attempt
+      catch {
+        case _: ConcurrentCommitException
+            if n < maxAttempts && canRetry() => n += 1
+      }
+    }
+    -1L // unreachable
+  }
+
   /** ALTER TABLE ADD COLUMN as a METADATA-ONLY commit: the log
     * already versions the table schema (the metadata action), and
     * parquet null-fills absent columns, so adding NULLABLE columns
@@ -2002,15 +2021,12 @@ class LogStore(spark: SparkSession, val root: String,
     * and retries — adding a column commutes with data commits, and
     * racing metadata changes re-check the duplicate rule against the
     * fresh schema. */
-  def addColumns(cols: org.apache.spark.sql.types.StructType,
-      maxAttempts: Int = 5): Long = {
+  def addColumns(cols: org.apache.spark.sql.types.StructType): Long = {
     require(cols.nonEmpty, "ADD COLUMN needs at least one column")
-    require(maxAttempts >= 1, "need at least one attempt")
     cols.foreach(f => require(f.nullable,
       s"ADD COLUMN '${f.name}' must be nullable — existing rows have " +
         "no value for it; a NOT NULL addition needs a rewrite"))
-    var attempt = 1
-    while (true) {
+    retryCommits() {
       val v = latestVersion()
       require(v >= 0, s"no log at $root")
       val st = replayTo(v)
@@ -2022,15 +2038,8 @@ class LogStore(spark: SparkSession, val root: String,
       val evolved = org.apache.spark.sql.types.StructType(
         current.fields ++
           cols.fields.map(assignPhysical(_, current, retired)))
-      try return commit(v + 1, Nil, Nil,
-        schema = Some(encodeSchema(evolved)))
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      commit(v + 1, Nil, Nil, schema = Some(encodeSchema(evolved)))
     }
-    -1L // unreachable
   }
 
   /** ALTER TABLE RENAME COLUMN as a METADATA-ONLY schema commit
@@ -2043,14 +2052,11 @@ class LogStore(spark: SparkSession, val root: String,
     * (statsCol/statsCols/bloomCol) refuses: the recorded config and
     * per-segment bounds key on the old name — re-point the
     * TBLPROPERTIES first. */
-  def renameColumn(from: String, to: String,
-      maxAttempts: Int = 5): Long = {
+  def renameColumn(from: String, to: String): Long = {
     require(from != to, "rename to the same name is a no-op")
     require(to.nonEmpty && !to.exists("|;\"\n=,".contains(_)),
       s"column name '$to' may not contain | ; = , quote or newline")
-    require(maxAttempts >= 1, "need at least one attempt")
-    var attempt = 1
-    while (true) {
+    retryCommits() {
       val v = latestVersion()
       require(v >= 0, s"no log at $root")
       val st = replayTo(v)
@@ -2079,15 +2085,8 @@ class LogStore(spark: SparkSession, val root: String,
                 LogStore.physicalName(f))
               .build())
         })
-      try return commit(v + 1, Nil, Nil,
-        schema = Some(encodeSchema(evolved)))
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      commit(v + 1, Nil, Nil, schema = Some(encodeSchema(evolved)))
     }
-    -1L // unreachable
   }
 
   /** ALTER TABLE ALTER COLUMN TYPE — WIDENING ONLY — as a
@@ -2095,12 +2094,13 @@ class LogStore(spark: SparkSession, val root: String,
     * integral family and FLOAT→DOUBLE re-type the LOGICAL column;
     * existing segments keep their narrow physical bytes and every
     * read path up-casts at scan time (Spark 4's parquet widening
-    * promotions on the native scan; the DSv2 Group reader mirrors
-    * them), so zero data bytes move and time travel presents the old
-    * type AS OF its version — the schema action is version-scoped
-    * state like any other. Writers after the widen must produce the
-    * WIDE type (the usual enforceSchema exactness; SQL INSERT casts
-    * to the table schema automatically).
+    * promotions, on the native scan and in the DSv2 connector, which
+    * reads through the same parquet reader), so zero data bytes move
+    * and time travel presents the old type AS OF its version — the
+    * schema action is version-scoped state like any other. Writers
+    * after the widen must produce the WIDE type (the usual
+    * enforceSchema exactness; SQL INSERT casts to the table schema
+    * automatically).
     *
     * Widening a SKIPPING column is allowed — unlike rename/drop,
     * nothing stops keying: recorded bounds are stored as strings and
@@ -2113,10 +2113,8 @@ class LogStore(spark: SparkSession, val root: String,
     * re-types (changes semantics), decimal precision moves — keeps
     * the reasoned refusal: those evolve by CTAS migration. */
   def widenColumn(name: String,
-      to: org.apache.spark.sql.types.DataType,
-      maxAttempts: Int = 5): Long = {
+      to: org.apache.spark.sql.types.DataType): Long = {
     import org.apache.spark.sql.types._
-    require(maxAttempts >= 1, "need at least one attempt")
     def rank(dt: DataType): Option[Int] = dt match {
       case ByteType => Some(1)
       case ShortType => Some(2)
@@ -2124,8 +2122,7 @@ class LogStore(spark: SparkSession, val root: String,
       case LongType => Some(4)
       case _ => None
     }
-    var attempt = 1
-    while (true) {
+    retryCommits() {
       val v = latestVersion()
       require(v >= 0, s"no log at $root")
       val st = replayTo(v)
@@ -2151,15 +2148,8 @@ class LogStore(spark: SparkSession, val root: String,
         current.fields.map { g =>
           if (g.name != name) g else g.copy(dataType = to)
         })
-      try return commit(v + 1, Nil, Nil,
-        schema = Some(encodeSchema(evolved)))
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      commit(v + 1, Nil, Nil, schema = Some(encodeSchema(evolved)))
     }
-    -1L // unreachable
   }
 
   /** ALTER TABLE DROP COLUMN as a METADATA-ONLY commit: the field
@@ -2170,11 +2160,9 @@ class LogStore(spark: SparkSession, val root: String,
     * physical so the dropped bytes can never resurrect (the
     * drop-then-re-add contract). Skipping-config columns refuse like
     * rename; dropping every column refuses. */
-  def dropColumns(names: Seq[String], maxAttempts: Int = 5): Long = {
+  def dropColumns(names: Seq[String]): Long = {
     require(names.nonEmpty, "DROP COLUMN needs at least one column")
-    require(maxAttempts >= 1, "need at least one attempt")
-    var attempt = 1
-    while (true) {
+    retryCommits() {
       val v = latestVersion()
       require(v >= 0, s"no log at $root")
       val st = replayTo(v)
@@ -2218,16 +2206,9 @@ class LogStore(spark: SparkSession, val root: String,
         next.get("dvDeletes").contains("true"), extras,
         next.get("bloomCols").toSeq.flatMap(_.split(',').toSeq)
           .map(_.trim).filter(_.nonEmpty))
-      try return commit(v + 1, Nil, Nil,
-        schema = Some(encodeSchema(evolved)),
+      commit(v + 1, Nil, Nil, schema = Some(encodeSchema(evolved)),
         props = Some(encoded.getOrElse("")))
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
     }
-    -1L // unreachable
   }
 
   /** ALTER TABLE SET/UNSET TBLPROPERTIES as a metadata-only props
@@ -2257,15 +2238,12 @@ class LogStore(spark: SparkSession, val root: String,
     *    bounds / write-routing / unconsulted filters are all safe
     *    stale). */
   def setProperties(sets: Map[String, String],
-      removes: Set[String] = Set.empty, maxAttempts: Int = 5): Long =
-    setPropertiesImpl(sets, removes, maxAttempts,
-      engineManaged = false)
+      removes: Set[String] = Set.empty): Long =
+    setPropertiesImpl(sets, removes, engineManaged = false)
 
   private def setPropertiesImpl(sets: Map[String, String],
-      removes: Set[String], maxAttempts: Int,
-      engineManaged: Boolean): Long = {
+      removes: Set[String], engineManaged: Boolean): Long = {
     require(sets.nonEmpty || removes.nonEmpty, "nothing to change")
-    require(maxAttempts >= 1, "need at least one attempt")
     // `constraint.*` is engine-managed state: a raw property set
     // would smuggle a CHECK past addCheckConstraint's validation —
     // and an unparseable payload would then fail EVERY subsequent
@@ -2283,8 +2261,7 @@ class LogStore(spark: SparkSession, val root: String,
       require(k != "checkpointInterval",
         "checkpointInterval is per-writer runtime config, not table " +
           "state"))
-    var attempt = 1
-    while (true) {
+    retryCommits() {
       val v = latestVersion()
       require(v >= 0, s"no log at $root")
       val cur = recordedProps(v).toSeq
@@ -2355,15 +2332,9 @@ class LogStore(spark: SparkSession, val root: String,
           Seq(writeChangeSegment(read(v).limit(0).repartition(1)
             .withColumn("_change_type", flit(""))))
         }
-      try return commit(v + 1, reAdds, Nil, cdc = cdcMarker,
+      commit(v + 1, reAdds, Nil, cdc = cdcMarker,
         props = Some(encoded.getOrElse("")))
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
     }
-    -1L // unreachable
   }
 
   /** The recorded CHECK constraints (name → SQL expression). The
@@ -2458,7 +2429,7 @@ class LogStore(spark: SparkSession, val root: String,
     val enc = java.util.Base64.getUrlEncoder.withoutPadding()
       .encodeToString(exprSql.getBytes(StandardCharsets.UTF_8))
     val v = setPropertiesImpl(Map(s"constraint.$name" -> enc),
-      Set.empty, 5, engineManaged = true)
+      Set.empty, engineManaged = true)
     val late =
       read().where(checkViolation(fexpr(exprSql))).limit(1).collect()
     if (late.nonEmpty) {
@@ -3050,24 +3021,18 @@ class LogStore(spark: SparkSession, val root: String,
       readSet: ReadSet,
       txn: Option[Long] = None, cdc: Seq[String] = Nil,
       schema: Option[String] = None, props: Option[String] = None,
-      dvActions: Seq[(String, String, Long)] = Nil,
-      maxAttempts: Int = 5): Long = {
-    require(maxAttempts >= 1, "need at least one attempt")
+      dvActions: Seq[(String, String, Long)] = Nil): Long = {
     var base = readVersion
-    var attempt = 1
-    while (true) {
-      try return commit(base + 1, adds, removes, txn = txn, cdc = cdc,
-        schema = schema, props = props, dvs = dvActions)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          val latest = latestVersion()
-          if (!winnersDisjoint(base, latest, readSet)) throw e
-          base = latest
-          attempt += 1
-      }
+    def rebase(): Boolean = {
+      val latest = latestVersion()
+      val disjoint = winnersDisjoint(base, latest, readSet)
+      if (disjoint) base = latest
+      disjoint
     }
-    -1L // unreachable
+    retryCommits(canRetry = () => rebase()) {
+      commit(base + 1, adds, removes, txn = txn, cdc = cdc,
+        schema = schema, props = props, dvs = dvActions)
+    }
   }
 
   /** Append `df` as `targetSegments` RANGE-CLUSTERED segments in ONE
@@ -3083,27 +3048,18 @@ class LogStore(spark: SparkSession, val root: String,
     * recorded schema like every staged write. Blind-append retry
     * semantics on a lost commit race. */
   def appendClustered(df: DataFrame,
-      clusterBy: org.apache.spark.sql.Column, targetSegments: Int,
-      maxAttempts: Int = 5): Long = {
+      clusterBy: org.apache.spark.sql.Column,
+      targetSegments: Int): Long = {
     require(targetSegments >= 1, "targetSegments must be positive")
-    require(maxAttempts >= 1, "need at least one attempt")
-    var attempt = 1
-    while (true) {
+    // a lost race leaves the written segments as crash orphans (vacuum
+    // reclaims); the retry re-derives against the new head like append
+    retryCommits() {
       val base = latestVersion()
       val (schemaAct, propsAct) = enforceSchema(df.schema, base)
       val adds = rewriteClustered(enforceChecks(padDefaults(df)),
         targetSegments, Seq(clusterBy))
-      try return commit(base + 1, adds, Nil, schema = schemaAct,
-        props = propsAct)
-      catch {
-        case e: ConcurrentCommitException =>
-          // the written segments become crash orphans (vacuum
-          // reclaims); re-derive against the new head like append
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
+      commit(base + 1, adds, Nil, schema = schemaAct, props = propsAct)
     }
-    -1L // unreachable
   }
 
   /** Optimistic-retry wrapper for BLIND appends: on a lost commit
@@ -3114,19 +3070,9 @@ class LogStore(spark: SparkSession, val root: String,
     * the new snapshot instead — blindly recommitting those here would
     * reintroduce exactly the lost updates the version check exists to
     * prevent, which is why they do not get a retry wrapper. */
-  def appendWithRetry(df: DataFrame, maxAttempts: Int = 5): Long = {
-    require(maxAttempts >= 1, "need at least one attempt")
-    var attempt = 1
-    while (true) {
-      try return append(df)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-      }
-    }
-    -1L // unreachable
-  }
+  def appendWithRetry(df: DataFrame,
+      maxAttempts: Int = LogStore.CommitAttempts): Long =
+    retryCommits(maxAttempts)(append(df))
 
   /** Atomic REBUILD of a derived table: replace the ENTIRE live
     * content with `df` (range-clustered like optimize when
@@ -4302,9 +4248,8 @@ class LogStore(spark: SparkSession, val root: String,
 
   def publishSegments(names: Seq[String],
       writeSchema: org.apache.spark.sql.types.StructType,
-      txn: Option[Long] = None, maxAttempts: Int = 5): Long = {
+      txn: Option[Long] = None): Long = {
     require(names.nonEmpty, "nothing to publish")
-    require(maxAttempts >= 1, "need at least one attempt")
     requireStagedDefaults(writeSchema)
     validateStagedChecks(names, writeSchema)
     val columns = writeSchema.fieldNames.toSeq
@@ -4314,41 +4259,45 @@ class LogStore(spark: SparkSession, val root: String,
         Some(org.apache.spark.sql.types.StructType(writeSchema.fields
           .map(f => f.copy(name = m.getOrElse(f.name, f.name))))))
     }
-    var attempt = 1
-    while (true) {
-      if (txn.exists(_ <= lastTxn())) return -1L
-      val base = latestVersion()
-      val (schemaAct, propsAct) = enforceSchema(writeSchema, base)
-      // the staged files were already written (physical names resolved
-      // against the RECORDED mapping); a NEW column that enforceSchema
-      // had to re-map to a fresh col-uuid (its name collides with a
-      // dropped/renamed column's storage name) would leave the files
-      // holding the claimed name — resurrected bytes. Refuse with the
-      // workaround rather than publish a lie.
-      schemaAct.map(decodeSchema).foreach(_.fields.foreach { f =>
-        val written = writeSchema.fields.find(_.name == f.name)
-        written.foreach { w =>
-          if (LogStore.physicalName(f) != LogStore.physicalName(w) &&
-              !writeMapping(None).contains(f.name))
-            throw new IllegalArgumentException(
-              s"column '${f.name}' collides with a dropped/renamed " +
-                "column's storage name — run ALTER TABLE ADD COLUMN " +
-                "first (assigning its physical name), then write")
-        }
-      })
-      try return commit(base + 1, adds, Nil, txn = txn,
-        schema = schemaAct, props = propsAct)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
+    retryCommits() {
+      // a fenced replay: the batch already landed
+      if (txn.exists(_ <= lastTxn())) -1L
+      else {
+        val base = latestVersion()
+        val (schemaAct, propsAct) = enforceSchema(writeSchema, base)
+        // the staged files were already written (physical names
+        // resolved against the RECORDED mapping); a NEW column that
+        // enforceSchema had to re-map to a fresh col-uuid (its name
+        // collides with a dropped/renamed column's storage name) would
+        // leave the files holding the claimed name — resurrected
+        // bytes. Refuse with the workaround rather than publish a lie.
+        schemaAct.map(decodeSchema).foreach(_.fields.foreach { f =>
+          val written = writeSchema.fields.find(_.name == f.name)
+          written.foreach { w =>
+            if (LogStore.physicalName(f) != LogStore.physicalName(w) &&
+                !writeMapping(None).contains(f.name))
+              throw new IllegalArgumentException(
+                s"column '${f.name}' collides with a dropped/renamed " +
+                  "column's storage name — run ALTER TABLE ADD COLUMN " +
+                  "first (assigning its physical name), then write")
+          }
+        })
+        commit(base + 1, adds, Nil, txn = txn, schema = schemaAct,
+          props = propsAct)
       }
     }
-    -1L // unreachable
   }
 }
 
 object LogStore {
+  /** Attempts a re-deriving commit path makes before a lost commit
+    * race surfaces as [[LogStore!.ConcurrentCommitException]]. */
+  private val CommitAttempts = 5
+
+  /** Log rows per bucket of a multi-part checkpoint (bounded above by
+    * the table's `checkpointShardRows`). */
+  private val CheckpointBucketRows = 1024
+
   /** Hex serialization of a Bloom bit array — 4 bits per hex digit,
     * bit (4j+k) contributing 2^k to digit j (the grammar every probe
     * and sidecar parser reads back). */

@@ -1359,6 +1359,12 @@ object AnalyticsOps {
           .as("chi2_term"))
   }
 
+  /** ln(x) floored onto the 10⁻¹² grid as a LONG: the one IEEE log
+    * the count-arithmetic statistics take per term, so their sums of
+    * grid logs accumulate exactly in DECIMAL(38,0). */
+  private def lnG(x: Column): Column =
+    floor(log(x.cast("double")) * lit(1e12)).cast("long")
+
   /** Mutual information + normalized MI between two categorical
     * columns (Shannon 1948; NMI per Strehl & Ghosh JMLR'02 — public):
     * the DEPENDENCE-STRENGTH companion of [[chiSquare]] — χ² says
@@ -1386,8 +1392,6 @@ object AnalyticsOps {
     val rowT = cells.groupBy(col("a")).agg(sum(col("o")).as("n_a"))
     val colT = cells.groupBy(col("b")).agg(sum(col("o")).as("n_b"))
     val tot = cells.agg(sum(col("o")).as("n"))
-    def lnG(x: Column): Column =
-      floor(log(x.cast("double")) * lit(1e12)).cast("long")
     val joined = cells.join(broadcast(rowT), "a")
       .join(broadcast(colT), "b").crossJoin(broadcast(tot))
     val miGrid = joined.agg(
@@ -2649,8 +2653,6 @@ object AnalyticsOps {
     val cum2 = RelationalOps
       .distributedPrefixSum(cumT, "doc_id", "new_types")
       .withColumnRenamed("cum", "cum_types")
-    def lnG(x: Column): Column =
-      floor(log(x.cast("double")) * lit(1e12)).cast("long")
     val pts = cum2.where(col("cum_tokens") >= 1L &&
         col("cum_types") >= 1L)
       .select(lnG(col("cum_tokens")).as("x"),
@@ -2715,8 +2717,6 @@ object AnalyticsOps {
     val dec = DecimalType(38, 0)
     val totals = binned.agg(sum(col("c_ref")).as("n_ref"),
       sum(col("c_cur")).as("n_cur"), count(lit(1)).as("b_bins"))
-    def lnG(x: Column): Column =
-      floor(log(x.cast("double")) * lit(1e12)).cast("long")
     val a = (col("c_ref") + lit(1L)).cast(dec)
     val b = (col("c_cur") + lit(1L)).cast(dec)
     val n1 = (col("n_ref") + col("b_bins")).cast(dec)
@@ -2776,8 +2776,6 @@ object AnalyticsOps {
     val dec = DecimalType(38, 0)
     val totals = binned.agg(sum(col("c_ref")).as("n_ref"),
       sum(col("c_cur")).as("n_cur"), count(lit(1)).as("b_bins"))
-    def lnG(x: Column): Column =
-      floor(log(x.cast("double")) * lit(1e12)).cast("long")
     val a = (col("c_ref") + lit(1L)).cast(dec)
     val b = (col("c_cur") + lit(1L)).cast(dec)
     val n1 = (col("n_ref") + col("b_bins")).cast(dec)
@@ -2902,8 +2900,6 @@ object AnalyticsOps {
     val vd = (n * col("n_a").cast(dec) * col("n_b").cast(dec)).cast(dec)
     val u = (vn * lit(tauSqDen).cast(dec)).cast(dec)
     val uw = (u + lit(tauSqNum).cast(dec) * vd).cast(dec)
-    def lnG(c: Column): Column =
-      floor(log(c.cast("double")) * lit(1e12)).cast("long")
     val tau2 = lit(tauSqNum.toDouble / tauSqDen.toDouble)
     val vDbl = vn.cast("double") / vd.cast("double")
     val delta = (col("x_a").cast(dec) * col("n_b").cast(dec) -
@@ -3313,8 +3309,6 @@ object AnalyticsOps {
         sum(when(!arm0 && !succ, 1L).otherwise(0L)).as("d"))
     def cc(c: Column): Column =
       (c.cast(dec) * lit(2L).cast(dec) + lit(1L).cast(dec)).cast(dec)
-    def lnG(x: Column): Column =
-      floor(log(x.cast("double")) * lit(1e12)).cast("long")
     val (ca, cb, ccc, cd) = (cc(col("a")), cc(col("b")),
       cc(col("c")), cc(col("d")))
     val orNum = (ca * cd).cast(dec)

@@ -268,6 +268,7 @@ final class GraftRowLevelScan(root: String, store: LogStore,
     * record of which segments this DML's conclusion depended on. */
   private[sources] val staticSelection: Set[String] =
     selectedInfos.map(_.name).toSet
+  private val staticVectored = selectedInfos.exists(_.dv.nonEmpty)
 
   override def readSchema(): StructType = schema
   override def description(): String =
@@ -284,20 +285,16 @@ final class GraftRowLevelScan(root: String, store: LogStore,
       }
     }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    selectedInfos.flatMap { seg =>
-      fs.listStatus(new Path(s"$root/${seg.name}"))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(f => LogStreamPartition(f.getPath.toString, -1L, None,
-          seg.dv.map(d => s"$root/${d._1}")): InputPartition)
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    selectedInfos.flatMap(seg => LogStreamPlanning.filesOf(
+      SparkSession.active, root, seg.name, -1L,
+      dvDir = seg.dv.map(_._1))).toArray
 
+  // runtime filtering only narrows the selection, so the static one
+  // decides whether the factory needs the vector reader
   override def createReaderFactory(): PartitionReaderFactory =
-    LogStreamPlanning.readerFactory(SparkSession.active, schema)
+    LogStreamPlanning.readerFactory(SparkSession.active, schema,
+      vectored = staticVectored)
 }
 
 /** The `_segment IN (...)` / `_segment = ...` runtime predicates the
@@ -351,10 +348,8 @@ final class GraftReplaceBatchWrite(root: String, schema: StructType,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new LogDataWriterFactory(s"$root/$stage",
-      LogDataWriterFactory.physicalFor(SparkSession.active, root,
-        schema),
-      LogStreamPlanning.confEntries(SparkSession.active))
+    LogDataWriterFactory(SparkSession.active, root, s"$root/$stage",
+      schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active

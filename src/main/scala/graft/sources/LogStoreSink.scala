@@ -2,23 +2,20 @@ package graft.sources
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
 import graft.catalog.LogStore
@@ -153,10 +150,7 @@ final class LogBatchWrite(root: String, schema: StructType,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new LogDataWriterFactory(s"$root/$stage",
-      LogDataWriterFactory.physicalFor(SparkSession.active, root,
-        schema),
-      LogStreamPlanning.confEntries(SparkSession.active))
+    LogDataWriterFactory(SparkSession.active, root, s"$root/$stage", schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     if (overwrite)
@@ -186,10 +180,7 @@ final class LogStreamingWrite(root: String, schema: StructType,
   // abort(epochId) removes precisely the files its epoch staged
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new LogDataWriterFactory(stagePrefix,
-      LogDataWriterFactory.physicalFor(SparkSession.active, root,
-        schema),
-      LogStreamPlanning.confEntries(SparkSession.active))
+    LogDataWriterFactory(SparkSession.active, root, stagePrefix, schema)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
@@ -311,7 +302,7 @@ private[sources] object LogSinkCommit {
 }
 
 final class LogDataWriterFactory(stageDir: String, schema: StructType,
-    confEntries: Array[(String, String)])
+    writer: OutputWriterFactory, confEntries: Array[(String, String)])
     extends DataWriterFactory with StreamingDataWriterFactory {
   private def conf: Configuration = {
     val c = new Configuration(false)
@@ -320,8 +311,8 @@ final class LogDataWriterFactory(stageDir: String, schema: StructType,
   }
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new LogDataWriter(
-      s"$stageDir/part-$partitionId-$taskId.parquet", schema, conf)
+    new LogDataWriter(s"$stageDir/part-$partitionId-$taskId.parquet",
+      schema, writer, conf)
   // the streaming form: stageDir is the QUERY prefix — the epoch id
   // completes it to the per-epoch staging directory the driver's
   // commit(epochId)/abort(epochId) operate on, so epochs never share
@@ -330,22 +321,39 @@ final class LogDataWriterFactory(stageDir: String, schema: StructType,
       epochId: Long): DataWriter[InternalRow] =
     new LogDataWriter(
       s"$stageDir-e$epochId/part-$partitionId-$taskId.parquet", schema,
-      conf)
+      writer, conf)
 }
 
 object LogDataWriterFactory {
+  /** The executor writers for a write of `schema` into the table at
+    * `root`, staging under `stageDir`: Spark's own parquet writer
+    * ([[ParquetFileFormat.prepareWrite]], the one `df.write.parquet`
+    * and `LogStore.append` run), configured here on the driver for
+    * the table's physical schema. */
+  def apply(spark: SparkSession, root: String, stageDir: String,
+      schema: StructType): LogDataWriterFactory = {
+    val physical = physicalFor(spark, root, schema)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val writer = new ParquetFileFormat().prepareWrite(spark, job,
+      Map.empty, physical)
+    // Configuration is not Java-serializable: executors rebuild the
+    // configured one (filesystem settings, the writer's schema and
+    // codec) from its entries
+    new LogDataWriterFactory(stageDir, physical, writer,
+      job.getConfiguration.iterator().asScala
+        .map(e => (e.getKey, e.getValue)).toArray)
+  }
+
   /** The PHYSICAL write schema for a write of `schema` into the table
     * at `root`: field names swapped per the table's RECORDED column
     * mapping, matched by LOGICAL name — a plain DataFrame append
     * carries no mapping metadata of its own, so the table's schema is
     * the source of truth; fields unknown to the table (a write-side
     * evolution) keep their own name. Identity for unmapped tables and
-    * first writes. Resolved DRIVER-side (factories serialize to
-    * executors). Rows arrive in the logical schema's POSITIONS, so
+    * first writes. Rows arrive in the logical schema's POSITIONS, so
     * renaming the fields is the whole translation. */
-  def physicalFor(spark: org.apache.spark.sql.SparkSession,
+  private def physicalFor(spark: SparkSession,
       root: String, schema: StructType): StructType = {
-    import graft.catalog.LogStore
     val recorded =
       try {
         val st = new LogStore(spark, root)
@@ -362,24 +370,19 @@ object LogDataWriterFactory {
 }
 
 /** Executor-side writer: one task, one parquet file, opened LAZILY on
-  * the first row (an empty task stages nothing), rows converted
-  * InternalRow → parquet Group against the exact physical encodings
-  * the read side ([[LogStreamPartitionReader]]) understands. */
+  * the first row (an empty task stages nothing), written by Spark's
+  * parquet [[OutputWriter]] — the same encodings as every other
+  * segment file of the table. */
 final class LogDataWriter(file: String, schema: StructType,
-    conf: Configuration) extends DataWriter[InternalRow] {
-  private val messageType = LogParquetWrite.messageTypeOf(schema)
-  private val factory = new SimpleGroupFactory(messageType)
-  private var writer: ParquetWriter[Group] = _
+    factory: OutputWriterFactory, conf: Configuration)
+    extends DataWriter[InternalRow] {
+  private var writer: OutputWriter = _
 
   override def write(row: InternalRow): Unit = {
-    if (writer == null) {
-      GroupWriteSupport.setSchema(messageType, conf)
-      writer = ExampleParquetWriter.builder(new Path(file))
-        .withConf(conf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-    }
-    writer.write(LogParquetWrite.toGroup(row, schema, factory))
+    if (writer == null)
+      writer = factory.newInstance(file, schema,
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+    writer.write(row)
   }
 
   override def commit(): WriterCommitMessage = {
@@ -404,91 +407,5 @@ private[sources] object LogParquetWrite {
         TimestampType | TimestampNTZType => true
     case _: DecimalType => true
     case _ => false
-  }
-
-  /** Spark schema → parquet MessageType, with the standard logical
-    * annotations so the files read back IDENTICALLY through both
-    * Spark's vectorized reader (LogStore.read) and the connector's
-    * Group reader: INT(8/16) for byte/short, DATE on INT32,
-    * TIMESTAMP(MICROS, adjusted/unadjusted) on INT64, STRING on
-    * BINARY, DECIMAL on INT32/INT64/BINARY by precision. */
-  def messageTypeOf(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val t = f.dataType match {
-        case BooleanType => Types.optional(PrimitiveTypeName.BOOLEAN)
-        case ByteType => Types.optional(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.intType(8, true))
-        case ShortType => Types.optional(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.intType(16, true))
-        case IntegerType => Types.optional(PrimitiveTypeName.INT32)
-        case LongType => Types.optional(PrimitiveTypeName.INT64)
-        case FloatType => Types.optional(PrimitiveTypeName.FLOAT)
-        case DoubleType => Types.optional(PrimitiveTypeName.DOUBLE)
-        case StringType => Types.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType())
-        case BinaryType => Types.optional(PrimitiveTypeName.BINARY)
-        case DateType => Types.optional(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.dateType())
-        case TimestampType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS))
-        case TimestampNTZType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(false, TimeUnit.MICROS))
-        case d: DecimalType if d.precision <= 9 =>
-          Types.optional(PrimitiveTypeName.INT32)
-            .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-        case d: DecimalType if d.precision <= 18 =>
-          Types.optional(PrimitiveTypeName.INT64)
-            .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-        case d: DecimalType =>
-          Types.optional(PrimitiveTypeName.BINARY)
-            .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-        case other => throw new IllegalArgumentException(
-          s"graft-log stores flat columns; got $other")
-      }
-      b.addField(t.named(f.name))
-    }
-    b.named("graft_log_write")
-  }
-
-  /** One InternalRow → Group; nulls are simply not added (optional
-    * fields, repetition 0 — exactly what the read side maps back to
-    * null). */
-  def toGroup(row: InternalRow, schema: StructType,
-      factory: SimpleGroupFactory): Group = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) {
-        schema.fields(i).dataType match {
-          case BooleanType => g.add(i, row.getBoolean(i))
-          case ByteType => g.add(i, row.getByte(i).toInt)
-          case ShortType => g.add(i, row.getShort(i).toInt)
-          case IntegerType | DateType => g.add(i, row.getInt(i))
-          case LongType => g.add(i, row.getLong(i))
-          case FloatType => g.add(i, row.getFloat(i))
-          case DoubleType => g.add(i, row.getDouble(i))
-          case StringType => g.add(i,
-            Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
-          case BinaryType => g.add(i,
-            Binary.fromConstantByteArray(row.getBinary(i)))
-          case TimestampType | TimestampNTZType => g.add(i, row.getLong(i))
-          case d: DecimalType if d.precision <= 9 =>
-            g.add(i, row.getDecimal(i, d.precision, d.scale)
-              .toUnscaledLong.toInt)
-          case d: DecimalType if d.precision <= 18 =>
-            g.add(i, row.getDecimal(i, d.precision, d.scale)
-              .toUnscaledLong)
-          case d: DecimalType =>
-            g.add(i, Binary.fromConstantByteArray(
-              row.getDecimal(i, d.precision, d.scale)
-                .toJavaBigDecimal.unscaledValue().toByteArray))
-          case other => throw new IllegalArgumentException(
-            s"unwritable type $other")
-        }
-      }
-      i += 1
-    }
-    g
   }
 }

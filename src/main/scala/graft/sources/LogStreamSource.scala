@@ -4,17 +4,11 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, PrimitiveType}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, Expression, GenericInternalRow, MetadataAttribute, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -22,6 +16,8 @@ import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And, DataSourceRegister, EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -49,10 +45,10 @@ import graft.catalog.LogStore
   *  - **One partition per parquet file** of each change segment —
   *    executor parallelism scales with the data of the batch, not
   *    with versions.
-  *  - **Readers are plain parquet-hadoop** ([[GroupReadSupport]])
-  *    over immutable segment files, converting records straight to
-  *    `InternalRow` against the inferred schema (schema-evolved old
-  *    segments read null in added columns, by name). No driver
+  *  - **Readers are Spark's own** [[ParquetFileFormat]] reader over
+  *    immutable segment files — the one `LogStore.read()` runs — so
+  *    every encoding reads as it does there (schema-evolved old
+  *    segments read null in added columns). No driver
   *    materialization anywhere: the driver plans file paths, the
   *    executors read bytes.
   *  - **Vacuum refuses loudly.** Planning a range behind the vacuum
@@ -71,7 +67,7 @@ import graft.catalog.LogStore
   * `changesFrom`/`changesTo` version bounds (default full history) —
   * the CDF backfill/audit path; and the connector prunes columns
   * ([[SupportsPushDownRequiredColumns]]), so narrow projections
-  * convert only the requested fields per record. SNAPSHOT reads ride
+  * decode only the requested columns. SNAPSHOT reads ride
   * `.option("mode", "snapshot")` ([[LogSnapshotScanBuilder]]): the
   * live rows with filter pushdown mapped to segment skipping and
   * `versionAsOf`/`timestampAsOf` time travel.
@@ -414,9 +410,9 @@ private[sources] object LogDeleteSql {
 }
 
 /** Column pruning at the connector ([[SupportsPushDownRequiredColumns]]):
-  * the executor-side Group converter materializes ONLY the requested
-  * columns — a 2-column projection over a wide feed converts 2 fields
-  * per record, and `.explain` shows the narrow ReadSchema. */
+  * the executor-side parquet reader decodes ONLY the requested
+  * columns — a 2-column projection over a wide feed reads 2 column
+  * chunks per row group, and `.explain` shows the narrow ReadSchema. */
 final class LogStreamScanBuilder(schema: StructType, root: String,
     startingVersion: Option[String], maxVersionsPerTrigger: Option[Long],
     changesFrom: Option[Long], changesTo: Option[Long])
@@ -462,13 +458,18 @@ final class LogFeedBatch(schema: StructType, root: String,
     LogStreamPlanning.partitionsFor(spark, store, root, from, to)
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    LogStreamPlanning.readerFactory(SparkSession.active, schema)
+    LogStreamPlanning.readerFactory(SparkSession.active, schema,
+      vectored = false)
 }
 
-/** The shared planning kernel of the batch and micro-batch paths:
-  * change-bearing segment files of versions [from, to], one partition
-  * per parquet file, behind the same vacuum-horizon refusal. */
+/** The planning and reading kernel shared by every graft-log scan —
+  * feed batch, micro-batch feed, table stream, snapshot batch and the
+  * row-level group scan: one partition per parquet file, read by
+  * Spark's own [[ParquetFileFormat]] reader, the one `LogStore.read()`
+  * runs under `FileSourceScanExec`. */
 private[sources] object LogStreamPlanning {
+  /** Change-bearing segment files of versions [from, to], behind the
+    * vacuum-horizon refusal. */
   def partitionsFor(spark: SparkSession, store: LogStore, root: String,
       from: Long, to: Long): Array[InputPartition] = {
     if (to < from) return Array.empty
@@ -478,30 +479,75 @@ private[sources] object LogStreamPlanning {
         s"versions [$from, ${horizon - 1}] were vacuumed (horizon " +
           s"$horizon): the change feed must resync from a snapshot, " +
           "never skip a gap silently")
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     (from to to).flatMap { v =>
       store.changeSegmentsOf(v).flatMap { case (seg, implied) =>
-        fs.listStatus(new Path(s"$root/$seg"))
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(f => LogStreamPartition(f.getPath.toString, v, implied)
-            : InputPartition)
+        filesOf(spark, root, seg, v, implied)
       }
     }.toArray
   }
 
-  /** The session's Hadoop conf as a plain serializable map —
-    * executors on a real cluster need the filesystem
-    * credentials/settings the driver planned with, and Configuration
-    * itself is not Java-serializable. Shared by the reader and writer
-    * factories. */
-  def confEntries(spark: SparkSession): Array[(String, String)] =
-    spark.sessionState.newHadoopConf().iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
+  /** One partition per parquet file of segment `seg`, carrying the
+    * per-file constants (`_commit_version`, the implied `_change_type`,
+    * the `_segment` name) and, for a vectored segment, its deletion
+    * vector's files — listed here, read on the executor. */
+  def filesOf(spark: SparkSession, root: String, seg: String,
+      version: Long, implied: Option[String] = None,
+      dvDir: Option[String] = None): Seq[LogStreamPartition] = {
+    val fs = new Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def parquet(dir: String) = fs.listStatus(new Path(s"$root/$dir"))
+      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+      .map(f => (f.getPath.toString, f.getLen))
+    val dvFiles = dvDir.toSeq.flatMap(parquet)
+    parquet(seg).map { case (file, len) =>
+      LogStreamPartition(file, len, version, implied, seg, dvFiles)
+    }
+  }
 
-  def readerFactory(spark: SparkSession,
-      schema: StructType): PartitionReaderFactory =
-    new LogStreamReaderFactory(schema, confEntries(spark))
+  /** The executor reader for a scan of `schema`: data columns read by
+    * their PHYSICAL names (column mapping — rows come back by
+    * position), absent columns null (schema evolution), narrow bytes
+    * up-cast by Spark's parquet widening; the per-file constants ride
+    * as partition values, deletion-vector positions as the reader's
+    * row index. Each reader costs a broadcast of the Hadoop conf, so
+    * the vector reader is built only for scans that may meet a
+    * `vectored` partition. */
+  def readerFactory(spark: SparkSession, schema: StructType,
+      vectored: Boolean): PartitionReaderFactory = {
+    val fmt = new ParquetFileFormat
+    def reader(fields: Seq[StructField], partition: StructType) =
+      fmt.buildReaderWithPartitionValues(spark, StructType(fields),
+        partition, StructType(fields), Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+    // the `_segment` METADATA column (a real `_segment` data column
+    // shadows it, Spark's conflict rule) and `_commit_version` are
+    // partition values; `_change_type` is the implied one when the
+    // file is a pure add, else the cdc file's own column
+    def isSegment(f: StructField) =
+      f.name == "_segment" && MetadataAttribute.isValid(f.metadata)
+    val fileFields = schema.fields.toSeq
+      .filterNot(f => f.name == "_commit_version" || isSegment(f))
+    val read = reader(fileFields.map(f => StructField(
+      LogStore.physicalName(f), f.dataType)) :+
+      StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+        LongType),
+      StructType(Seq(StructField("_commit_version", LongType),
+        StructField("_implied_change_type", StringType),
+        StructField("_segment", StringType))))
+    val n = fileFields.length + 1
+    val out = schema.fields.toSeq.map { f =>
+      if (f.name == "_commit_version") BoundReference(n, LongType, false)
+      else if (isSegment(f)) BoundReference(n + 2, StringType, false)
+      else {
+        val col = BoundReference(fileFields.indexOf(f), f.dataType, true)
+        if (f.name != "_change_type") col
+        else Coalesce(Seq(BoundReference(n + 1, StringType, true), col))
+      }
+    }
+    new LogSegmentReaderFactory(read, Option.when(vectored)(
+      reader(LogStore.dvSchema.fields.toSeq, new StructType())), out, n - 1)
+  }
 }
 
 /** One version-interval offset: the newest version ABSORBED so far
@@ -565,250 +611,66 @@ final class LogMicroBatchStream(schema: StructType, root: String,
       end.asInstanceOf[LogStreamOffset].version)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    LogStreamPlanning.readerFactory(spark, schema)
+    LogStreamPlanning.readerFactory(spark, schema, vectored = false)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-final case class LogStreamPartition(file: String, version: Long,
-    implied: Option[String],
-    dvDir: Option[String] = None) extends InputPartition
+final case class LogStreamPartition(file: String, length: Long,
+    version: Long, implied: Option[String], segment: String,
+    dvFiles: Seq[(String, Long)]) extends InputPartition
 
-final class LogStreamReaderFactory(schema: StructType,
-    confEntries: Array[(String, String)]) extends PartitionReaderFactory {
+/** Executor side of [[LogStreamPlanning.readerFactory]]: one parquet
+  * file through Spark's reader, minus the rows its deletion vector
+  * names, projected to the scan's columns. Vector positions match the
+  * reader's file-global row index, which equals the write path's
+  * `_metadata.row_index` because segment files are immutable. */
+final class LogSegmentReaderFactory(
+    read: PartitionedFile => Iterator[InternalRow],
+    readDv: Option[PartitionedFile => Iterator[InternalRow]],
+    out: Seq[Expression], rowIndex: Int) extends PartitionReaderFactory {
+  private def file(path: String, length: Long, values: InternalRow) =
+    PartitionedFile(values, SparkPath.fromPath(new Path(path)), 0L,
+      length, Array.empty, 0L, length)
+
+  private def close(rows: Iterator[InternalRow]): Unit = rows match {
+    case c: java.io.Closeable => c.close()
+    case _ => ()
+  }
+
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[LogStreamPartition]
-    val conf = new Configuration(false)
-    confEntries.foreach { case (k, v) => conf.set(k, v) }
-    new LogStreamPartitionReader(schema, p, conf)
-  }
-}
-
-/** Executor-side reader: plain parquet-hadoop record reads over one
-  * immutable segment file, converted to InternalRow against the feed
-  * schema by NAME (missing columns → null: schema evolution; the feed
-  * columns → the partition's constants or the file's own). */
-final class LogStreamPartitionReader(schema: StructType,
-    p: LogStreamPartition, conf: Configuration)
-    extends PartitionReader[InternalRow] {
-
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new Path(p.file))
-      .withConf(conf).build()
-  private var current: Group = _
-  // the `_segment` metadata column: the data directory holding this
-  // file — served only when the file itself carries no such column
-  // (a real `_segment` data column shadows the metadata one, matching
-  // Spark's conflict rule)
-  private val segName =
-    UTF8String.fromString(new Path(p.file).getParent.getName)
-
-  // merge-on-read reconciliation: the segment's deletion vector,
-  // narrowed to THIS file's positions — read executor-side (the
-  // vector is ∝ deleted rows; a production variant would ship a
-  // roaring bitmap). Records are skipped by file-sequential index,
-  // which equals the write path's `_metadata.row_index` because
-  // segment files are immutable.
-  private val deleted: java.util.HashSet[java.lang.Long] = {
-    val set = new java.util.HashSet[java.lang.Long]()
-    p.dvDir.foreach { dir =>
-      val fileName = new Path(p.file).getName
-      val fs = new Path(dir).getFileSystem(conf)
-      fs.listStatus(new Path(dir))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .foreach { st =>
-          val r = ParquetReader.builder(new GroupReadSupport(),
-            st.getPath).withConf(conf).build()
-          try {
-            var g = r.read()
-            while (g != null) {
-              val gt = g.getType
-              val fi = gt.getFieldIndex("file")
-              val pi = gt.getFieldIndex("pos")
-              if (g.getFieldRepetitionCount(fi) > 0 &&
-                  new String(g.getBinary(fi, 0).getBytes,
-                    java.nio.charset.StandardCharsets.UTF_8)
-                    == fileName)
-                set.add(g.getLong(pi, 0))
-              g = r.read()
-            }
-          } finally r.close()
+    val fileName = UTF8String.fromString(new Path(p.file).getName)
+    val deleted = new java.util.HashSet[java.lang.Long]()
+    p.dvFiles.foreach { case (f, len) =>
+      val rows = readDv.getOrElse(throw new IllegalStateException(
+        s"${p.file} has a deletion vector but its scan planned none"))(
+        file(f, len, InternalRow.empty))
+      try rows.foreach { r =>
+        if (r.getUTF8String(0) == fileName) deleted.add(r.getLong(1))
+      } finally close(rows)
+    }
+    val rows = read(file(p.file, p.length, new GenericInternalRow(
+      Array[Any](p.version, p.implied.map(UTF8String.fromString).orNull,
+        UTF8String.fromString(p.segment)))))
+    val project = UnsafeProjection.create(out)
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean = {
+        while (rows.hasNext) {
+          val r = rows.next()
+          if (deleted.isEmpty || !deleted.contains(r.getLong(rowIndex))) {
+            current = project(r)
+            return true
+          }
         }
-    }
-    set
-  }
-  private var rowIdx: Long = -1L
-
-  override def next(): Boolean = {
-    current = reader.read()
-    rowIdx += 1
-    while (current != null && !deleted.isEmpty &&
-        deleted.contains(rowIdx)) {
-      current = reader.read()
-      rowIdx += 1
-    }
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    val gt = current.getType
-    val vals = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      val f = schema.fields(i)
-      vals(i) = f.name match {
-        case "_commit_version" => p.version
-        case "_change_type" if p.implied.isDefined =>
-          UTF8String.fromString(p.implied.get)
-        case "_segment" if !gt.containsField("_segment") => segName
-        case _ =>
-          // column mapping: files hold the field's PHYSICAL name —
-          // identity without mapping; a missing physical (an added
-          // or freshly re-added column) reads null, the evolution
-          // and no-resurrection semantics in one rule
-          val name = graft.catalog.LogStore.physicalName(f)
-          if (!gt.containsField(name)) null
-          else {
-            val idx = gt.getFieldIndex(name)
-            if (current.getFieldRepetitionCount(idx) == 0) null
-            else f.dataType match {
-              case at: ArrayType =>
-                LogStreamPartitionReader.convertArray(current, idx, at)
-              case dt => LogStreamPartitionReader.convert(current, idx,
-                gt.getType(idx).asPrimitiveType(), dt)
-            }
-          }
+        false
       }
-      i += 1
+      override def get(): InternalRow = current
+      override def close(): Unit = LogSegmentReaderFactory.this.close(rows)
     }
-    new GenericInternalRow(vals)
-  }
-
-  override def close(): Unit = reader.close()
-}
-
-object LogStreamPartitionReader {
-  /** One parquet primitive value → Spark internal representation,
-    * covering every physical encoding Spark's writer emits for the
-    * supported flat types (INT96 and INT64 milli/micro/nano
-    * timestamps, int/long/binary decimals, DATE int32). */
-  /** An ARRAY-of-scalars column from its parquet list encoding —
-    * Spark's standard 3-level (`repeated group list { element }`),
-    * the legacy 2-level (`repeated group bag { array }`), and the
-    * bare `repeated <primitive>` form all land here; the element
-    * values route through [[convert]] with the repetition ordinal. */
-  private[sources] def convertArray(g: Group, idx: Int,
-      at: ArrayType): Any = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val fieldType = g.getType.getType(idx)
-    if (fieldType.isPrimitive) {
-      // bare repeated primitive
-      val n = g.getFieldRepetitionCount(idx)
-      val out = new Array[Any](n)
-      var i = 0
-      while (i < n) {
-        out(i) = convert(g, idx, fieldType.asPrimitiveType(),
-          at.elementType, i)
-        i += 1
-      }
-      return new GenericArrayData(out)
-    }
-    val outer = g.getGroup(idx, 0)
-    val ot = outer.getType
-    require(ot.getFieldCount == 1, s"unsupported list encoding: $ot")
-    val inner = ot.getType(0)
-    val n = outer.getFieldRepetitionCount(0)
-    val out = new Array[Any](n)
-    var i = 0
-    if (inner.isPrimitive) {
-      // legacy 2-level: repeated <primitive> directly in the group
-      while (i < n) {
-        out(i) = convert(outer, 0, inner.asPrimitiveType(),
-          at.elementType, i)
-        i += 1
-      }
-    } else {
-      // standard 3-level: repeated group list { optional element }
-      while (i < n) {
-        val e = outer.getGroup(0, i)
-        out(i) =
-          if (e.getFieldRepetitionCount(0) == 0) null
-          else convert(e, 0, e.getType.getType(0).asPrimitiveType(),
-            at.elementType, 0)
-        i += 1
-      }
-    }
-    new GenericArrayData(out)
-  }
-
-  private[sources] def convert(g: Group, idx: Int, pt: PrimitiveType,
-      dt: DataType, rep: Int = 0): Any = dt match {
-    case BooleanType => g.getBoolean(idx, rep)
-    case ByteType => g.getInteger(idx, rep).toByte
-    case ShortType => g.getInteger(idx, rep).toShort
-    case IntegerType | DateType => g.getInteger(idx, rep)
-    case LongType => pt.getPrimitiveTypeName match {
-      // ALTER COLUMN TYPE widening: old segments written before an
-      // INT→LONG widen keep int32 bytes — up-cast at read time,
-      // mirroring Spark's own parquet widening promotion
-      case PrimitiveTypeName.INT32 => g.getInteger(idx, rep).toLong
-      case _ => g.getLong(idx, rep)
-    }
-    case FloatType => g.getFloat(idx, rep)
-    case DoubleType => pt.getPrimitiveTypeName match {
-      // FLOAT→DOUBLE widening — exact by IEEE construction
-      case PrimitiveTypeName.FLOAT => g.getFloat(idx, rep).toDouble
-      case _ => g.getDouble(idx, rep)
-    }
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, rep).getBytes)
-    case BinaryType => g.getBinary(idx, rep).getBytes
-    case TimestampType | TimestampNTZType =>
-      pt.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT96 =>
-          int96ToMicros(g.getInt96(idx, rep).getBytes)
-        case PrimitiveTypeName.INT64 =>
-          val raw = g.getLong(idx, rep)
-          pt.getLogicalTypeAnnotation match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              t.getUnit match {
-                case TimeUnit.MILLIS => raw * 1000L
-                case TimeUnit.MICROS => raw
-                case TimeUnit.NANOS => Math.floorDiv(raw, 1000L)
-              }
-            case _ => raw // bare int64: micros by Spark convention
-          }
-        case other => throw new IllegalArgumentException(
-          s"unsupported timestamp encoding $other")
-      }
-    case d: DecimalType =>
-      pt.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 =>
-          Decimal(g.getInteger(idx, rep).toLong, d.precision, d.scale)
-        case PrimitiveTypeName.INT64 =>
-          Decimal(g.getLong(idx, rep), d.precision, d.scale)
-        case PrimitiveTypeName.BINARY |
-            PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY =>
-          Decimal(BigDecimal(new java.math.BigInteger(
-            g.getBinary(idx, rep).getBytes), d.scale),
-            d.precision, d.scale)
-        case other => throw new IllegalArgumentException(
-          s"unsupported decimal encoding $other")
-      }
-    case other => throw new IllegalArgumentException(
-      s"graft-log streams flat columns and arrays of scalars; got $other")
-  }
-
-  /** INT96 timestamp: 8 LE bytes nanos-of-day + 4 LE bytes Julian
-    * day → micros since epoch (the classic Impala/Hive encoding
-    * Spark still writes by default in some configs). */
-  private def int96ToMicros(b: Array[Byte]): Long = {
-    val buf = java.nio.ByteBuffer.wrap(b)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - 2440588L) * 86400000000L + Math.floorDiv(nanosOfDay, 1000L)
   }
 }
 
@@ -1072,19 +934,11 @@ final class LogTableStream(root: String, schema: StructType)
     val to = end.asInstanceOf[LogStreamOffset].version
     if (to < 0) return Array.empty
     val st = store
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def filesOf(seg: String, v: Long,
-        dvDir: Option[String] = None): Seq[InputPartition] =
-      fs.listStatus(new Path(s"$root/$seg"))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(f => LogStreamPartition(f.getPath.toString, v, None, dvDir)
-          : InputPartition).toSeq
     if (from <= -2L) {
       // the initial snapshot: the live set at `to`, whole (deletion
       // vectors reconciled — the snapshot is the LIVE rows)
-      st.liveSegmentInfos(to).flatMap(s => filesOf(s.name, to,
-        s.dv.map(d => s"$root/${d._1}"))).toArray
+      st.liveSegmentInfos(to).flatMap(s => LogStreamPlanning.filesOf(
+        spark, root, s.name, to, dvDir = s.dv.map(_._1))).toArray
     } else {
       val horizon = st.currentVacuumHorizon()
       if (from + 1 < horizon)
@@ -1101,13 +955,15 @@ final class LogTableStream(root: String, schema: StructType)
               "stream the `t$changes` metadata table for the full " +
               "change feed")
         else if (removes.nonEmpty) Nil // dataChange=false rewrite
-        else adds.flatMap(filesOf(_, v))
+        else adds.flatMap(LogStreamPlanning.filesOf(spark, root, _, v))
       }.toArray
     }
   }
 
+  // the initial snapshot may carry vectors; the factory cannot tell
+  // which range it serves
   override def createReaderFactory(): PartitionReaderFactory =
-    LogStreamPlanning.readerFactory(spark, schema)
+    LogStreamPlanning.readerFactory(spark, schema, vectored = true)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1116,7 +972,9 @@ final class LogTableStream(root: String, schema: StructType)
 final class LogSnapshotBatch(schema: StructType, root: String,
     versionAsOf: Option[Long], timestampAsOf: Option[Long],
     filters: Array[Filter]) extends Batch {
-  override def planInputPartitions(): Array[InputPartition] = {
+  // planned once, so the reader factory knows whether any file of
+  // the scan carries a vector
+  private lazy val partitions: Array[LogStreamPartition] = {
     val spark = SparkSession.active
     val store = LogStore.configured(spark, root)
     require(versionAsOf.isEmpty || timestampAsOf.isEmpty,
@@ -1125,17 +983,14 @@ final class LogSnapshotBatch(schema: StructType, root: String,
       timestampAsOf.map(store.versionAsOf).getOrElse(Long.MaxValue))
     val (segs, _) =
       LogSnapshotPruning.selectSegments(store, version, filters)
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    segs.flatMap { seg =>
-      fs.listStatus(new Path(s"$root/${seg.name}"))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(f => LogStreamPartition(f.getPath.toString, -1L, None,
-          seg.dv.map(d => s"$root/${d._1}")): InputPartition)
-    }.toArray
+    segs.flatMap(seg => LogStreamPlanning.filesOf(spark, root, seg.name,
+      -1L, dvDir = seg.dv.map(_._1))).toArray
   }
+  override def planInputPartitions(): Array[InputPartition] =
+    partitions.toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    LogStreamPlanning.readerFactory(SparkSession.active, schema)
+    LogStreamPlanning.readerFactory(SparkSession.active, schema,
+      vectored = partitions.exists(_.dvFiles.nonEmpty))
 }
 
 /** The segment-pruning kernel of the snapshot path: which live

@@ -287,4 +287,50 @@ class DeletionVectorSpec extends AnyFunSuite {
       "SELECT count(*) FROM gdv.t WHERE v = 'u'").head().getLong(0)
       == 8L, "0,4..10 updated; 1-3 stay deleted")
   }
+
+  test("a vector on the SECOND file of a multi-file segment: the " +
+      "connector snapshot scan, the first micro-batch of " +
+      "readStream.table, LogStore.read() and a SQL UPDATE's row-level " +
+      "scan all drop exactly the vectored rows") {
+    val dir = Files.createTempDirectory("graft-dvmulti").toString
+    spark.conf.set("spark.sql.catalog.gdvm",
+      "graft.sources.GraftLogCatalog")
+    spark.conf.set("spark.sql.catalog.gdvm.root", dir)
+    spark.sql("CREATE TABLE gdvm.t (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('statsCol' = 'id')")
+    val root = s"$dir/t"
+    val store = LogStore.configured(spark, root)
+    // range-partitioned: the first file holds the low ids, the second
+    // the high ones, so the deleted ids sit in the second file only
+    store.append((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
+      .repartitionByRange(2, col("id")))
+    store.deleteWhereDV("id IN (90, 91, 99)")
+    val seg = store.liveSegmentInfos().head
+    val files = new java.io.File(s"$root/${seg.name}").list()
+      .filter(_.endsWith(".parquet")).sorted
+    assert(files.length == 2, s"two data files, got ${files.toSeq}")
+    val vectored = spark.read.parquet(s"$root/${seg.dv.get._1}")
+      .select("file").distinct().as[String].collect().toSeq
+    assert(vectored == Seq(files(1)),
+      s"the vector must name only the second file, got $vectored")
+    val expected = (0L until 100L).filterNot(Set(90L, 91L, 99L)).toSet
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id")).as[Long].collect().toSet
+
+    assert(ids(spark.read.format("graft-log").option("path", root)
+      .option("mode", "snapshot").load()) == expected,
+      "connector snapshot scan")
+    val q = spark.readStream.table("gdvm.t").writeStream
+      .format("memory").queryName("dv_multi_tail").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(ids(spark.table("dv_multi_tail")) == expected,
+      "first micro-batch of readStream.table")
+    assert(ids(store.read()) == expected, "LogStore.read()")
+    // the row-level scan reads the vectored group; its rewrite
+    // carries over exactly the rows that scan returned
+    spark.sql("UPDATE gdvm.t SET v = 'u' WHERE id >= 50")
+    assert(ids(store.read()) == expected, "SQL UPDATE's row-level scan")
+    assert(ids(store.read().where(col("v") === "u")) ==
+      expected.filter(_ >= 50L))
+  }
 }

@@ -146,7 +146,7 @@ class LogStreamSourceSpec extends AnyFunSuite {
   }
 
   test("scalar types round-trip exactly through the executor-side " +
-      "Group converter: long, int, double, string, boolean, date, " +
+      "parquet reader: long, int, double, string, boolean, date, " +
       "timestamp, decimal, binary, null") {
     val t = fresh()
     val df = Seq(
@@ -169,10 +169,10 @@ class LogStreamSourceSpec extends AnyFunSuite {
       .as[(Long, Int, Double, String, Boolean, String, String, String,
         String, Option[String])].collect().toSet
     assert(canon(got) == canon(t.read()),
-      "every scalar must survive the parquet Group conversion exactly")
+      "every scalar must survive the parquet round trip exactly")
   }
 
-  test("ARRAYS of scalars stream through the Group converter: an " +
+  test("ARRAYS of scalars stream through the parquet reader: an " +
       "embedding table's feed round-trips float/double/long arrays " +
       "exactly (standard 3-level list encoding), empty arrays and " +
       "null arrays included") {
@@ -189,7 +189,7 @@ class LogStreamSourceSpec extends AnyFunSuite {
       .as[(Long, Seq[Float], Seq[Double], Option[Seq[Long]])]
       .collect().toSet
     assert(canon(got) == canon(t.read()),
-      "arrays must survive the parquet list conversion exactly")
+      "arrays must survive the parquet list round trip exactly")
   }
 
   test("BATCH feed reads: spark.read over the source equals " +
