@@ -1420,12 +1420,6 @@ class LogStore(spark: SparkSession, val root: String,
     (scanSegments(hit, recordedSchema(version)), hit.size, live.size)
   }
 
-  /** Write `df` as a fresh immutable segment and return its add
-    * action (with [statsCol] min/max when configured) — NOT yet
-    * visible; publication happens in [[commit]]. The stats column is
-    * restricted to numeric/date/timestamp types: their string forms
-    * are quote- and newline-free, which is what keeps the
-    * line-oriented log format parseable without an escaping layer. */
   /** The k = 4 deterministic Bloom bit positions of a key: four
     * 32-bit slices of one md5, each reduced mod [bloomBits] — the
     * same positions whether computed by the Spark build expression
@@ -1440,10 +1434,19 @@ class LogStore(spark: SparkSession, val root: String,
     }
   }
 
-  // (Bloom hexes are built batched in [[segmentsMeta]] — one
-  // distinct-positions job per publish, however many segments and
-  // bloom columns it carries; the hex serialization lives in
-  // [[LogStore.bloomHexOf]].)
+  /** Position `i` (0..3) of [[bloomPositions]] as a Spark expression
+    * over a column: md5 of the value's string spelling, hex slice
+    * `i`, mod [bloomBits] — NULL for a NULL value. The one definition
+    * both Bloom builds use: the in-write observation
+    * ([[writeObserved]]) and [[segmentsMeta]]'s read-back job. (The
+    * hex serialization lives in [[LogStore.bloomHexOf]].) */
+  private def bloomPosCol(c: org.apache.spark.sql.Column,
+      i: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{conv, lit => flit, md5 => fmd5,
+      pmod, substring => fsubstr}
+    pmod(conv(fsubstr(fmd5(c.cast("string").cast("binary")), 1 + 8 * i, 8),
+      16, 10).cast("long"), flit(bloomBits.toLong)).cast("int")
+  }
 
   /** Exact row count — and, when `statCols` is non-empty, exact
     * column BOUNDS — of a written segment directory from its parquet
@@ -1457,15 +1460,22 @@ class LogStore(spark: SparkSession, val root: String,
     * family (decimal integer digits either way) and strings (the
     * footer stores the exact bytes; parquet's STRING comparator and
     * Spark's UTF8String ordering are both unsigned-lexicographic).
-    * Floating point (NaN poisons footer stats), decimals, dates and
-    * timestamps keep the aggregation-job path — their spellings are
-    * not trivially equal. Returns (rows, None) when any requested
-    * chunk lacks usable statistics (e.g. oversized string bounds
-    * dropped by the writer) — the caller falls back to the job. */
+    * Dates are footer INT32 epoch days, spelled here the way
+    * `cast(min(d) AS STRING)` spells them (`yyyy-MM-dd`, proleptic
+    * Gregorian) — but only where the two provably agree: years
+    * 0001–9999, and either a file Spark 3+ wrote without the legacy
+    * calendar rebase or days on or after the 1582-10-15 cutover (where
+    * the rebase is the identity); any other date falls back to the
+    * job. Floating point (NaN poisons footer stats), decimals and
+    * timestamps keep the aggregation-job path: timestamps because
+    * Spark writes them as INT96, which carries no footer statistics.
+    * Returns (rows, None) when any requested chunk lacks usable
+    * statistics (e.g. oversized string bounds dropped by the writer)
+    * — the caller falls back to the job. */
   private def footerMeta(name: String,
       statCols: Seq[(String, String, org.apache.spark.sql.types.DataType)])
       : (Long, Option[Map[String, (String, String)]]) = {
-    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.sql.types.{DateType, StringType}
     val conf = spark.sparkContext.hadoopConfiguration
     var rows = 0L
     // accumulated per LOGICAL column name: (min, max) as raw values
@@ -1473,6 +1483,8 @@ class LogStore(spark: SparkSession, val root: String,
     val strB = scala.collection.mutable.HashMap
       .empty[String, (Array[Byte], Array[Byte])]
     var usable = true
+    // every file's footer days are the proleptic days Spark reads
+    var prolepticDays = true
     fs.listStatus(new Path(s"$root/$name")).map(_.getPath)
       .filter { p =>
         val n = p.getName
@@ -1484,6 +1496,18 @@ class LogStore(spark: SparkSession, val root: String,
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try {
           rows += r.getRecordCount
+          if (statCols.exists(_._3 == DateType)) {
+            val kv = r.getFooter.getFileMetaData.getKeyValueMetaData
+            // Spark's own read-side rule (DataSourceUtils.
+            // datetimeRebaseSpec): no rebase for a Spark 3+ file that
+            // does not carry the legacy-calendar key (the keys are
+            // Spark's SPARK_VERSION_METADATA_KEY and
+            // SPARK_LEGACY_DATETIME_METADATA_KEY)
+            prolepticDays = prolepticDays &&
+              Option(kv.get("org.apache.spark.version"))
+                .exists(_ >= "3.0.0") &&
+              !kv.containsKey("org.apache.spark.legacyDateTime")
+          }
           if (statCols.nonEmpty) {
             val blocks = r.getFooter.getBlocks
             blocks.forEach { b =>
@@ -1533,43 +1557,49 @@ class LogStore(spark: SparkSession, val root: String,
           }
         } finally r.close()
       }
+    val dates = statCols.collect { case (c, _, DateType) => c }.toSet
+    def day(d: Long) = java.time.LocalDate.ofEpochDay(d)
+    val cutover = java.time.LocalDate.of(1582, 10, 15).toEpochDay
+    val datesSpellable = longB.forall { case (c, (lo, hi)) =>
+      !dates(c) || (day(lo).getYear >= 1 && day(hi).getYear <= 9999 &&
+        (prolepticDays || lo >= cutover))
+    }
     if (statCols.isEmpty) (rows, None)
-    else if (!usable) (rows, None)
+    else if (!usable || !datesSpellable) (rows, None)
     else (rows, Some(
       longB.map { case (c, (lo, hi)) =>
-        c -> (lo.toString, hi.toString) }.toMap ++
+        c -> (if (dates(c)) (day(lo).toString, day(hi).toString)
+          else (lo.toString, hi.toString)) }.toMap ++
       strB.map { case (c, (lo, hi)) =>
         c -> (new String(lo, StandardCharsets.UTF_8),
           new String(hi, StandardCharsets.UTF_8)) }.toMap))
   }
 
-  /** The add-action metadata (stats + bloom) of an ALREADY-written
-    * segment directory, computed by reading it back — shared by
-    * [[writeSegment]] (the one-DataFrame-one-segment path) and
-    * [[optimize]] (which writes many segments in one clustered pass
-    * and publishes each directory separately). */
-  private def segmentMeta(name: String, columns: Seq[String],
-      mapping: Map[String, String] = Map.empty,
-      physSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Segment =
-    segmentsMeta(Seq(name), columns, mapping, physSchema).head
-
-  /** [[segmentMeta]] for a BATCH of directories sharing one write
-    * schema — the multi-segment publishes (clustered ingest, optimize
-    * buckets, staged DSv2 commits) otherwise pay one stats job and
-    * one bloom job PER SEGMENT. Here every segment's bounds come out
-    * of ONE grouped aggregation and every segment×column Bloom out of
-    * ONE distinct-positions job, with rows from the parquet footers —
-    * publish cost is one fixed set of jobs however many segments the
-    * commit carries. */
+  /** The add actions (rows, stats, Bloom) of a BATCH of ALREADY-written
+    * segment directories sharing one write schema. Rows always come
+    * from the parquet footers, and so do the bounds wherever
+    * [[footerMeta]] can spell them; otherwise every segment's bounds
+    * come out of ONE grouped aggregation over the read-back files.
+    *
+    * Bloom filters: `observed` carries the (rows, (segment, Bloom
+    * column) → bits) the write job itself observed
+    * ([[writeObserved]] — the engine's own write kernels, whose rows
+    * it plans), and then no Bloom job runs; its row count must equal
+    * the footers' total, else the publish throws before any commit (a
+    * filter that missed a row would be a false negative). Without it
+    * (the connector's executor-staged files) every segment × column
+    * Bloom comes out of ONE bit_or-word job over the read-back files.
+    * Either way, publish cost is one fixed set of jobs at most,
+    * however many segments the commit carries. */
   private def segmentsMeta(names: Seq[String], columns: Seq[String],
       mapping: Map[String, String] = Map.empty,
-      physSchema: Option[org.apache.spark.sql.types.StructType] = None)
+      physSchema: Option[org.apache.spark.sql.types.StructType] = None,
+      observed: Option[(Long, Map[(String, String), Array[Boolean]])] =
+        None)
       : Seq[Segment] = {
-    import org.apache.spark.sql.functions.{array, col => fcol, conv,
+    import org.apache.spark.sql.functions.{array, col => fcol,
       element_at, explode, expr => fexpr, lit => flit, max => fmax,
-      md5 => fmd5, min => fmin, pmod, split => fsplit,
-      substring => fsubstr}
+      min => fmin, split => fsplit}
     import org.apache.spark.sql.types.{DateType, NumericType, StringType,
       TimestampType}
     // `columns` and the configured stats/bloom names are LOGICAL;
@@ -1581,16 +1611,17 @@ class LogStore(spark: SparkSession, val root: String,
       .filter(columns.contains)
     val wantedBlooms = (bloomCol.toSeq ++ bloomCols).distinct
       .filter(columns.contains)
-    // footer-derivable bounds (integral/string — see [[footerMeta]])
-    // need the physical types WITHOUT building the read-back relation;
-    // only writers that passed their physical schema qualify
+    // footer-derivable bounds (integral/string/date — see
+    // [[footerMeta]]) need the physical types WITHOUT building the
+    // read-back relation; only writers that passed their physical
+    // schema qualify
     val footerCols: Seq[(String, String,
         org.apache.spark.sql.types.DataType)] =
       physSchema match {
         case Some(sc) if wanted.nonEmpty &&
             wanted.forall(c => sc(phys(c)).dataType match {
               case ByteType | ShortType | IntegerType | LongType |
-                   StringType => true
+                   StringType | DateType => true
               case _ => false
             }) =>
           wanted.map(c => (c, phys(c), sc(phys(c)).dataType))
@@ -1644,47 +1675,51 @@ class LogStore(spark: SparkSession, val root: String,
         tagged.groupBy(fcol("_seg_")).agg(exprs.head, exprs.tail: _*)
           .collect().map(r => r.getString(0) -> r).toMap
       }
-    // ONE bit_or-slot aggregation job covers every segment × bloom
-    // column. Each position folds into its 64-bit word driver-free:
-    // slot = p div 64, bit = p mod 64 — a bijection, so the final bit
-    // array is identical to the distinct-positions build this
-    // replaces. The scale difference is the shuffle: map-side partial
-    // aggregation collapses every partition to ≤ segments × columns ×
-    // ⌈bloomBits/64⌉ words BEFORE the exchange, where distinct()
-    // shuffled all 4×rows position rows (guide §2.3 "aggregate before
-    // you shuffle"); the driver collect stays O(bits).
+    observed.foreach { case (seen, _) =>
+      val footerRows = rowsOf.values.sum
+      if (seen != footerRows)
+        throw new IllegalStateException(s"segment write observed $seen " +
+          s"rows but its parquet footers hold $footerRows — refusing to " +
+          "publish Bloom filters that may miss rows")
+    }
+    // Without an observation: ONE bit_or-slot aggregation job covers
+    // every segment × bloom column. Each position folds into its
+    // 64-bit word driver-free: slot = p div 64, bit = p mod 64 — a
+    // bijection onto the bit array. Map-side partial aggregation
+    // collapses every partition to ≤ segments × columns ×
+    // ⌈bloomBits/64⌉ words BEFORE the exchange, and the driver
+    // collect stays O(bits).
     val bloomHex: Map[(String, String), String] =
       if (wantedBlooms.isEmpty) Map.empty
       else {
-        val posDfs = wantedBlooms.map { c =>
-          val posCols = (0 until 4).map { i =>
-            pmod(conv(fsubstr(fmd5(fcol(phys(c)).cast("string")
-                .cast("binary")), 1 + 8 * i, 8), 16, 10).cast("long"),
-              flit(bloomBits.toLong)).cast("int")
-          }
-          tagged.where(fcol(phys(c)).isNotNull)
-            .select(fcol("_seg_"), flit(c).as("_bcol_"),
-              explode(array(posCols: _*)).as("_p_"))
-        }
         val bits = scala.collection.mutable.HashMap
           .empty[(String, String), Array[Boolean]]
-        posDfs.reduce(_.unionByName(_))
-          .groupBy(fcol("_seg_"), fcol("_bcol_"),
-            fexpr("_p_ div 64").cast("int").as("_s_"))
-          .agg(fexpr("bit_or(shiftleft(1L, _p_ % 64))").as("_w_"))
-          .collect()
-          .foreach { r =>
-            val arr = bits.getOrElseUpdate(
-              (r.getString(0), r.getString(1)),
-              new Array[Boolean](bloomBits))
-            val base = r.getInt(2) * 64
-            val w = r.getLong(3)
-            var k = 0
-            while (k < 64) {
-              if (((w >>> k) & 1L) != 0L) arr(base + k) = true
-              k += 1
-            }
-          }
+        observed match {
+          case Some((_, seen)) => bits ++= seen
+          case None =>
+            wantedBlooms.map { c =>
+              tagged.where(fcol(phys(c)).isNotNull)
+                .select(fcol("_seg_"), flit(c).as("_bcol_"),
+                  explode(array((0 until 4)
+                    .map(bloomPosCol(fcol(phys(c)), _)): _*)).as("_p_"))
+            }.reduce(_.unionByName(_))
+              .groupBy(fcol("_seg_"), fcol("_bcol_"),
+                fexpr("_p_ div 64").cast("int").as("_s_"))
+              .agg(fexpr("bit_or(shiftleft(1L, _p_ % 64))").as("_w_"))
+              .collect()
+              .foreach { r =>
+                val arr = bits.getOrElseUpdate(
+                  (r.getString(0), r.getString(1)),
+                  new Array[Boolean](bloomBits))
+                val base = r.getInt(2) * 64
+                val w = r.getLong(3)
+                var k = 0
+                while (k < 64) {
+                  if (((w >>> k) & 1L) != 0L) arr(base + k) = true
+                  k += 1
+                }
+              }
+        }
         bits.map { case (k, arr) =>
           k -> LogStore.bloomHexOf(arr)
         }.toMap
@@ -1792,6 +1827,94 @@ class LogStore(spark: SparkSession, val root: String,
     }
   }
 
+  /** The configured Bloom columns a write of `columns` carries, as
+    * (logical, physical) pairs under the write's column mapping `m`. */
+  private def bloomsOf(columns: Seq[String],
+      m: Map[String, String]): Seq[(String, String)] =
+    (bloomCol.toSeq ++ bloomCols).distinct.filter(columns.contains)
+      .map(c => c -> m.getOrElse(c, c))
+
+  /** What a segment write observed in its own job: its row count and
+    * the Bloom bits per (bucket, logical Bloom column). */
+  private final case class ObservedWrite(rows: Long,
+      bits: Map[(Int, String), Array[Boolean]])
+
+  /** Run `write` over `physDf` — segment rows as they land, under
+    * PHYSICAL names — and observe, in that same job, the row count and
+    * every (bucket, Bloom column)'s bit positions: the per-file
+    * statistics the Delta Lake paper collects inside the write tasks,
+    * so the publish ([[segmentsMeta]]) needs no read-back job.
+    * `blooms` are [[bloomsOf]]'s pairs; `bucket` names an int column
+    * of `physDf` in [0, `buckets`) saying which output segment a row
+    * lands in (none: one segment, bucket 0). Positions are
+    * [[bloomPosCol]]'s, computed once per row in a projection below
+    * the observation; a NULL value sets no bit. Bucket b's position p
+    * is bit b × bloomBits + p of a run of `bitmap_construct_agg`
+    * bitmaps ([[LogStore.BitmapBits]] bits each), one aggregate per
+    * position × bitmap.
+    *
+    * Returns the rows and the bits keyed by (bucket, logical column),
+    * or None — and the publish reads the files back as before — when
+    * the write carries no Bloom column (then no observe node is added
+    * and the write plan is the plain one), when its buckets would need
+    * more than [[LogStore.ObservedBitmaps]] bitmaps, or when the
+    * observation has not arrived [[LogStore.ObservationWait]] after
+    * the write returned. */
+  private def writeObserved(physDf: DataFrame, blooms: Seq[(String, String)],
+      bucket: Option[String] = None, buckets: Int = 1)(
+      write: DataFrame => Unit): Option[ObservedWrite] = {
+    import org.apache.spark.sql.functions.{bitmap_construct_agg,
+      col => fcol, count => fcount, lit => flit, when => fwhen}
+    val width = LogStore.BitmapBits.toLong
+    val bitmaps =
+      ((buckets.toLong * bloomBits + width - 1) / width).toInt
+    if (blooms.isEmpty || bitmaps > LogStore.ObservedBitmaps) {
+      write(physDf)
+      return None
+    }
+    val posNames = for (k <- blooms.indices; i <- 0 until 4)
+      yield s"_graft_bloom_pos_${k}_$i"
+    val withPos = physDf.select(fcol("*") +: posNames.indices.map { n =>
+      val p = bloomPosCol(fcol(blooms(n / 4)._2), n % 4).cast("long")
+      bucket.fold(p)(b => p + fcol(b).cast("long") * bloomBits.toLong)
+        .as(posNames(n))
+    }: _*)
+    val aggs = for (n <- posNames; j <- 0 until bitmaps) yield {
+      val g = fcol(n)
+      bitmap_construct_agg(
+        fwhen(g >= j * width && g < (j + 1) * width, g - j * width))
+        .as(s"${n}_$j")
+    }
+    val obs = org.apache.spark.sql.Observation()
+    write(withPos.observe(obs, fcount(flit(1)).as("_rows_"), aggs: _*)
+      .drop(posNames: _*))
+    val row = try Some(scala.concurrent.Await.result(obs.future,
+        LogStore.ObservationWait))
+      catch { case _: java.util.concurrent.TimeoutException => None }
+    row.map { r =>
+      val bits = scala.collection.mutable.HashMap
+        .empty[(Int, String), Array[Boolean]]
+      for ((n, k) <- posNames.zipWithIndex; j <- 0 until bitmaps) {
+        val bm = r.getAs[Array[Byte]](s"${n}_$j")
+        for (b <- bm.indices if bm(b) != 0; t <- 0 until 8
+            if ((bm(b) >> t) & 1) != 0) {
+          val g = j * width + b * 8 + t
+          bits.getOrElseUpdate(((g / bloomBits).toInt, blooms(k / 4)._1),
+            new Array[Boolean](bloomBits))((g % bloomBits).toInt) = true
+        }
+      }
+      ObservedWrite(r.getLong(0), bits.toMap)
+    }
+  }
+
+  /** Write `df` as a fresh immutable segment and return its add action
+    * — NOT yet visible; publication happens in [[commit]]. Defaults
+    * and CHECK constraints apply first, then column mapping; the
+    * write job itself observes the Bloom bits ([[writeObserved]]), so
+    * with footer-spellable stats (see [[footerMeta]]) the whole call
+    * is ONE Spark job. Every engine write of one segment lands here:
+    * append, appendStream, mergeKeyed, applyChangesKeyed,
+    * deleteWhere/deleteRange and compact. */
   private def writeSegment(df: DataFrame,
       evolvedB64: Option[String] = None): Segment = {
     val name = s"seg-${java.util.UUID.randomUUID().toString.take(12)}"
@@ -1800,8 +1923,12 @@ class LogStore(spark: SparkSession, val root: String,
     // default-bearing column must see the value that lands
     val padded = padDefaults(df)
     val physDf = toPhysicalDf(enforceChecks(padded), m)
-    physDf.write.parquet(s"$root/$name")
-    segmentMeta(name, padded.columns, m, Some(physDf.schema))
+    val observed = writeObserved(physDf, bloomsOf(padded.columns, m))(
+      _.write.parquet(s"$root/$name"))
+    segmentsMeta(Seq(name), padded.columns, m, Some(physDf.schema),
+      observed.map(o =>
+        o.rows -> o.bits.map { case ((_, c), a) => (name, c) -> a }))
+      .head
   }
 
   /** CREATE-time column DEFAULTs materialize at write: a programmatic
@@ -3172,8 +3299,8 @@ class LogStore(spark: SparkSession, val root: String,
     * range partitioner over the cluster key) across the live data and
     * one parquet write, partitioned so each range bucket lands as its
     * own directory in a single pass (never one filtered scan per
-    * output segment); the per-segment stats reads that follow are a
-    * 2-number agg per segment. */
+    * output segment), which also observes every bucket's Bloom bits;
+    * rows and footer-spellable bounds are then footer reads. */
   def optimize(targetSegments: Int, clusterBy: org.apache.spark.sql.Column*)
       : OptimizeResult = {
     require(targetSegments >= 1, "targetSegments must be positive")
@@ -3189,12 +3316,16 @@ class LogStore(spark: SparkSession, val root: String,
       old.size, adds.size)
   }
 
-  /** The clustered-rewrite kernel shared by [[optimize]] and
-    * [[optimizeWhere]]: one range shuffle (or round-robin when no
+  /** The clustered-rewrite kernel shared by [[optimize]],
+    * [[optimizeWhere]] (and so [[maintainLayout]]) and
+    * [[appendClustered]]: one range shuffle (or round-robin when no
     * cluster key) across `data` and ONE partitioned parquet write —
-    * every bucket lands as its own directory in a single pass, never
-    * one filtered scan per output segment — then each bucket renamed
-    * into place and its stats read back. Returns the add actions;
+    * every bucket (`_opt_bucket`, the output partition) lands as its
+    * own directory in a single pass, never one filtered scan per
+    * output segment — then each bucket renamed into place. The write
+    * job observes every bucket's Bloom bits ([[writeObserved]]); rows
+    * and footer-spellable bounds come from the footers, so only other
+    * stats types cost a read-back job. Returns the add actions;
     * nothing is published until the caller commits. */
   private def rewriteClustered(data: DataFrame, targetSegments: Int,
       clusterBy: Seq[org.apache.spark.sql.Column]): Seq[Segment] = {
@@ -3215,22 +3346,30 @@ class LogStore(spark: SparkSession, val root: String,
       if (m.isEmpty) bucketed
       else bucketed.select(data.columns.toSeq.map(c =>
         fcol(c).as(m.getOrElse(c, c))) :+ fcol("_opt_bucket"): _*)
-    physical.write.partitionBy("_opt_bucket").parquet(tmp)
+    val observed = writeObserved(physical, bloomsOf(data.columns, m),
+      Some("_opt_bucket"), targetSegments)(
+      _.write.partitionBy("_opt_bucket").parquet(tmp))
     val buckets = fs.listStatus(new Path(tmp))
       .map(_.getPath.getName).filter(_.startsWith("_opt_bucket="))
-      .sortBy(_.stripPrefix("_opt_bucket=").toInt)
-    val names = buckets.toSeq.map { b =>
+      .map(_.stripPrefix("_opt_bucket=").toInt).sorted.toSeq
+    val names = buckets.map { b =>
       val name = s"seg-${java.util.UUID.randomUUID().toString.take(12)}"
-      if (!fs.rename(new Path(s"$tmp/$b"), new Path(s"$root/$name")))
-        throw new java.io.IOException(s"rename of $b to $name failed")
+      if (!fs.rename(new Path(s"$tmp/_opt_bucket=$b"),
+          new Path(s"$root/$name")))
+        throw new java.io.IOException(s"rename of bucket $b to $name failed")
       name
     }
-    // one batched stats/bloom pass over every bucket; the bucket
-    // files hold the physical projection minus the partition column —
-    // that schema is known, skip re-inference
+    val nameOf = buckets.zip(names).toMap
+    // one batched stats pass over every bucket; the bucket files hold
+    // the physical projection minus the partition column — that schema
+    // is known, skip re-inference. The observed Bloom bits are keyed by
+    // bucket (the observation covers buckets below targetSegments only:
+    // any other bucket reads its files back)
     val adds = segmentsMeta(names, data.columns, m,
       Some(org.apache.spark.sql.types.StructType(physical.schema.fields
-        .filterNot(_.name == "_opt_bucket"))))
+        .filterNot(_.name == "_opt_bucket"))),
+      observed.filter(_ => buckets.forall(_ < targetSegments)).map(o =>
+        o.rows -> o.bits.map { case ((b, c), a) => (nameOf(b), c) -> a }))
     fs.delete(new Path(tmp), true)
     adds
   }
@@ -3861,7 +4000,15 @@ class LogStore(spark: SparkSession, val root: String,
     * (when [statsCol] is one of `keyCols`) — the same clustered-table
     * economics as [[mergeKeyed]]. `deleteKeys` must carry every key
     * column. An all-empty change set (no upserts, no deletes)
-    * advances the fence with a txn-only commit — no empty segment. */
+    * advances the fence with a txn-only commit — no empty segment.
+    *
+    * NULL keys: the uniqueness and disjointness gates GROUP by the
+    * key, so NULL keys compare equal there — a NULL key in both
+    * `upserts` and `deleteKeys` throws "not a NET set", and two
+    * NULL-key upserts throw "not unique". The match itself is key
+    * equality, where NULL equals nothing: a NULL-key upsert replaces
+    * no stored row (it lands as an insert) and a NULL delete key
+    * removes none. */
   def applyChangesKeyed(upserts: DataFrame, deleteKeys: DataFrame,
       keyCols: Seq[String], batchId: Long): Long = {
     import org.apache.spark.sql.functions.{col => fcol, count => fcount,
@@ -4135,21 +4282,6 @@ class LogStore(spark: SparkSession, val root: String,
     VacuumResult(v, doomed, trimmed)
   }
 
-  /** Publish ALREADY-WRITTEN segment directories as ONE append
-    * commit — the driver-side commit half of a distributed write path
-    * (the DSv2 `graft-log` sink): executors write parquet files into
-    * staged `seg-*` directories, the driver calls this once with the
-    * directory names. Per segment the usual add-action metadata is
-    * computed (skipping stats + Bloom per this store's config — the
-    * same [[segmentMeta]] every internal writer uses), schema
-    * enforcement runs against the recorded metadata action, and the
-    * commit lands with blind-append retry semantics (content does not
-    * depend on the snapshot, so rebase-and-retry is safe). With `txn`
-    * this is the exactly-once streaming-epoch form: a replayed epoch
-    * (txn ≤ the recorded fence) publishes NOTHING and returns -1 — the
-    * caller owns deleting its staged directories. Until this returns,
-    * the staged segments are invisible to every reader; if the caller
-    * dies first they are crash orphans [[vacuum]] reclaims. */
   /** Publish a copy-on-write REPLACE as one commit: already-written
     * segment directories (`adds` — staged by a distributed write,
     * e.g. the DSv2 row-level-operation path behind SQL UPDATE /
@@ -4246,6 +4378,22 @@ class LogStore(spark: SparkSession, val root: String,
       props = propsAct)
   }
 
+  /** Publish ALREADY-WRITTEN segment directories as ONE append
+    * commit — the driver-side commit half of a distributed write path
+    * (the DSv2 `graft-log` sink): executors write parquet files into
+    * staged `seg-*` directories, the driver calls this once with the
+    * directory names. Per segment the usual add-action metadata is
+    * computed (skipping stats + Bloom per this store's config by
+    * [[segmentsMeta]]; the executors' rows were never planned here, so
+    * the Bloom filters come from its read-back job), schema
+    * enforcement runs against the recorded metadata action, and the
+    * commit lands with blind-append retry semantics (content does not
+    * depend on the snapshot, so rebase-and-retry is safe). With `txn`
+    * this is the exactly-once streaming-epoch form: a replayed epoch
+    * (txn ≤ the recorded fence) publishes NOTHING and returns -1 — the
+    * caller owns deleting its staged directories. Until this returns,
+    * the staged segments are invisible to every reader; if the caller
+    * dies first they are crash orphans [[vacuum]] reclaims. */
   def publishSegments(names: Seq[String],
       writeSchema: org.apache.spark.sql.types.StructType,
       txn: Option[Long] = None): Long = {
@@ -4297,6 +4445,19 @@ object LogStore {
   /** Log rows per bucket of a multi-part checkpoint (bounded above by
     * the table's `checkpointShardRows`). */
   private val CheckpointBucketRows = 1024
+
+  /** Bits of one `bitmap_construct_agg` bitmap (Spark's fixed size). */
+  private val BitmapBits = 32768
+
+  /** Most bitmaps per observed Bloom position a segment write may use
+    * — buckets × bloomBits up to 8 × 32,768 bits (64 output segments at
+    * the default 4,096 bits); wider rewrites read their files back. */
+  private val ObservedBitmaps = 8
+
+  /** How long a write waits, after its job returned, for its observed
+    * metrics to arrive over the listener bus before it falls back to
+    * reading the files back. */
+  private val ObservationWait = scala.concurrent.duration.Duration(30, "s")
 
   /** Hex serialization of a Bloom bit array — 4 bits per hex digit,
     * bit (4j+k) contributing 2^k to digit j (the grammar every probe

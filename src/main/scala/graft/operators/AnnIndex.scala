@@ -584,7 +584,7 @@ object AnnIndex {
     * POSITION (the [[Similarity.ivfPqTopK]] rule) plus the flattened
     * residual sub-codebooks — everything [[pqAssignExpr]]/encode/ADC
     * need, loaded from the index tables alone. */
-  private final case class PqBook(cents: Array[(Seq[Float], Double)],
+  private[graft] final case class PqBook(cents: Array[(Seq[Float], Double)],
       centFlat: Seq[Double], cwFlat: Seq[Double], ccFlat: Seq[Double],
       m: Int, sub: Int, ksub: Int)
 
@@ -593,7 +593,7 @@ object AnnIndex {
 
   /** Per-row argmax cell as the dense centroid position — ties to the
     * lowest position, exactly [[Similarity.ivfPqTopK]]'s rule. */
-  private def pqAssignExpr(book: PqBook): Column =
+  private[graft] def pqAssignExpr(book: PqBook): Column =
     (-greatest(book.cents.zipWithIndex.map { case ((ce, cn), pos) =>
       struct(pqCellCos(ce, cn).as("c"), lit(-pos).as("negpos"))
     }: _*).getField("negpos")).cast("int")
@@ -606,7 +606,7 @@ object AnnIndex {
     * greatest-of-(c, -pos)'s keep-FIRST-on-tie rule — so the argmax
     * is bit-identical to the expression's, without the second corpus
     * TakeOrdered job it used to cost. */
-  private def assignPosDriver(emb: Seq[Float], nrm: Double,
+  private[graft] def assignPosDriver(emb: Seq[Float], nrm: Double,
       cents: Array[(Seq[Float], Double)]): Int = {
     def dot(a: Seq[Float], b: Seq[Float]): Double = {
       val n = math.min(a.length, b.length)

@@ -130,4 +130,67 @@ class FooterStatsSpec extends AnyFunSuite {
     val (_, scanned, live) = store.readRange("0", "10")
     assert(live == 4 && scanned == 1)
   }
+
+  private def dates(ds: Option[String]*) =
+    ds.zipWithIndex.map { case (d, i) => (i.toLong, d) }.toDF("id", "s")
+      .select(col("id"), col("s").cast("date").as("d"))
+
+  test("date bounds (pre-1970, leap day, far years) match the " +
+      "aggregation's") {
+    val root = tmp() + "/date"
+    val store = new LogStore(spark, root, statsCol = Some("d"))
+    store.append(dates(Some("1969-12-31"), Some("1900-01-01"),
+      Some("1970-01-01"), None, Some("2024-02-29")))
+    store.append(dates(Some("1583-01-01"), Some("9999-12-31")))
+    store.append(dates(Some("1969-07-20")))
+    // before the 1582 Gregorian cutover: Spark writes proleptic days
+    // (no legacy rebase), which the footer spells as the cast does
+    store.append(dates(Some("0001-01-01"), Some("1000-06-15")))
+    checkBounds(store, root, "d")
+    assert(store.liveSegmentInfos().head.boundsOf("d").map(b =>
+      (b._1, b._2)).contains(("1900-01-01", "2024-02-29")))
+    // and the bounds prune like any other stats column
+    val (df, scanned, live) = store.readRangeOn("d", "2025-01-01",
+      "2025-12-31")
+    assert(live == 4 && scanned == 1 && df.count() == 0)
+  }
+
+  test("all-null date column records no bounds; mixed ignores nulls") {
+    val root = tmp() + "/dnull"
+    val store = new LogStore(spark, root, statsCol = Some("d"))
+    store.append(dates(None, None))
+    store.append(dates(None, Some("1955-05-05"), Some("1931-01-02")))
+    checkBounds(store, root, "d")
+    val infos = store.liveSegmentInfos()
+    assert(infos.exists(_.min.isEmpty) && infos.exists(
+      _.boundsOf("d").exists(b =>
+        b._1 == "1931-01-02" && b._2 == "1955-05-05")))
+  }
+
+  test("a multi-file date segment folds every file's footer bounds") {
+    val root = tmp() + "/dmulti"
+    val store = new LogStore(spark, root, statsCol = Some("d"),
+      statsCols = Seq("id"))
+    store.append(spark.range(0, 3000).select(col("id"),
+      date_add(lit(java.sql.Date.valueOf("1960-01-01")),
+        col("id").cast("int")).as("d")).repartitionByRange(3, col("id")))
+    val seg = store.liveSegmentInfos().head
+    assert(new java.io.File(s"$root/${seg.name}").list()
+      .count(_.endsWith(".parquet")) == 3)
+    checkBounds(store, root, "d")
+    checkBounds(store, root, "id")
+  }
+
+  test("dates the footer cannot spell identically fall back to the " +
+      "aggregation and stay byte-identical") {
+    val root = tmp() + "/dfar"
+    val store = new LogStore(spark, root, statsCol = Some("d"))
+    // year 10000 spells "+10000-01-01": outside 0001-9999, the job path
+    store.append(spark.range(0, 3).select(col("id"),
+      date_add(lit(java.sql.Date.valueOf("9999-12-31")),
+        col("id").cast("int")).as("d")))
+    checkBounds(store, root, "d")
+    assert(store.liveSegmentInfos().head.boundsOf("d")
+      .exists(_._2.startsWith("+10000")))
+  }
 }

@@ -1,0 +1,82 @@
+package graft.catalog
+
+import java.nio.file.Files
+
+import org.apache.spark.TestBus
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** Spark-job budgets of the table layer's hot paths: the exact number
+  * of jobs each call starts, counted by a listener after the bus has
+  * drained. A regression (an extra read-back, probe or collect) fails
+  * here instead of hiding in benchmark noise. The table shape is the
+  * benchmark's churn table: stats on `k`, a Bloom filter on `sk`,
+  * deletion vectors on. Every write here observes its Bloom bits in
+  * its own job, so none of these counts includes a read-back Bloom
+  * build (which cost two jobs per publish). */
+class JobBudgetSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  /** The Spark jobs `body` starts. */
+  private def jobsOf(body: => Any): Int = {
+    // suites share the session: a stream left running would add jobs
+    spark.streams.active.foreach(_.stop())
+    TestBus.jobsOf(spark.sparkContext)(body)
+  }
+
+  private def churnTable(): LogStore = {
+    val root = Files.createTempDirectory("graft-budget").toString + "/t"
+    val store = new LogStore(spark, root, statsCol = Some("k"),
+      bloomCol = Some("sk"), dvDeletes = true)
+    store.create(rows(Nil).schema)
+    store
+  }
+
+  private def rows(ks: Seq[Long]) =
+    ks.map(k => (k, s"key-$k", 1L)).toDF("k", "sk", "v")
+
+  test("append with stats and a Bloom column is one job (the write)") {
+    val store = churnTable()
+    store.append(rows(1L to 200L))
+    assert(jobsOf(store.append(rows(201L to 400L))) == 1)
+  }
+
+  test("append with DATE stats is one job (footer bounds)") {
+    val root = Files.createTempDirectory("graft-budget").toString + "/d"
+    val store = new LogStore(spark, root, statsCol = Some("d"))
+    def days(lo: Int) = (lo until lo + 100).map(i => (i.toLong, i))
+      .toDF("id", "n").select(col("id"),
+        date_add(lit(java.sql.Date.valueOf("1969-12-01")), col("n")).as("d"))
+    store.append(days(0))
+    assert(jobsOf(store.append(days(100))) == 1)
+    assert(store.liveSegmentInfos().last.boundsOf("d").map(b =>
+      (b._1, b._2)).contains(("1970-03-11", "1970-06-18")))
+  }
+
+  test("mergeKeyed on the churn table is 11 jobs") {
+    val store = churnTable()
+    store.append(rows(1L to 200L))
+    store.append(rows(201L to 400L))
+    assert(jobsOf(store.mergeKeyed(rows(Seq(5L, 250L, 401L)),
+      Seq("k"))) == 11)
+  }
+
+  test("maintainLayout when it triggers is 2 jobs") {
+    val store = churnTable()
+    store.append(rows(1L to 200L))
+    store.append(rows(201L to 400L))
+    assert(jobsOf(store.maintainLayout(1L << 20, 2)) == 2)
+    assert(store.liveSegmentInfos().size == 1)
+  }
+
+  test("optimize into two clustered segments is 3 jobs") {
+    val store = churnTable()
+    store.append(rows(1L to 200L))
+    store.append(rows(201L to 400L))
+    assert(jobsOf(store.optimize(2, col("k"))) == 3)
+    assert(store.liveSegmentInfos().size == 2)
+  }
+}

@@ -1664,4 +1664,32 @@ class LogStoreSpec extends AnyFunSuite {
     val (_, o2b, l2b) = r2.pointLookupOn("k", "k3")
     assert(o2b <= l2b)
   }
+
+  test("applyChangesKeyed: NULL keys compare equal in the NET-set " +
+      "gates but never match a stored row") {
+    val t = fresh()
+    t.append(Seq((Some(1L), "a"), (None, "old")).toDF("id", "v"))
+    val before = t.latestVersion()
+    val nullUp = Seq((None: Option[Long], "x")).toDF("id", "v")
+    // a NULL key in both upserts and deletes groups as ONE key
+    val e = intercept[IllegalArgumentException](t.applyChangesKeyed(
+      nullUp, Seq(None: Option[Long]).toDF("id"), Seq("id"), 1L))
+    assert(e.getMessage.contains("not a NET set"))
+    // two NULL-key upserts are one duplicated key
+    val d = intercept[IllegalArgumentException](t.applyChangesKeyed(
+      Seq((None: Option[Long], "x"), (None, "y")).toDF("id", "v"),
+      Seq.empty[Option[Long]].toDF("id"), Seq("id"), 1L))
+    assert(d.getMessage.contains("not unique"))
+    assert(t.latestVersion() == before)
+    // the match is key EQUALITY: a NULL-key upsert replaces nothing
+    // and lands beside the stored NULL-key row
+    t.applyChangesKeyed(nullUp, Seq.empty[Option[Long]].toDF("id"),
+      Seq("id"), 1L)
+    assert(t.read().where(col("id").isNull).select("v").as[String]
+      .collect().toSet == Set("old", "x"))
+    // and a NULL delete key removes nothing
+    t.applyChangesKeyed(Seq.empty[(Option[Long], String)].toDF("id", "v"),
+      Seq(None: Option[Long]).toDF("id"), Seq("id"), 2L)
+    assert(t.read().count() == 3)
+  }
 }
