@@ -1888,10 +1888,7 @@ class LogStore(spark: SparkSession, val root: String,
     val obs = org.apache.spark.sql.Observation()
     write(withPos.observe(obs, fcount(flit(1)).as("_rows_"), aggs: _*)
       .drop(posNames: _*))
-    val row = try Some(scala.concurrent.Await.result(obs.future,
-        LogStore.ObservationWait))
-      catch { case _: java.util.concurrent.TimeoutException => None }
-    row.map { r =>
+    LogStore.awaitObservation(obs).map { r =>
       val bits = scala.collection.mutable.HashMap
         .empty[(Int, String), Array[Boolean]]
       for ((n, k) <- posNames.zipWithIndex; j <- 0 until bitmaps) {
@@ -4454,10 +4451,19 @@ object LogStore {
     * the default 4,096 bits); wider rewrites read their files back. */
   private val ObservedBitmaps = 8
 
-  /** How long a write waits, after its job returned, for its observed
-    * metrics to arrive over the listener bus before it falls back to
-    * reading the files back. */
+  /** How long a caller waits, after its observed action returned, for
+    * the observed metrics to arrive over the listener bus before it
+    * falls back to computing them another way (a write reads its files
+    * back; the billing report runs its aggregates). */
   private val ObservationWait = scala.concurrent.duration.Duration(30, "s")
+
+  /** The metrics `obs` collected, or None when they have not arrived
+    * [[ObservationWait]] after the observed action returned. */
+  private[graft] def awaitObservation(
+      obs: org.apache.spark.sql.Observation)
+      : Option[org.apache.spark.sql.Row] =
+    try Some(scala.concurrent.Await.result(obs.future, ObservationWait))
+    catch { case _: java.util.concurrent.TimeoutException => None }
 
   /** Hex serialization of a Bloom bit array — 4 bits per hex digit,
     * bit (4j+k) contributing 2^k to digit j (the grammar every probe

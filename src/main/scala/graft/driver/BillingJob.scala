@@ -1,9 +1,10 @@
 package graft.driver
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.AppendStore
+import graft.catalog.{AppendStore, LogStore}
 import graft.model._
 import graft.operators.BillingOps
 import graft.sinks._
@@ -19,10 +20,13 @@ import graft.sinks._
   *   1. guard: zero sessions → skipped result, nothing written
   *   2. append PENDING records (write-ahead intent log) — a failure here
   *      aborts BEFORE any external charge (`billing.ts:120-121`)
-  *   3. external charge sink (bounded concurrency, retried)
+  *   3. external charge sink (`concurrency` calls in flight, retried),
+  *      whose one action is the append into the charge-results store;
+  *      that append also observes the ok/failed/skipped histogram
   *   4. append FINAL records — append-only, never UPDATE
-  *      (`billing.ts:161-163`); current state = latest-record-wins view
-  *   5. totals + report
+  *      (`billing.ts:161-163`); current state = latest-record-wins view.
+  *      The append observes the report's totals and active-shop count
+  *   5. report: the figures observed in 3 and 4, plus one top-N job
   */
 final class BillingJob(
     spark: SparkSession,
@@ -100,7 +104,11 @@ final class BillingJob(
           s"${BillingJob.runSeq.incrementAndGet()}"
       val chargeOut = chargeSink.chargeAll(spark, chargeInputs)
         .toDF().withColumn("run_id", lit(runId))
-      chargeResults.append(chargeOut)
+      // the report's histogram rides on the append: the observed rows
+      // are the rows written (a result stage), never a re-run sink
+      val histogramObs = Observation()
+      chargeResults.append(BillingJob.observed(chargeOut, histogramObs,
+        BillingJob.histogramColumns))
       val results = chargeResults
         .readOrEmpty(chargeOut.schema)
         .where($"run_id" === runId)
@@ -109,12 +117,14 @@ final class BillingJob(
       // 4. append final statuses (J3 enrich; append-only)
       val enriched =
         BillingOps.enrichWithChargeResults(pending, results).cache()
-      usageStore.append(enriched)
+      val totalsObs = Observation()
+      usageStore.append(BillingJob.observed(enriched, totalsObs,
+        BillingJob.totalsAndActiveColumns))
 
-      // 5. totals + report (A2/A3/A4, L2) — enriched is cached, so the
-      // totals/count/top-shops actions below read one materialization
+      // 5. report (A2/A3/A4, L2) — enriched is cached, so the top-shops
+      // collect reads the materialization the final append made
       val report = buildReport(targetDate, scheduled, sessionCount,
-        enriched, results)
+        enriched, results, totalsObs, histogramObs)
       reportSink.send(report)
       sessions.unpersist(); pending.unpersist(); enriched.unpersist()
       report
@@ -181,30 +191,36 @@ final class BillingJob(
     testBillingForDate(rawSessions, rawEvents,
       BillingOps.utcToday(now().toEpochMilli))
 
+  /** The day's report. Its figures were observed inside the two
+    * appends — totals and the active-shop count on the final append of
+    * `enriched`, the A4 histogram on the charge-results append — so
+    * the only job here is the top-N collect. A figure whose
+    * observation has not arrived after the wait is computed with the
+    * same columns as one aggregate over the frame that was written:
+    * `enriched`, or `results` (the persisted outcomes, never the sink
+    * plan). */
   private def buildReport(targetDate: String, scheduled: Boolean,
-      sessionCount: Long, enriched: DataFrame,
-      results: DataFrame): BatchReport = {
-    val t = BillingOps.totals(enriched).head()
-    // A4 histogram as ONE distributed aggregate over the persisted
-    // charge outcomes (the driver sees three counters, never the rows)
-    val h = results.agg(
-      sum(when($"success" && !$"skipped", 1L).otherwise(0L)),
-      sum(when(!$"success", 1L).otherwise(0L)),
-      sum(when($"skipped", 1L).otherwise(0L))).head()
-    val (ok, ko, skip) = (
-      if (h.isNullAt(0)) 0L else h.getLong(0),
-      if (h.isNullAt(1)) 0L else h.getLong(1),
-      if (h.isNullAt(2)) 0L else h.getLong(2))
-    val active = enriched.where($"page_views" > 0)
-    val activeCount = active.count()
+      sessionCount: Long, enriched: DataFrame, results: DataFrame,
+      totalsObs: Observation, histogramObs: Observation): BatchReport = {
+    def figures(obs: Observation, frame: DataFrame, cols: Seq[Column]) =
+      LogStore.awaitObservation(obs)
+        .getOrElse(frame.agg(cols.head, cols.tail: _*).head())
+    def long(r: Row, i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+    // the top-N job runs first: meanwhile the listener bus delivers the
+    // observations, so the wait below is rarely a wait
     val top = BillingOps.topShops(enriched, BillingJob.maxShopsToShow)
       .select($"shop", $"page_views", $"billing_amount",
         $"shopify_billing_status")
       .collect().toSeq.map(r => ShopReportRow(r.getString(0), r.getLong(1),
         r.getDouble(2), r.getString(3)))
+    val t =
+      figures(totalsObs, enriched, BillingJob.totalsAndActiveColumns)
+    val h = figures(histogramObs, results, BillingJob.histogramColumns)
+    val (ok, ko, skip) = (long(h, 0), long(h, 1), long(h, 2))
+    val activeCount = long(t, 3)
     BatchReport(success = ko == 0, targetDate, scheduled, sessionCount,
       recordCount = t.getLong(0),
-      totalPageViews = if (t.isNullAt(1)) 0L else t.getLong(1),
+      totalPageViews = long(t, 1),
       totalBillingAmount = if (t.isNullAt(2)) 0.0 else t.getDouble(2),
       successful = ok, failed = ko, skipped = skip,
       topShops = top, remainderShops = math.max(0L,
@@ -223,6 +239,25 @@ object BillingJob {
     * count line) — also the driver-side row bound on BOTH report
     * paths: happy (topShops) and failure (context reconstruction). */
   val maxShopsToShow: Int = 10
+
+  /** The report's figures over `enriched`: [[BillingOps.totals]]'
+    * record count, page views and rounded amount, then the active-shop
+    * count. */
+  private val totalsAndActiveColumns: Seq[Column] =
+    BillingOps.totalsColumns :+
+    count(when(col("page_views") > 0, true)).as("active_shops")
+
+  /** A4 histogram over the charge outcomes (successful, failed,
+    * skipped): three counters, never the rows. */
+  private val histogramColumns: Seq[Column] = Seq(
+    sum(when(col("success") && !col("skipped"), 1L).otherwise(0L))
+      .as("successful"),
+    sum(when(!col("success"), 1L).otherwise(0L)).as("failed"),
+    sum(when(col("skipped"), 1L).otherwise(0L)).as("skipped"))
+
+  private def observed(df: DataFrame, obs: Observation,
+      cols: Seq[Column]): DataFrame = df.observe(obs, cols.head, cols.tail: _*)
+
   private val runSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   // per-process random token: two JVMs sharing one store path (parallel
   // test forks, concurrent backfill + scheduled run) can land in the

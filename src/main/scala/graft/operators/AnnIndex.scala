@@ -720,13 +720,18 @@ object AnnIndex {
     // vec_id and the residual sources the first ksub — a prefix of
     // the same ordered head, so the second corpus-scan TakeOrdered
     // job this used to pay carried no new information
-    val headRows = withNorm(corpus).orderBy(col("vec_id"))
+    val head = withNorm(corpus).orderBy(col("vec_id"))
       .limit(math.max(nCells, ksub)).collect()
-      .map(r => (r.getSeq[Float](1), r.getDouble(2)))
+    val headRows = head.map(r => (r.getSeq[Float](1), r.getDouble(2)))
     val cents = headRows.take(nCells)
     require(cents.length == nCells,
       s"corpus has only ${cents.length} vectors; the deterministic " +
         s"first-$nCells codebook needs at least nCells = $nCells")
+    // a zero-norm cell makes every cosine against it 0/0, which the
+    // driver replay and the executor expression order differently
+    // (NaN wins, NULL loses) or, under ANSI, refuse at encode
+    head.take(nCells).foreach(r => require(r.getDouble(2) != 0.0,
+      s"IVF-PQ coarse centroid vec_id ${r.get(0)} has a zero norm"))
     val centFlat: Seq[Double] = cents.toSeq.flatMap(_._1.map(_.toDouble))
     // residual codebook: the first ksub vectors' residuals w.r.t.
     // their own assigned cells (ivfPqTopK's construction; the argmax
@@ -812,6 +817,8 @@ object AnnIndex {
     require(centRows.map(_._1).sameElements(
         centRows.indices.map(_.toLong)),
       "IVF-PQ codebook cell ids must be contiguous from 0")
+    centRows.foreach(r => require(r._3 != 0.0,
+      s"IVF-PQ coarse centroid cell_id ${r._1} has a zero norm"))
     val cents = centRows.map(r => (r._2, r._3))
     val centFlat: Seq[Double] = cents.toSeq.flatMap(_._1.map(_.toDouble))
     require(bookRows.size == m * ksub,

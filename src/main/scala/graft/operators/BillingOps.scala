@@ -192,10 +192,14 @@ object BillingOps {
   /** A2 + A3: one-pass global totals (reference
     * `src/services/billing.ts:170-176,182-185`). */
   def totals(records: DataFrame): DataFrame =
-    records.agg(
-      count(lit(1)).as("record_count"),
-      sum(col("page_views")).as("total_page_views"),
-      round(sum(col("billing_amount")), 2).as("total_billing_amount"))
+    records.agg(totalsColumns.head, totalsColumns.tail: _*)
+
+  /** [[totals]]' aggregate columns, for callers that observe them on
+    * another action instead of running their own. */
+  val totalsColumns: Seq[Column] = Seq(
+    count(lit(1)).as("record_count"),
+    sum(col("page_views")).as("total_page_views"),
+    round(sum(col("billing_amount")), 2).as("total_billing_amount"))
 
   /** A4: status histogram as a single-pass conditional aggregation
     * (reference `src/services/shopifyBilling.ts:82-86`) — one shuffle-free

@@ -1,5 +1,10 @@
 package graft.sinks
 
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException,
+  ExecutorCompletionService, Executors, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.{TaskContext, TaskKilledException}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{ChargeInput, UsageChargeResult}
@@ -23,8 +28,11 @@ object ChargeError {
   * (`shopifyBilling.ts:142-232`: Q1 lookup of the usage-pricing line item,
   * M1 `appUsageRecordCreate` mutation, U6 probe); the engine keeps the
   * same three-call surface behind a serializable factory so executors can
-  * construct clients per partition. Tests inject fakes at exactly this
-  * seam, like the reference's own test (`shopifyBilling.test.ts:72-81`). */
+  * construct clients per partition. One instance serves every call of
+  * its partition's in-flight window at once (see [[ChargeSink]]), so
+  * implementations must be thread-safe. Tests inject fakes at exactly
+  * this seam, like the reference's own test
+  * (`shopifyBilling.test.ts:72-81`). */
 trait ChargeClient {
   /** U4/Q1: resolve the subscription line item to charge against. */
   def lookupSubscriptionLineItem(shop: String, accessToken: String): String
@@ -62,14 +70,20 @@ object Retry {
 
 /** S6: the side-effecting external charge sink.
   *
-  * Distribution model: `repartition(concurrency)` bounds parallel calls
-  * exactly like the reference's `pLimit(BATCH_SIZE=5)` event-loop gate
-  * (`shopifyBilling.ts:53,64-78`, U1) — partition count = number of
-  * concurrent in-flight charges, each partition processing its shops
-  * serially. On a real cluster this scales by raising `concurrency`;
-  * the per-partition client is constructed once (connection reuse) and
-  * the Q1 line-item lookup is cached per (shop, token) within a
-  * partition, mirroring how the reference pays Q1 once per shop.
+  * Distribution model: at most `concurrency` charges are in flight at
+  * once, whatever the task slots, like the reference's
+  * `pLimit(BATCH_SIZE=5)` event-loop gate (`shopifyBilling.ts:53,64-78`,
+  * U1). The rows are spread over `p = min(concurrency,
+  * defaultParallelism)` partitions, and each partition streams its rows
+  * through a window of in-flight calls on its own daemon threads; the
+  * windows sum to `concurrency` (`concurrency / p` each, the remainder
+  * to the low partition ids). While a partition has rows left, a
+  * finished call frees its slot for the next row, so with enough rows
+  * in every partition the peak in flight is `concurrency`, and it is
+  * never more. Outcomes leave in completion order, one per input row. The per-partition client is
+  * constructed once (connection reuse) and shared by the window's
+  * threads; the Q1 line-item lookup is cached per (shop, token) within
+  * a partition, mirroring how the reference pays Q1 once per shop.
   *
   * Semantics preserved from the reference: zero/negative amounts short-
   * circuit to `skipped` BEFORE any API call (F5, `shopifyBilling.ts:
@@ -83,21 +97,22 @@ final class ChargeSink(clientFactory: () => ChargeClient,
   def chargeAll(spark: SparkSession,
       charges: Dataset[ChargeInput]): Dataset[UsageChargeResult] = {
     import spark.implicits._
-    val (factory, retries, delay, slp) =
-      (clientFactory, maxRetries, baseDelayMs, sleep)
-    charges.repartition(concurrency).mapPartitions { it =>
+    val parts = math.min(concurrency, spark.sparkContext.defaultParallelism)
+    val (factory, total, retries, delay, slp) =
+      (clientFactory, concurrency, maxRetries, baseDelayMs, sleep)
+    charges.repartition(parts).mapPartitions { it =>
+      val pid = TaskContext.getPartitionId()
+      val width = total / parts + (if (pid < total % parts) 1 else 0)
       val client = factory()
-      val lineItemCache =
-        scala.collection.mutable.Map.empty[(String, String), String]
-      it.map { c =>
+      val lineItems = new LineItemCache(client)
+      new InFlightWindow(it, width, s"charge-sink-p$pid")({ c =>
         if (c.amount <= 0.0)
           UsageChargeResult(c.shop, success = true, None, None,
             amount = 0.0, skipped = true)
         else {
           try {
             val chargeId = Retry.withRetry(retries, delay, slp) { _ =>
-              val li = lineItemCache.getOrElseUpdate((c.shop, c.accessToken),
-                client.lookupSubscriptionLineItem(c.shop, c.accessToken))
+              val li = lineItems(c.shop, c.accessToken)
               client.createUsageCharge(c.shop, c.accessToken, li, c.amount,
                 description = f"Page view billing: ${c.amount}%.2f USD",
                 idempotencyKey = c.idempotencyKey)
@@ -111,38 +126,71 @@ final class ChargeSink(clientFactory: () => ChargeClient,
                 c.amount, skipped = false)
           }
         }
-      }
+      })
     }
   }
 }
 
-/** A deterministic in-memory client for tests and dry runs: charges
-  * succeed unless the token marks them failed, ids derive from the shop. */
-final class FakeChargeClient(failTokens: Set[String] = Set.empty,
-    failuresBeforeSuccess: Int = 0) extends ChargeClient with Serializable {
-  private val attempts =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  override def lookupSubscriptionLineItem(shop: String, token: String) = {
-    if (failTokens.contains(token))
-      throw ChargeError("Invalid access token", retryable = false)
-    s"gid://fake/AppSubscriptionLineItem/$shop"
+/** The Q1 memo a partition's window threads share: at most one
+  * successful lookup per (shop, token). Concurrent askers of one key
+  * wait for the first; a lookup that throws caches nothing, so the
+  * retry asks again. */
+private final class LineItemCache(client: ChargeClient) {
+  private final class Cell { var lineItem: String = _ }
+  private val cells = new ConcurrentHashMap[(String, String), Cell]
+
+  def apply(shop: String, token: String): String = {
+    val cell = cells.computeIfAbsent((shop, token), _ => new Cell)
+    cell.synchronized {
+      if (cell.lineItem == null)
+        cell.lineItem = client.lookupSubscriptionLineItem(shop, token)
+      cell.lineItem
+    }
   }
-  private val chargedKeys =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  override def createUsageCharge(shop: String, token: String, li: String,
-      amount: Double, description: String,
-      idempotencyKey: String = ""): String = {
-    // idempotent replay: a key that already charged returns the original
-    // id without creating (or counting) a second charge
-    if (idempotencyKey.nonEmpty && chargedKeys.containsKey(idempotencyKey))
-      return chargedKeys.get(idempotencyKey)
-    val n = attempts.merge(shop, 1, (a, b) => a + b)
-    if (n <= failuresBeforeSuccess)
-      throw ChargeError("Shopify API error: 503", retryable = true)
-    val id = s"gid://fake/AppUsageRecord/$shop"
-    if (idempotencyKey.nonEmpty) chargedKeys.put(idempotencyKey, id)
-    id
+}
+
+/** Streams `in` through at most `width` concurrent calls of `f` on
+  * daemon threads, without materializing the partition: a row is read
+  * from `in` only when a slot is free, and results come back in
+  * completion order, one per row. The pool is shut down when the rows
+  * run out and, failing that, when the task completes; a killed task
+  * submits no further call. */
+private final class InFlightWindow[A, B](in: Iterator[A], width: Int,
+    name: String)(f: A => B) extends Iterator[B] {
+  private val pool = Executors.newFixedThreadPool(width, new ThreadFactory {
+    private val n = new AtomicInteger
+    override def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"$name-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  })
+  private val done = new ExecutorCompletionService[B](pool)
+  private var pending = 0
+  private val task = Option(TaskContext.get())
+  task.foreach(_.addTaskCompletionListener[Unit](_ => pool.shutdownNow()))
+  fill()
+
+  private def fill(): Unit =
+    while (pending < width && in.hasNext) {
+      if (task.exists(_.isInterrupted()))
+        throw new TaskKilledException("killed before its next charge")
+      val a = in.next()
+      done.submit(() => f(a))
+      pending += 1
+    }
+
+  override def hasNext: Boolean = {
+    if (pending == 0) pool.shutdown()
+    pending > 0
   }
-  override def testConnection(shop: String, token: String): Boolean =
-    !failTokens.contains(token)
+
+  override def next(): B = {
+    if (!hasNext) throw new NoSuchElementException("no charge left")
+    val b = try done.take().get()
+      catch { case e: ExecutionException => throw e.getCause }
+    pending -= 1
+    fill()
+    b
+  }
 }

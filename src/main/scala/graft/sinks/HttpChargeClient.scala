@@ -36,7 +36,10 @@ import org.json4s.jackson.JsonMethods
   * One `HttpClient` per instance: the ChargeSink constructs a client
   * per partition, so connection pools are executor-local and reused
   * across that partition's shops (same amortization as the per-
-  * partition line-item cache).
+  * partition line-item cache). The partition's in-flight window
+  * threads all call this one instance at once; that is safe because
+  * `java.net.http.HttpClient` is thread-safe and nothing else here is
+  * mutable.
   */
 final class HttpChargeClient(
     apiVersion: String = "2024-01",

@@ -7,11 +7,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.driver.BillingJob
+import graft.model.BillingConfig
+import graft.sinks.{BatchReport, ChargeSink, CollectingReportSink,
+  FakeChargeClient}
 
-/** Spark-job budgets of the table layer's hot paths: the exact number
-  * of jobs each call starts, counted by a listener after the bus has
-  * drained. A regression (an extra read-back, probe or collect) fails
-  * here instead of hiding in benchmark noise. The table shape is the
+/** Spark-job budgets of the table layer's hot paths and of one
+  * `BillingJob` day: the exact number of jobs each call starts,
+  * counted by a listener after the bus has drained. A regression (an
+  * extra read-back, probe, report action or collect) fails here
+  * instead of hiding in benchmark noise. The table shape is the
   * benchmark's churn table: stats on `k`, a Bloom filter on `sk`,
   * deletion vectors on. Every write here observes its Bloom bits in
   * its own job, so none of these counts includes a read-back Bloom
@@ -70,6 +75,31 @@ class JobBudgetSpec extends AnyFunSuite {
     store.append(rows(201L to 400L))
     assert(jobsOf(store.maintainLayout(1L << 20, 2)) == 2)
     assert(store.liveSegmentInfos().size == 1)
+  }
+
+  test("one BillingJob day is 15 jobs") {
+    val dir = Files.createTempDirectory("graft-budget").toString
+    val job = new BillingJob(spark, new AppendStore(spark, s"$dir/usage",
+        partitionCol = Some("billing_date")),
+      new ChargeSink(() => new FakeChargeClient(
+        failTokens = Set("bad-token")), concurrency = 4, sleep = _ => ()),
+      new CollectingReportSink, BillingConfig(ratePerMillion = 10000.0))
+    val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val sessions = (1 to 12).map(i => (s"shop-$i",
+        if (i == 3) "bad-token" else s"tok-$i", t, t))
+      .toDF("shop", "accessToken", "createdAt", "updatedAt")
+    val events = (1 to 10).flatMap(i => (1 to i).map(h =>
+        (s"shop-$i.myshopify.com", "page_viewed",
+          java.sql.Timestamp.valueOf(f"2024-01-1${i % 2 + 5} $h%02d:00:00"))))
+      .toDF("shop", "name", "created_at")
+    // the first day creates both stores; the second is a steady day
+    job.processDailyBilling(sessions, events, "2024-01-15")
+    var report: BatchReport = null
+    val jobs = jobsOf {
+      report = job.processDailyBilling(sessions, events, "2024-01-16")
+    }
+    assert(report.error.isEmpty && report.recordCount == 12)
+    assert(jobs == 15)
   }
 
   test("optimize into two clustered segments is 3 jobs") {

@@ -215,6 +215,54 @@ class BillingJobSpec extends AnyFunSuite {
       ((1L, 1L, 1L)))
   }
 
+  test("the observed report equals an aggregation over the persisted " +
+      "stores") {
+    // 14 shops: shop-01 … shop-12 have 1 … 12 views on the date,
+    // shop-13 and shop-14 none (skipped), shop-03's token is refused
+    // (declined); 12 active shops, so the report has a remainder
+    val base = Files.createTempDirectory("graft-observed").toString
+    val store = new AppendStore(spark, base + "/usage")
+    val sink = new ChargeSink(() => new FakeChargeClient(
+      failTokens = Set("bad-token")), concurrency = 3, sleep = _ => ())
+    val job = new BillingJob(spark, store, sink,
+      new CollectingReportSink, cfg)
+    val shopSessions = (1 to 14).map { i =>
+      (f"shop-$i%02d", if (i == 3) "bad-token" else s"tok-$i",
+        ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:00"))
+    }.toDF("shop", "accessToken", "createdAt", "updatedAt")
+    val shopEvents = (1 to 12).flatMap(i => (1 to i).map(_ =>
+      (f"shop-$i%02d.myshopify.com", "page_viewed",
+        ts("2024-01-15 10:00:00")))).toDF("shop", "name", "created_at")
+    val report = job.processDailyBilling(shopSessions, shopEvents, D)
+
+    import org.apache.spark.sql.functions._
+    val state = BillingOps.latestUsageState(
+        store.readOrEmpty(Schemas.usageRecords))
+      .where($"billing_date" === to_date(lit(D)))
+      .agg(count(lit(1)), sum($"page_views"),
+        round(sum($"billing_amount"), 2),
+        count(when($"page_views" > 0, true)))
+      .head()
+    val outcomes = spark.read.parquet(base + "/usage__charge_results")
+    assert(outcomes.select("run_id").distinct().count() == 1)
+    val h = outcomes.agg(
+        count(when($"success" && !$"skipped", true)),
+        count(when(!$"success", true)), count(when($"skipped", true)))
+      .head()
+    assert(report.recordCount == state.getLong(0))
+    assert(report.totalPageViews == state.getLong(1))
+    assert(report.totalBillingAmount == state.getDouble(2))
+    assert(report.remainderShops ==
+      state.getLong(3) - BillingJob.maxShopsToShow)
+    assert((report.successful, report.failed, report.skipped) ==
+      ((h.getLong(0), h.getLong(1), h.getLong(2))))
+    // the fixture exercises every outcome and the remainder
+    assert((report.successful, report.failed, report.skipped) ==
+      ((11L, 1L, 2L)))
+    assert(report.recordCount == 14 && report.remainderShops == 2)
+    assert(report.topShops.size == BillingJob.maxShopsToShow)
+  }
+
   test("replay of the same billing date cannot double-charge: " +
       "idempotency keys collapse re-runs to one creation per shop") {
     CountingChargeClient.reset()

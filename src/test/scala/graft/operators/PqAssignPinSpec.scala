@@ -98,4 +98,22 @@ class PqAssignPinSpec extends AnyFunSuite {
       assert(got.head == ((0, 0)))
     } finally spark.conf.set("spark.sql.ansi.enabled", "true")
   }
+
+  test("a zero-norm coarse centroid refuses the IVF-PQ build under " +
+      "both ANSI settings, naming its vec_id") {
+    val rnd = new java.util.Random(17)
+    val corpus = randomVecs(rnd, 40).updated(2, Seq.fill(dims)(0f))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft-pqzero")
+    for (ansi <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val e = intercept[IllegalArgumentException](
+          AnnIndex.buildIvfPq(spark, corpus, 0L, s"$dir/ansi-$ansi",
+            nCells = 4, m = 2, dims = dims, ksub = 8))
+        assert(e.getMessage.contains("vec_id 2 has a zero norm"))
+      } finally spark.conf.set("spark.sql.ansi.enabled", "true")
+    }
+  }
 }

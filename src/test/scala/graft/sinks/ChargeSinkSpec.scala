@@ -1,5 +1,10 @@
 package graft.sinks
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -74,13 +79,37 @@ class ChargeSinkSpec extends AnyFunSuite {
       out("shop-bad").error.contains("Invalid access token"))
   }
 
-  test("U1: concurrency bound = partition count") {
-    val sink = new ChargeSink(() => new FakeChargeClient(), concurrency = 3,
-      sleep = noSleep)
-    val charges = (1 to 20).map(i => ChargeInput(s"s$i", "t", 1.0)).toDS()
-    val ds = sink.chargeAll(spark, charges)
-    assert(ds.rdd.getNumPartitions == 3)
-    assert(ds.collect().length == 20)
+  /** U1 on the `local[4]` session: every configured in-flight slot is
+    * used, whether `concurrency` exceeds the task slots or not. */
+  private def peakOf(concurrency: Int): Unit = {
+    PeakChargeClient.reset()
+    val sink = new ChargeSink(() => new PeakChargeClient, concurrency,
+      maxRetries = 3, baseDelayMs = 1L, sleep = noSleep)
+    // every fifth shop fails its first charge with a retryable 503
+    val charges = (1 to 60).map(i =>
+      ChargeInput(f"s$i%02d", if (i % 5 == 0) "flaky" else "t", 1.0,
+        f"s$i%02d:d")).toDS()
+    val out = sink.chargeAll(spark, charges).collect()
+    assert(out.length == 60 && out.forall(r => r.success && !r.skipped))
+    assert(out.map(_.shop).toSet.size == 60)
+    assert(PeakChargeClient.peak.get() == concurrency)
+    assert(PeakChargeClient.created.size() == 60 &&
+      PeakChargeClient.created.values().asScala.forall(_.get() == 1),
+      "each shop is charged once")
+    assert(PeakChargeClient.lookups.size() == 60 &&
+      PeakChargeClient.lookups.values().asScala.forall(_.get() == 1),
+      "Q1 runs once per (shop, token), retries included")
+    assert(PeakChargeClient.retried.get() == 12)
+  }
+
+  test("U1: concurrency above the task slots keeps that many calls in " +
+      "flight") {
+    peakOf(6)
+  }
+
+  test("U1: concurrency below the task slots keeps that many calls in " +
+      "flight") {
+    peakOf(3)
   }
 
   test("idempotency key collapses a replayed charge to one creation") {
@@ -106,5 +135,49 @@ class ChargeSinkSpec extends AnyFunSuite {
     val out = sink.chargeAll(spark,
       Seq(ChargeInput("shop-flaky", "tok", 2.0)).toDS()).collect()
     assert(out.head.success && out.head.chargeId.nonEmpty)
+  }
+}
+
+/** A charge client that records, JVM-wide, the peak number of its
+  * calls in flight at once across every partition's instance. Each
+  * call sleeps, so calls started together overlap. A shop whose token
+  * is `flaky` fails its first charge attempt with a retryable 503. */
+class PeakChargeClient extends ChargeClient with Serializable {
+  import PeakChargeClient._
+
+  private def call[T](f: => T): T = {
+    val now = inFlight.incrementAndGet()
+    peak.accumulateAndGet(now, math.max)
+    try { Thread.sleep(25); f } finally inFlight.decrementAndGet()
+  }
+  private def bump(m: ConcurrentHashMap[String, AtomicInteger],
+      k: String): Int =
+    m.computeIfAbsent(k, _ => new AtomicInteger).incrementAndGet()
+
+  override def lookupSubscriptionLineItem(shop: String, token: String) =
+    call { bump(lookups, s"$shop/$token"); s"gid://peak/Li/$shop" }
+  override def createUsageCharge(shop: String, token: String, li: String,
+      amount: Double, description: String,
+      idempotencyKey: String = ""): String = call {
+    if (token == "flaky" && bump(attempts, shop) == 1) {
+      retried.incrementAndGet()
+      throw ChargeError("Shopify API error: 503", retryable = true)
+    }
+    bump(created, shop)
+    s"gid://peak/AppUsageRecord/$shop"
+  }
+  override def testConnection(shop: String, token: String): Boolean = true
+}
+
+object PeakChargeClient {
+  val inFlight = new AtomicInteger
+  val peak = new AtomicInteger
+  val retried = new AtomicInteger
+  val lookups = new ConcurrentHashMap[String, AtomicInteger]
+  val attempts = new ConcurrentHashMap[String, AtomicInteger]
+  val created = new ConcurrentHashMap[String, AtomicInteger]
+  def reset(): Unit = {
+    Seq(inFlight, peak, retried).foreach(_.set(0))
+    Seq(lookups, attempts, created).foreach(_.clear())
   }
 }
