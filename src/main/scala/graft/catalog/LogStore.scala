@@ -1104,12 +1104,7 @@ class LogStore(spark: SparkSession, val root: String,
         case None =>
           throw new IllegalStateException(s"empty table at $root")
       }
-    // plan from the RECORDED schema when the log carries one — zero
-    // data-file footers opened, whatever the segment count (the
-    // metadata-action payoff; parquet fills absent columns with null,
-    // which is exactly the evolution semantics). Pre-stamp logs fall
-    // back to footer merging.
-    scanSegments(segs, recordedSchema(version))
+    scanSegments(segs, version)
   }
 
   /** The DV-AWARE segment scan every read path funnels through: the
@@ -1128,9 +1123,16 @@ class LogStore(spark: SparkSession, val root: String,
     * long before the data became unreadable; the hint is dropped and
     * the anti-join runs shuffled, bounded by executor memory instead.
     * [[maintainLayout]]'s vector-pressure rule exists so tables never
-    * live in that regime for long. */
-  private def scanSegments(segs: Seq[Segment],
-      schema: Option[org.apache.spark.sql.types.StructType])
+    * live in that regime for long.
+    *
+    * `segs` must be live at `version`, and the scan plans from the
+    * schema RECORDED at `version`: zero data-file footers opened,
+    * whatever the segment count (the metadata-action payoff), and
+    * parquet fills a column a segment predates with null, which is
+    * exactly the evolution semantics. Only a pre-stamp log, which
+    * records no schema, falls back to a `mergeSchema` footer-inference
+    * job. */
+  private def scanSegments(segs: Seq[Segment], version: Long)
       : DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col => fcol,
       element_at, lit => flit, split => fsplit}
@@ -1139,13 +1141,10 @@ class LogStore(spark: SparkSession, val root: String,
     // old files match its stable physical name, a re-added column's
     // fresh col-uuid matches nothing old → null, exactly the
     // no-resurrection contract), then project back to LOGICAL names
-    // once, after the dv reconciliation. Pruned paths (schema=None)
-    // pick the mapping up from the recorded schema — mapped tables
-    // always have one (the mapping lives in it).
-    val mapped = schema
-      .orElse(if (latestVersion() < 0) None
-        else replayTo(latestVersion()).schemaB64.map(decodeSchema))
-      .filter(LogStore.hasMapping)
+    // once, after the dv reconciliation. Mapped tables always record
+    // a schema (the mapping lives in it).
+    val schema = recordedSchema(version)
+    val mapped = schema.filter(LogStore.hasMapping)
     def rawRead(names: Seq[String]): DataFrame = schema match {
       case Some(sc) => spark.read
         .schema(LogStore.physicalSchema(sc))
@@ -1208,10 +1207,10 @@ class LogStore(spark: SparkSession, val root: String,
         Some(joined.drop("_dv_seg", "_dv_file", "_dv_pos"))
       }
     toLogical((plainDf, dvedDf) match {
-      // allowMissingColumns: on pruned paths (schema=None) each group
-      // merges its OWN segments' schemas, so per-segment evolution
-      // drift across the plain/DV split must null-fill, exactly as the
-      // single mergeSchema scan did before the split existed
+      // allowMissingColumns: on a pre-stamp log each group merges its
+      // OWN segments' schemas, so per-segment evolution drift across
+      // the plain/DV split must null-fill, exactly as the single
+      // mergeSchema scan did before the split existed
       case (Some(p), Some(d)) =>
         p.unionByName(d, allowMissingColumns = true)
       case (Some(p), None) => p
@@ -1346,10 +1345,7 @@ class LogStore(spark: SparkSession, val root: String,
       preds.forall { case (c, lo, hi) => s.mayOverlapOn(c, lo, hi) })
     if (hit.isEmpty)
       return (read(version).where(flit(false)), 0, live.size)
-    // plan the pruned scan from the RECORDED schema like read() does —
-    // the mergeSchema fallback paid a footer-inference Spark job on
-    // EVERY pruned read (pre-stamp logs still fall back)
-    val scan = scanSegments(hit, recordedSchema(version))
+    val scan = scanSegments(hit, version)
     val filtered = preds.foldLeft(scan) { case (df, (c, lo, hi)) =>
       val dt = df.schema(c).dataType
       df.where(fcol(c).between(flit(lo).cast(dt), flit(hi).cast(dt)))
@@ -1390,9 +1386,7 @@ class LogStore(spark: SparkSession, val root: String,
     val hit = live.filter(_.mayContainOn(c, pos))
     if (hit.isEmpty)
       return (read(version).where(flit(false)), 0, live.size)
-    // recorded-schema planning — no footer-inference job (see
-    // readRangeAll); pre-stamp logs still fall back
-    val scan = scanSegments(hit, recordedSchema(version))
+    val scan = scanSegments(hit, version)
     (scan.where(fcol(c).cast("string") === flit(key)),
       hit.size, live.size)
   }
@@ -1415,9 +1409,7 @@ class LogStore(spark: SparkSession, val root: String,
       ranges.exists { case (lo, hi) => s.mayOverlap(lo, hi) })
     if (hit.isEmpty)
       return (read(version).where(flit(false)), 0, live.size)
-    // recorded-schema planning — no footer-inference job (see
-    // readRangeAll); pre-stamp logs still fall back
-    (scanSegments(hit, recordedSchema(version)), hit.size, live.size)
+    (scanSegments(hit, version), hit.size, live.size)
   }
 
   /** The k = 4 deterministic Bloom bit positions of a key: four
@@ -2798,13 +2790,17 @@ class LogStore(spark: SparkSession, val root: String,
     * snapshots untouched. (Without per-segment stats this rewrites
     * the whole table; add-file pruning by min/max stats is the
     * optimization the paper layers on.) The deleted rows land in the
-    * commit's change segment as `delete` rows — the CDF event. */
+    * commit's change segment as `delete` rows — the CDF event. A row
+    * whose predicate is NULL does not match, so it is kept (SQL
+    * `DELETE … WHERE` semantics). */
   def deleteWhere(predicate: String): Long = {
-    import org.apache.spark.sql.functions.{lit => flit}
+    import org.apache.spark.sql.functions.{coalesce => fcoalesce,
+      expr => fexpr, lit => flit, not => fnot}
     val v = latestVersion()
     val old = liveSegments(v)
-    val kept = read(v).where(s"NOT ($predicate)")
-    val gone = read(v).where(predicate)
+    val cond = fexpr(predicate)
+    val kept = read(v).where(fnot(fcoalesce(cond, flit(false))))
+    val gone = read(v).where(cond)
       .withColumn("_change_type", flit("delete"))
     // the kept rewrite and the cdc segment are independent scans of
     // the same immutable snapshot — overlap their writes (§2.6)
@@ -2873,10 +2869,9 @@ class LogStore(spark: SparkSession, val root: String,
     val live = liveSegmentInfos(v)
     val touched = live.filter(_.mayOverlapOn(c, lo, hi))
     if (touched.isEmpty) return DeleteResult(v, 0, live.size)
-    // recorded-schema planning — no footer-inference job; the rewrite
-    // and the feed land on the table's full recorded shape (evolved
-    // columns null-fill), exactly what readers present either way
-    val data = scanSegments(touched, recordedSchema(v))
+    // the rewrite and the feed land on the table's full recorded
+    // shape (evolved columns null-fill), exactly what readers present
+    val data = scanSegments(touched, v)
     val dt = data.schema(c).dataType
     val cond = fcol(c).between(flit(lo).cast(dt), flit(hi).cast(dt))
     val kept = data.where(fnot(fcoalesce(cond, flit(false))))
@@ -3460,9 +3455,8 @@ class LogStore(spark: SparkSession, val root: String,
     }
     if (selected.isEmpty)
       return OptimizeResult(v, 0, 0, carried = live.size)
-    // recorded-schema planning — no footer-inference job (see
-    // deleteRange); the rewrite lands on the full recorded shape
-    val data = scanSegments(selected, recordedSchema(v))
+    // the rewrite lands on the full recorded shape (see deleteRange)
+    val data = scanSegments(selected, v)
     val adds = rewriteClustered(data, targetSegments, clusterBy)
     OptimizeResult(
       commitRevalidated(v, adds, selected.map(_.name),
@@ -3828,25 +3822,11 @@ class LogStore(spark: SparkSession, val root: String,
         Seq(writeChangeSegment(all))
       } else {
         // vectors involved: the row diff is the dv-aware snapshot
-        // diff — exceptAll each way (identical carried rows cancel),
-        // both sides projected onto the latest recorded shape so a
-        // rollback across a schema evolution still aligns
-        import org.apache.spark.sql.functions.{col => fcol}
+        // diff, on the latest recorded shape so a rollback across a
+        // schema evolution still aligns
         val before = read(latest)
-        val afterSnap = read(version)
-        val sc = recordedSchema(latest).getOrElse(before.schema)
-        def proj(df: DataFrame): DataFrame =
-          df.select(sc.fields.toSeq.map { f =>
-            (if (df.columns.contains(f.name)) fcol(f.name)
-             else flit(null).cast(f.dataType)).as(f.name)
-          }: _*)
-        val b = proj(before)
-        val a = proj(afterSnap)
-        val all = b.exceptAll(a)
-          .withColumn("_change_type", flit("delete"))
-          .unionByName(a.exceptAll(b)
-            .withColumn("_change_type", flit("insert")))
-        Seq(writeChangeSegment(all))
+        Seq(writeChangeSegment(rowDiff(before, read(version),
+          recordedSchema(latest).getOrElse(before.schema))))
       }
     commit(latest + 1, adds, removes, cdc = cdc, dvs = dvFixes)
   }
@@ -3888,90 +3868,8 @@ class LogStore(spark: SparkSession, val root: String,
     * is one of `keyCols`, only segments overlapping the updates' range
     * in THAT column are rewritten — the clustered-table economics
     * survive the composite key. */
-  def mergeKeyed(updates: DataFrame, keyCols: Seq[String]): MergeResult = {
-    import org.apache.spark.sql.functions.{col => fcol, count => fcount,
-      lit => flit, max => fmax, min => fmin}
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val keys = keyCols.map(fcol)
-    // materialize the update set ONCE (O(changed rows) by the merge
-    // contract): the dup refusal, prune bounds, survivors anti-join,
-    // rewrite union and three change-feed branches below would
-    // otherwise each re-execute the caller's plan from scratch
-    val ups = updates.localCheckpoint(true)
-    // ONE aggregation job answers the dup refusal (with its example
-    // key) AND the stats-prune bounds — they are both per-key facts of
-    // the same checkpointed update set (guide §1.2); the two separate
-    // probe jobs this replaces re-read it twice
-    val pcOpt = statsCol.filter(keyCols.contains)
-    val probeCols =
-      Seq(fmax(org.apache.spark.sql.functions.when(fcol("_n") > 1,
-        org.apache.spark.sql.functions.struct(
-          fcol("_n").as("n") +: keys: _*))).as("dup")) ++
-      pcOpt.toSeq.flatMap(pc => Seq(fmin(fcol(pc)).cast("string"),
-        fmax(fcol(pc)).cast("string")))
-    val probe = ups.groupBy(keys: _*).agg(fcount(flit(1)).as("_n"))
-      .agg(probeCols.head, probeCols.tail: _*).head()
-    if (!probe.isNullAt(0)) {
-      val d = probe.getStruct(0)
-      throw new IllegalArgumentException(
-        s"updates are not unique on (${keyCols.mkString(", ")}) (e.g. " +
-          s"key ${d.toSeq.drop(1).mkString("(", ", ", ")")}" +
-          s" appears ${d.getLong(0)} times) — " +
-          "ambiguous MERGE")
-    }
-    val v = latestVersion()
-    // the same write-side gate as append/appendStream: without it a
-    // type-mutated shared column is silently WIDENED by the
-    // survivors-union into the rewritten segment while untouched
-    // segments keep the old type — coexisting-types corruption
-    val (schemaAct, propsAct) = enforceSchema(ups.schema, v)
-    val live = liveSegmentInfos(v)
-    val (touched, keyRange) = pcOpt match {
-      case Some(pc) =>
-        if (probe.isNullAt(1)) (Seq.empty[Segment], None) // no update rows
-        else (live.filter(_.mayOverlap(probe.getString(1),
-          probe.getString(2))),
-          Some((pc, probe.getString(1), probe.getString(2))))
-      case None => (live, None)
-    }
-    val touchedData =
-      if (touched.isEmpty) ups.limit(0)
-      else scanSegments(touched, None)
-    val survivors = touchedData
-      .join(ups.select(keys: _*), keyCols, "left_anti")
-    val rewritten = survivors.unionByName(ups)
-    // the commit's change feed: replaced old rows as update_preimage,
-    // their replacements as update_postimage, new keys as insert.
-    // The preimage rows are O(changed) — materialize them so the
-    // matched-key probe for the postimage/insert split reads them
-    // back instead of re-scanning the touched segments twice more.
-    val preimages = touchedData
-      .join(ups.select(keys: _*), keyCols, "left_semi")
-      .withColumn("_change_type", flit("update_preimage"))
-      .localCheckpoint(true)
-    val matchedKeys = preimages.select(keys: _*)
-    val changes = preimages
-      .unionByName(ups
-        .join(matchedKeys, keyCols, "left_semi")
-        .withColumn("_change_type", flit("update_postimage")))
-      .unionByName(ups
-        .join(matchedKeys, keyCols, "left_anti")
-        .withColumn("_change_type", flit("insert")))
-    // the rewrite and the cdc segment read only checkpointed change
-    // sets + the immutable touched segments — overlap them (§2.6)
-    val (rewSeg, chSeg) = par2(
-      writeSegment(rewritten, schemaAct), writeChangeSegment(changes))
-    MergeResult(
-      commitRevalidated(v, Seq(rewSeg),
-        touched.map(_.name),
-        // unpruned merges may match ANY concurrently-added row; key-
-        // range-pruned ones conflict only with overlapping adds
-        ReadSet(touched.map(_.name).toSet, keyRange,
-          matchesAnyNewRow = keyRange.isEmpty && touched.nonEmpty),
-        cdc = Seq(chSeg), schema = schemaAct,
-        props = propsAct),
-      touched.size, live.size)
-  }
+  def mergeKeyed(updates: DataFrame, keyCols: Seq[String]): MergeResult =
+    upsertKeyed(updates, None, keyCols, txn = None)
 
   /** Apply a NET keyed change set — `upserts` replace-or-insert by
     * `keyCol`, `deleteKeys` remove — in ONE fenced commit: the
@@ -4007,87 +3905,107 @@ class LogStore(spark: SparkSession, val root: String,
     * no stored row (it lands as an insert) and a NULL delete key
     * removes none. */
   def applyChangesKeyed(upserts: DataFrame, deleteKeys: DataFrame,
-      keyCols: Seq[String], batchId: Long): Long = {
+      keyCols: Seq[String], batchId: Long): Long =
+    upsertKeyed(upserts, Some(deleteKeys), keyCols, Some(batchId)).version
+
+  /** The ONE keyed copy-on-write upsert behind [[mergeKeyed]] (no
+    * deletes, no `txn`) and [[applyChangesKeyed]] (`txn` = its batch
+    * id). Only the commit policy differs. A merge commits through
+    * [[commitRevalidated]] with its key-range read set. A fenced change
+    * set is a no-op returning version -1 when `txn` is at or behind
+    * [[lastTxn]], advances the fence alone when it carries no row, and
+    * otherwise commits strictly at its read version + 1.
+    *
+    * Everything else is shared: the change set is materialized once;
+    * one probe job over the tagged key union answers uniqueness,
+    * upsert/delete disjointness, emptiness and the stats-prune bounds;
+    * the touched segments are read at the schema recorded at the read
+    * version, so an update set that omits a column the table gained
+    * later null-fills it; one tagged inner join yields the pre-images
+    * and the deletes; the rewrite and the cdc segment are written in
+    * overlap. */
+  private def upsertKeyed(upserts: DataFrame,
+      deleteKeys: Option[DataFrame], keyCols: Seq[String],
+      txn: Option[Long]): MergeResult = {
     import org.apache.spark.sql.functions.{col => fcol, count => fcount,
-      lit => flit, max => fmax, min => fmin}
-    require(keyCols.nonEmpty, "applyChanges needs at least one key column")
-    if (batchId <= lastTxn()) return -1L
+      lit => flit, max => fmax, min => fmin, struct, sum => fsum,
+      when => fwhen}
+    require(keyCols.nonEmpty, "a keyed upsert needs at least one key column")
+    if (txn.exists(_ <= lastTxn())) return MergeResult(-1L, 0, 0)
     val keys = keyCols.map(fcol)
     // Materialize the change set ONCE. It is O(changed rows) by the
-    // CDC contract, and everything below — the uniqueness and
-    // disjointness refusals, the prune bounds, the survivors
-    // anti-join, the rewrite and the four change-feed branches —
-    // would otherwise re-execute the incoming plans from scratch. In
-    // the streaming-sink path (`upsertAggToLog`) `upserts` is a
-    // STATEFUL AGGREGATION whose every re-evaluation replays the
-    // state store: seven evaluations of a one-second plan was the
-    // whole cost of a five-row micro-batch.
-    val ups = upserts.localCheckpoint(true)
-    val dels = deleteKeys.select(keys: _*).distinct().localCheckpoint(true)
-    // ONE aggregation job over the two checkpointed change sets
-    // answers ALL FOUR gates — key uniqueness, upsert/delete
-    // disjointness, all-empty (fence-only), and the stats-prune
-    // bounds: they are per-key facts of the same tagged union (guide
-    // §1.2). The four separate probe jobs this replaces re-read the
-    // locals once each, per micro-batch in the streaming sink.
-    import org.apache.spark.sql.functions.{sum => fsum, when => fwhen}
+    // merge and CDC contracts, and everything below — the refusals,
+    // the prune bounds, the survivors anti-join, the rewrite and the
+    // change-feed branches — would otherwise re-execute the incoming
+    // plans from scratch. In the streaming-sink path (`upsertAggToLog`)
+    // `upserts` is a STATEFUL AGGREGATION whose every re-evaluation
+    // replays the state store. Defaults are padded first: a narrow
+    // upsert row must land with a column's DEFAULT, not the null the
+    // union with a touched segment's rows would give it.
+    val ups = padDefaults(upserts).localCheckpoint(true)
+    val dels = deleteKeys.map(
+      _.select(keys: _*).distinct().localCheckpoint(true))
+    // every changed key, tagged with its side: _u = 1 upsert, 0 delete
+    val tagged = dels.foldLeft(ups.select(keys :+ flit(1L).as("_u"): _*))(
+      (u, d) => u.unionByName(d.withColumn("_u", flit(0L))))
+    // ONE aggregation job over the tagged union answers every gate —
+    // key uniqueness (with an example key), upsert/delete
+    // disjointness, all-empty, and the stats-prune bounds: they are
+    // per-key facts of the same change set (guide §1.2)
     val pcOpt = statsCol.filter(keyCols.contains)
     val probeCols = Seq(
-      fmax(fcol("_nu")).as("maxu"),
+      fmax(fwhen(fcol("_nu") > 1,
+        struct(fcol("_nu").as("n") +: keys: _*))).as("dup"),
       fmax(fwhen(fcol("_nu") > 0 && fcol("_n") > fcol("_nu"), 1)
         .otherwise(0)).as("overlap"),
-      fsum(fcol("_nu")).as("nu"),
-      fsum(fcol("_n") - fcol("_nu")).as("nd")) ++
+      fsum(fcol("_n")).as("rows")) ++
       pcOpt.toSeq.flatMap(pc => Seq(fmin(fcol(pc)).cast("string"),
         fmax(fcol(pc)).cast("string")))
-    val probe = ups.select(keys :+ flit(1L).as("_u"): _*)
-      .unionByName(dels.select(keys :+ flit(0L).as("_u"): _*))
-      .groupBy(keys: _*)
+    val probe = tagged.groupBy(keys: _*)
       .agg(fsum(fcol("_u")).as("_nu"), fcount(flit(1)).as("_n"))
       .agg(probeCols.head, probeCols.tail: _*).head()
-    if (!probe.isNullAt(0) && probe.getLong(0) > 1)
+    if (!probe.isNullAt(0)) {
+      val d = probe.getStruct(0)
       throw new IllegalArgumentException(
-        s"upserts are not unique on (${keyCols.mkString(", ")}) — " +
-          "ambiguous change set")
+        s"updates are not unique on (${keyCols.mkString(", ")}) (e.g. " +
+          s"key ${d.toSeq.drop(1).mkString("(", ", ", ")")}" +
+          s" appears ${d.getLong(0)} times) — ambiguous upsert")
+    }
     if (!probe.isNullAt(1) && probe.getInt(1) == 1)
       throw new IllegalArgumentException(
-        s"a key appears in both upserts and deletes — not a NET set")
-    if (probe.isNullAt(2) ||
-        (probe.getLong(2) == 0L && probe.getLong(3) == 0L))
-      return commitFence(batchId)
+        "a key appears in both upserts and deletes — not a NET set")
+    if (probe.isNullAt(2) && txn.nonEmpty)
+      return MergeResult(commitFence(txn.get), 0, 0)
     val v = latestVersion()
+    // the same write-side gate as append/appendStream: without it a
+    // type-mutated shared column is silently WIDENED by the
+    // survivors-union into the rewritten segment while untouched
+    // segments keep the old type — coexisting-types corruption
     val (schemaAct, propsAct) = enforceSchema(ups.schema, v)
-    val live =
-      if (v < 0) Seq.empty[Segment] else liveSegmentInfos(v)
-    val allKeys = ups.select(keys: _*).unionByName(dels)
+    // a fenced change set may create its table; a merge needs one
+    val live = if (v < 0 && txn.nonEmpty) Nil else liveSegmentInfos(v)
+    val keyRange = pcOpt.filterNot(_ => probe.isNullAt(3))
+      .map(pc => (pc, probe.getString(3), probe.getString(4)))
     val touched =
-      if (live.isEmpty) Seq.empty[Segment]
-      else pcOpt match {
-        case Some(pc) =>
-          if (probe.isNullAt(4)) Seq.empty[Segment]
-          else live.filter(_.mayOverlap(probe.getString(4),
-            probe.getString(5)))
-        case None => live
+      if (pcOpt.isEmpty) live
+      else keyRange.toSeq.flatMap { case (_, lo, hi) =>
+        live.filter(_.mayOverlap(lo, hi))
       }
     val touchedData =
-      if (touched.isEmpty) ups.limit(0)
-      else scanSegments(touched, None)
+      if (touched.isEmpty) ups.limit(0) else scanSegments(touched, v)
     val survivors = touchedData
-      .join(allKeys, keyCols, "left_anti")
-    val rewritten = survivors.unionByName(ups,
-      allowMissingColumns = true)
-    // ONE tagged scan replaces the three touched-side semi-joins the
-    // change feed used to make (preimage, delete, and the matched-key
-    // probe): keys are unique per side and the two sides are disjoint
-    // (both just enforced), so an inner join against the tagged key
-    // set yields each touched row at most once with its change kind.
-    // The result is O(changed rows) — materialize it so the matched
-    // keys for the postimage/insert split don't re-scan the segments.
-    val keyKinds = ups.select(keys: _*)
-      .withColumn("_ct", flit("update_preimage"))
-      .unionByName(dels.withColumn("_ct", flit("delete")))
-    val oldChanges = touchedData.join(keyKinds, keyCols, "inner")
-      .withColumn("_change_type", fcol("_ct")).drop("_ct")
+      .join(tagged.select(keys: _*), keyCols, "left_anti")
+    val rewritten = survivors.unionByName(ups, allowMissingColumns = true)
+    // ONE tagged join yields every touched row the change set names,
+    // with its change kind: keys are unique per side and the two sides
+    // are disjoint (both just enforced), so each row matches at most
+    // once. The result is O(changed rows) — materialize it so the
+    // matched keys for the postimage/insert split don't re-scan the
+    // segments.
+    val oldChanges = touchedData.join(tagged, keyCols, "inner")
+      .withColumn("_change_type", fwhen(fcol("_u") === 1L,
+        flit("update_preimage")).otherwise(flit("delete")))
+      .drop("_u")
       .localCheckpoint(true)
     val matched = oldChanges
       .where(fcol("_change_type") === "update_preimage")
@@ -4103,10 +4021,18 @@ class LogStore(spark: SparkSession, val root: String,
     // sets + the immutable touched segments — overlap them (§2.6)
     val (rewSeg, chSeg) = par2(
       writeSegment(rewritten, schemaAct), writeChangeSegment(changes))
-    commit(v + 1, Seq(rewSeg),
-      touched.map(_.name),
-      txn = Some(batchId), cdc = Seq(chSeg),
-      schema = schemaAct, props = propsAct)
+    val removes = touched.map(_.name)
+    val version = txn match {
+      case Some(_) => commit(v + 1, Seq(rewSeg), removes, txn = txn,
+        cdc = Seq(chSeg), schema = schemaAct, props = propsAct)
+      // unpruned merges may match ANY concurrently-added row; key-
+      // range-pruned ones conflict only with overlapping adds
+      case None => commitRevalidated(v, Seq(rewSeg), removes,
+        ReadSet(removes.toSet, keyRange,
+          matchesAnyNewRow = keyRange.isEmpty && touched.nonEmpty),
+        cdc = Seq(chSeg), schema = schemaAct, props = propsAct)
+    }
+    MergeResult(version, touched.size, live.size)
   }
 
   final case class VacuumResult(version: Long, deleted: Seq[String],
@@ -4302,7 +4228,6 @@ class LogStore(spark: SparkSession, val root: String,
       writeSchema: org.apache.spark.sql.types.StructType,
       readVersion: Long,
       range: Option[(String, String, String)] = None): Long = {
-    import org.apache.spark.sql.functions.{col => fcol, lit => flit}
     require(adds.nonEmpty || removes.nonEmpty, "nothing to replace")
     // INSERT OVERWRITE and the SQL UPDATE/MERGE/DELETE rewrites all
     // land here with executor-written files — the staged gate is the
@@ -4322,11 +4247,6 @@ class LogStore(spark: SparkSession, val root: String,
     val target = schemaAct.map(decodeSchema)
       .orElse(recordedSchema(math.min(readVersion, latestVersion())))
       .getOrElse(writeSchema)
-    def project(df: DataFrame): DataFrame =
-      df.select(target.fields.toSeq.map { f =>
-        (if (df.columns.contains(f.name)) fcol(f.name)
-         else flit(null).cast(f.dataType)).as(f.name)
-      }: _*)
     def empty: DataFrame = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), target)
     // the OLD side reads DV-AWARE (a replaced segment's already-
@@ -4343,25 +4263,18 @@ class LogStore(spark: SparkSession, val root: String,
     }
     val before =
       if (removedInfos.isEmpty) empty
-      // recorded-schema planning — no footer-inference job; project()
-      // normalizes to the target shape either way
-      else project(scanSegments(removedInfos,
-        recordedSchema(math.min(readVersion, latestVersion()))))
+      else scanSegments(removedInfos, math.min(readVersion, latestVersion()))
     val after =
       if (adds.isEmpty) empty
       // rawToLogical: the staged files hold PHYSICAL names under
       // column mapping — the feed diff compares logical shapes. The
       // staged files were all written with the physical projection of
       // writeSchema, so read with it explicitly (no inference job)
-      else project(rawToLogical(spark.read
+      else rawToLogical(spark.read
         .schema(org.apache.spark.sql.types.StructType(
           writeSchema.fields.map(f =>
             f.copy(name = replMapping.getOrElse(f.name, f.name)))))
-        .parquet(adds.map(d => s"$root/$d"): _*)))
-    val changes = before.exceptAll(after)
-      .withColumn("_change_type", flit("delete"))
-      .unionByName(after.exceptAll(before)
-        .withColumn("_change_type", flit("insert")))
+        .parquet(adds.map(d => s"$root/$d"): _*))
     // `range` is the writing query's selection bound on a stats
     // column (the row-level scan's pushed-predicate range): a
     // concurrent ADD outside it cannot hold a row this rewrite should
@@ -4371,8 +4284,26 @@ class LogStore(spark: SparkSession, val root: String,
     commitRevalidated(readVersion, addMeta, removes,
       ReadSet(removes.toSet, range,
         matchesAnyNewRow = range.isEmpty),
-      cdc = Seq(writeChangeSegment(changes)), schema = schemaAct,
-      props = propsAct)
+      cdc = Seq(writeChangeSegment(rowDiff(before, after, target))),
+      schema = schemaAct, props = propsAct)
+  }
+
+  /** The change feed of replacing `before` with `after` as their
+    * MINIMAL MULTISET DIFF: rows only in `before` as `delete`, rows
+    * only in `after` as `insert`; rows carried over unchanged cancel.
+    * Both sides are projected onto `shape` first (a column a side
+    * lacks reads null), so a diff across a schema evolution aligns. */
+  private def rowDiff(before: DataFrame, after: DataFrame,
+      shape: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.functions.{col => fcol, lit => flit}
+    def project(df: DataFrame): DataFrame =
+      df.select(shape.fields.toSeq.map { f =>
+        (if (df.columns.contains(f.name)) fcol(f.name)
+         else flit(null).cast(f.dataType)).as(f.name)
+      }: _*)
+    val (b, a) = (project(before), project(after))
+    b.exceptAll(a).withColumn("_change_type", flit("delete"))
+      .unionByName(a.exceptAll(b).withColumn("_change_type", flit("insert")))
   }
 
   /** Publish ALREADY-WRITTEN segment directories as ONE append

@@ -56,8 +56,11 @@ final class BillingJob(
   /** §3.1: the production daily run. */
   def processDailyBilling(rawSessions: DataFrame, rawEvents: DataFrame,
       targetDate: String, scheduled: Boolean = false): BatchReport = {
+    // the day's caches are released whether the day succeeds or throws
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { cached += df.cache(); df }
     try {
-      val sessions = BillingOps.activeSessions(rawSessions).cache()
+      val sessions = cache(BillingOps.activeSessions(rawSessions))
       val sessionCount = sessions.count()
       if (sessionCount == 0) { // early-exit guard (billing.ts:56-69)
         val report = emptyReport(targetDate, scheduled,
@@ -69,7 +72,7 @@ final class BillingJob(
       val pageViews = BillingOps.pageViewsForDate(rawEvents, targetDate)
       val records =
         BillingOps.billingRecords(sessions, pageViews, targetDate, cfg)
-      val pending = BillingOps.withPendingStatus(records).cache()
+      val pending = cache(BillingOps.withPendingStatus(records))
 
       // 2. write-ahead: pending rows land before any charge is attempted
       usageStore.append(pending)
@@ -116,7 +119,7 @@ final class BillingJob(
 
       // 4. append final statuses (J3 enrich; append-only)
       val enriched =
-        BillingOps.enrichWithChargeResults(pending, results).cache()
+        cache(BillingOps.enrichWithChargeResults(pending, results))
       val totalsObs = Observation()
       usageStore.append(BillingJob.observed(enriched, totalsObs,
         BillingJob.totalsAndActiveColumns))
@@ -126,7 +129,6 @@ final class BillingJob(
       val report = buildReport(targetDate, scheduled, sessionCount,
         enriched, results, totalsObs, histogramObs)
       reportSink.send(report)
-      sessions.unpersist(); pending.unpersist(); enriched.unpersist()
       report
     } catch {
       case e: Throwable =>
@@ -170,7 +172,7 @@ final class BillingJob(
               Some(stack))))
         reportSink.send(report)
         report
-    }
+    } finally cached.foreach(_.unpersist())
   }
 
   /** §3.2: the dry run — same read/join/aggregate plan, no writes, no

@@ -287,11 +287,7 @@ final class LogStreamTable(schema: StructType, root: String,
             s"cannot translate $f to a delete predicate")))
         val pred =
           if (preds.isEmpty) "true" else preds.mkString("(", ") AND (", ")")
-        // deleteWhereDV's `where(pred)` already has SQL NULL
-        // semantics; the copy-on-write path needs the coalesce for
-        // its NOT(pred) KEEP side
-        if (dv) store.deleteWhereDV(pred)
-        else store.deleteWhere(s"coalesce(($pred), false)")
+        if (dv) store.deleteWhereDV(pred) else store.deleteWhere(pred)
     }
   }
 }

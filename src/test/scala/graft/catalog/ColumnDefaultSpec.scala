@@ -87,6 +87,19 @@ class ColumnDefaultSpec extends AnyFunSuite {
     assert(q.read().count() == 1L)
   }
 
+  test("a narrow keyed upsert materializes the DEFAULT whether or not " +
+      "it touches a stored segment, on both entry points") {
+    root
+    spark.sql("CREATE TABLE gdef.u (id BIGINT, qty DOUBLE DEFAULT 2.5)")
+    val store = LogStore.configured(spark, s"$root/u")
+    store.append(Seq((1L, 9.0), (2L, 8.0)).toDF("id", "qty"))
+    store.mergeKeyed(Seq(1L, 3L).toDF("id"), Seq("id"))
+    store.applyChangesKeyed(Seq(4L).toDF("id"),
+      Seq.empty[Long].toDF("id"), Seq("id"), 1L)
+    assert(store.read().select("id", "qty").as[(Long, Double)].collect()
+      .toMap == Map(1L -> 2.5, 2L -> 8.0, 3L -> 2.5, 4L -> 2.5))
+  }
+
   test("a path-based staged write omitting a default-bearing column " +
       "refuses (executor files cannot be padded after the fact); " +
       "ALTER TABLE ADD COLUMN ... DEFAULT refuses (CREATE-time only)") {

@@ -61,12 +61,41 @@ class JobBudgetSpec extends AnyFunSuite {
       (b._1, b._2)).contains(("1970-03-11", "1970-06-18")))
   }
 
-  test("mergeKeyed on the churn table is 11 jobs") {
+  test("mergeKeyed on the churn table is 10 jobs") {
     val store = churnTable()
     store.append(rows(1L to 200L))
     store.append(rows(201L to 400L))
     assert(jobsOf(store.mergeKeyed(rows(Seq(5L, 250L, 401L)),
-      Seq("k"))) == 11)
+      Seq("k"))) == 10)
+  }
+
+  test("applyChangesKeyed with deletes on the churn table is 12 " +
+      "jobs") {
+    val store = churnTable()
+    store.append(rows(1L to 200L))
+    store.append(rows(201L to 400L))
+    assert(jobsOf(store.applyChangesKeyed(rows(Seq(5L, 250L, 401L)),
+      Seq(7L, 300L).toDF("k"), Seq("k"), 1L)) == 12)
+  }
+
+  test("deleteKeysDV on the churn table is 7 jobs") {
+    val store = churnTable()
+    store.append(rows(1L to 200L))
+    store.append(rows(201L to 400L))
+    assert(jobsOf(store.deleteKeysDV(Seq(7L, 300L).toDF("k"),
+      Seq("k"))) == 7)
+  }
+
+  test("a Bloom point lookup and a stats range read are one job each " +
+      "(the collect)") {
+    val store = churnTable()
+    store.append(rows(1L to 200L))
+    store.append(rows(201L to 400L))
+    var got: Array[org.apache.spark.sql.Row] = null
+    assert(jobsOf { got = store.pointLookup("key-250")._1.collect() } == 1)
+    assert(got.map(_.getLong(0)).toSeq == Seq(250L))
+    assert(jobsOf { got = store.readRange("5", "9")._1.collect() } == 1)
+    assert(got.map(_.getLong(0)).sorted.toSeq == (5L to 9L))
   }
 
   test("maintainLayout when it triggers is 2 jobs") {

@@ -41,6 +41,17 @@ class LogStoreSpec extends AnyFunSuite {
       "pre-delete snapshot must be unaffected")
   }
 
+  test("deleteWhere keeps a row whose predicate is NULL and emits no " +
+      "delete for it") {
+    val t = fresh()
+    t.append(Seq((1L, Some("a")), (2L, None), (3L, Some("b")))
+      .toDF("id", "s"))
+    val v = t.deleteWhere("s = 'a'")
+    assert(ids(t.read()) == Set(2L, 3L))
+    assert(t.readChanges(v, v).select(col("_change_type"), col("id"))
+      .as[(String, Long)].collect().toSeq == Seq(("delete", 1L)))
+  }
+
   test("compaction preserves rows exactly and collapses to one " +
       "segment; the pre-compaction version stays readable") {
     val t = fresh()

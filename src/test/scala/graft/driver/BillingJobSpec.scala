@@ -148,6 +148,31 @@ class BillingJobSpec extends AnyFunSuite {
     assert(report.successful == 0 && report.failed == 0)
   }
 
+  test("a failed day releases its caches: the session caches none of " +
+      "its plans after the final append throws") {
+    // the pending append succeeds, the final one throws — by then the
+    // day has cached its sessions, pending and enriched frames
+    val store = new AppendStore(spark,
+      Files.createTempDirectory("graft-fail-cache").toString + "/usage") {
+      private var appends = 0
+      override def append(df: org.apache.spark.sql.DataFrame): Unit = {
+        appends += 1
+        if (appends == 2) throw new RuntimeException("final append failed")
+        super.append(df)
+      }
+    }
+    val sink = new ChargeSink(() => new FakeChargeClient(), concurrency = 2,
+      sleep = _ => ())
+    val job = new BillingJob(spark, store, sink, new CollectingReportSink,
+      cfg)
+    spark.catalog.clearCache()
+    val report = job.processDailyBilling(sessions, eventsDf, D)
+    assert(report.error.exists(_.contains("final append failed")))
+    assert(store.readOrEmpty(Schemas.usageRecords).count() == 3,
+      "the pending append ran before the failure")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("failure path bounds driver rows: topShops caps at " +
       "maxShopsToShow, remainder counted distributively") {
     // 14 active shops, failing store: the reconstruction must collect
