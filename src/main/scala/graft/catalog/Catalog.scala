@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -43,6 +44,24 @@ class AppendStore(spark: SparkSession, val path: String,
       spark.read.option("mergeSchema", "true").parquet(path)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+
+  /** One partition of a partitioned store — the directory `value`
+    * of the partition column was written to — read at the caller's
+    * `schema` (the columns written there, less the partition column),
+    * so no sibling partition is listed and no footer is read to infer
+    * a schema: building the frame starts no Spark job. An absent
+    * partition reads as an empty frame with that schema. */
+  def readPartition(schema: StructType, value: String): DataFrame = {
+    val c = partitionCol.getOrElse(throw new IllegalStateException(
+      s"$path has no partition column"))
+    val dir = new org.apache.hadoop.fs.Path(path,
+      ExternalCatalogUtils.getPartitionPathString(c, value))
+    if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(dir))
+      spark.read.schema(schema).parquet(dir.toString)
+    else
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
 
   /** S4 semantics: append; new nullable columns simply widen the merged
     * read schema (old files read them as null). `created_at` is stamped

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.{AppendStore, LogStore}
 import graft.model._
-import graft.operators.BillingOps
+import graft.operators.{BillingOps, TopKAggregator}
 import graft.sinks._
 
 /** End-to-end orchestration of the daily billing batch — the Spark
@@ -15,18 +15,29 @@ import graft.sinks._
   *
   * The whole relational middle (scan → filter → agg → join → derive) is
   * ONE lazy plan; actions happen only at the explicitly-ordered effect
-  * points, preserving the reference's write-ahead invariant:
+  * points, preserving the reference's write-ahead invariant. Each runs
+  * only the jobs its data work needs (7 on a small inline fixture):
   *
-  *   1. guard: zero sessions → skipped result, nothing written
+  *   1. guard: zero sessions → skipped result, nothing written. One
+  *      `isEmpty` job.
   *   2. append PENDING records (write-ahead intent log) — a failure here
-  *      aborts BEFORE any external charge (`billing.ts:120-121`)
+  *      aborts BEFORE any external charge (`billing.ts:120-121`). The
+  *      page-view aggregate's shuffle stage, its broadcast and the
+  *      write, which also builds the day's one cache (the pending rows
+  *      with each session's `accessToken`, dropped from both usage
+  *      appends) and observes the session count.
   *   3. external charge sink (`concurrency` calls in flight, retried),
-  *      whose one action is the append into the charge-results store;
-  *      that append also observes the ok/failed/skipped histogram
+  *      whose one action is the append into the charge-results store.
+  *      One write job over the cache: the charge inputs are a
+  *      projection of it, and the sink adds no shuffle. The append
+  *      observes the ok/failed/skipped histogram; the run's outcomes are
+  *      then read from their own partition at the schema written, which
+  *      starts no job.
   *   4. append FINAL records — append-only, never UPDATE
   *      (`billing.ts:161-163`); current state = latest-record-wins view.
-  *      The append observes the report's totals and active-shop count
-  *   5. report: the figures observed in 3 and 4, plus one top-N job
+  *      The outcomes' broadcast and the write, which observes the
+  *      report's totals, active-shop count and top shops.
+  *   5. report: the figures observed in 2, 3 and 4; no job.
   */
 final class BillingJob(
     spark: SparkSession,
@@ -42,12 +53,11 @@ final class BillingJob(
     * consumer (enrich join, report totals) re-reads the persisted
     * outcome instead of re-running the sink — removing the old
     * driver-side `collect()` whose row count ceiling was the active-
-    * shop cardinality. */
+    * shop cardinality. The store is partitioned by `run_id` (a store
+    * passed in must be too): it accumulates every run's outcomes, and
+    * each batch reads back only its own directory instead of scanning
+    * the history. */
   private val chargeResults: AppendStore = chargeResultsStore.getOrElse(
-    // partitioned by run id: the store accumulates every run's
-    // outcomes, and each batch reads back only its own — with the
-    // partition column the `run_id = …` filter prunes to one
-    // directory instead of scanning the history
     new AppendStore(spark, usageStore.path + "__charge_results",
       partitionCol = Some("run_id")))
 
@@ -56,13 +66,11 @@ final class BillingJob(
   /** §3.1: the production daily run. */
   def processDailyBilling(rawSessions: DataFrame, rawEvents: DataFrame,
       targetDate: String, scheduled: Boolean = false): BatchReport = {
-    // the day's caches are released whether the day succeeds or throws
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cache(df: DataFrame): DataFrame = { cached += df.cache(); df }
+    // the day's one cache is released whether the day succeeds or throws
+    var cached: Option[DataFrame] = None
     try {
-      val sessions = cache(BillingOps.activeSessions(rawSessions))
-      val sessionCount = sessions.count()
-      if (sessionCount == 0) { // early-exit guard (billing.ts:56-69)
+      val sessions = BillingOps.activeSessions(rawSessions)
+      if (sessions.isEmpty) { // early-exit guard (billing.ts:56-69)
         val report = emptyReport(targetDate, scheduled,
           error = Some("No active sessions found"))
         reportSink.send(report)
@@ -70,20 +78,29 @@ final class BillingJob(
       }
 
       val pageViews = BillingOps.pageViewsForDate(rawEvents, targetDate)
-      val records =
-        BillingOps.billingRecords(sessions, pageViews, targetDate, cfg)
-      val pending = cache(BillingOps.withPendingStatus(records))
+      // J2 folded in: each record carries its own session's token, so
+      // the charge inputs below are a projection, not a join — one
+      // charge per session row, as the reference's loop over sessions
+      val pending = BillingOps.withPendingStatus(BillingOps.billingRecords(
+        sessions, pageViews, targetDate, cfg, carry = Seq("accessToken")))
+        .cache()
+      cached = Some(pending)
+      val records = pending.drop("accessToken")
 
-      // 2. write-ahead: pending rows land before any charge is attempted
-      usageStore.append(pending)
+      // 2. write-ahead: pending rows land before any charge is attempted.
+      // billingRecords keeps one row per session, so the rows written
+      // are the session count
+      val sessionsObs = Observation()
+      usageStore.append(BillingJob.observed(records, sessionsObs,
+        BillingJob.sessionCountColumns))
 
-      // 3. charge — J2 folded in: (shop, accessToken, amount) travel
-      // together so the sink needs no map probe. The side-effecting plan
-      // runs EXACTLY ONCE, store-mediated: its single action is the
-      // append into the charge-results store below — a lazily-cached
-      // Dataset could re-run its partitions (task retry, cache eviction
-      // between the appends and a later action) and double-charge shops,
-      // where the reference charges each shop exactly once imperatively
+      // 3. charge — (shop, accessToken, amount) travel together so the
+      // sink needs no map probe. The side-effecting plan runs EXACTLY
+      // ONCE, store-mediated: its single action is the append into the
+      // charge-results store below — a lazily-cached Dataset could re-run
+      // its partitions (task retry, cache eviction between the appends
+      // and a later action) and double-charge shops, where the reference
+      // charges each shop exactly once imperatively
       // (`billing.ts:128-160`). Enrichment and reporting then JOIN
       // against the persisted outcome (a fresh parquet scan, incapable
       // of re-invoking the sink), so no charge row ever funnels through
@@ -93,8 +110,6 @@ final class BillingJob(
       // unchanged. Task retries WITHIN the append are absorbed by the
       // idempotency key, exactly as before.
       val chargeInputs = pending
-        .join(sessions.select(BillingOps.normalizeShop($"shop").as("shop"),
-          $"accessToken"), Seq("shop"))
         .select($"shop", $"accessToken", $"billing_amount".as("amount"),
           concat($"shop", lit(s":$targetDate")).as("idempotencyKey"))
         .as[ChargeInput]
@@ -105,29 +120,24 @@ final class BillingJob(
       val runId =
         s"$targetDate#${now().toEpochMilli}#${BillingJob.processToken}#" +
           s"${BillingJob.runSeq.incrementAndGet()}"
-      val chargeOut = chargeSink.chargeAll(spark, chargeInputs)
-        .toDF().withColumn("run_id", lit(runId))
+      val outcomes = chargeSink.chargeAll(spark, chargeInputs).toDF()
       // the report's histogram rides on the append: the observed rows
       // are the rows written (a result stage), never a re-run sink
       val histogramObs = Observation()
-      chargeResults.append(BillingJob.observed(chargeOut, histogramObs,
+      chargeResults.append(BillingJob.observed(
+        outcomes.withColumn("run_id", lit(runId)), histogramObs,
         BillingJob.histogramColumns))
-      val results = chargeResults
-        .readOrEmpty(chargeOut.schema)
-        .where($"run_id" === runId)
-        .drop("run_id", "created_at")
+      val results = chargeResults.readPartition(outcomes.schema, runId)
 
       // 4. append final statuses (J3 enrich; append-only)
-      val enriched =
-        cache(BillingOps.enrichWithChargeResults(pending, results))
-      val totalsObs = Observation()
-      usageStore.append(BillingJob.observed(enriched, totalsObs,
-        BillingJob.totalsAndActiveColumns))
+      val enriched = BillingOps.enrichWithChargeResults(records, results)
+      val finalObs = Observation()
+      usageStore.append(BillingJob.observed(enriched, finalObs,
+        BillingJob.finalColumns))
 
-      // 5. report (A2/A3/A4, L2) — enriched is cached, so the top-shops
-      // collect reads the materialization the final append made
-      val report = buildReport(targetDate, scheduled, sessionCount,
-        enriched, results, totalsObs, histogramObs)
+      // 5. report (A2/A3/A4, L2)
+      val report = buildReport(targetDate, scheduled, records, sessionsObs,
+        enriched, finalObs, results, histogramObs)
       reportSink.send(report)
       report
     } catch {
@@ -172,7 +182,7 @@ final class BillingJob(
               Some(stack))))
         reportSink.send(report)
         report
-    } finally cached.foreach(_.unpersist())
+    } finally cached.foreach(_.unpersist(blocking = true))
   }
 
   /** §3.2: the dry run — same read/join/aggregate plan, no writes, no
@@ -193,33 +203,30 @@ final class BillingJob(
     testBillingForDate(rawSessions, rawEvents,
       BillingOps.utcToday(now().toEpochMilli))
 
-  /** The day's report. Its figures were observed inside the two
-    * appends — totals and the active-shop count on the final append of
+  /** The day's report. Its figures were observed inside the three
+    * appends — the session count on the pending append of `records`,
+    * the totals, active-shop count and top shops on the final append of
     * `enriched`, the A4 histogram on the charge-results append — so
-    * the only job here is the top-N collect. A figure whose
-    * observation has not arrived after the wait is computed with the
-    * same columns as one aggregate over the frame that was written:
-    * `enriched`, or `results` (the persisted outcomes, never the sink
-    * plan). */
+    * building it starts no job. A figure whose observation has not
+    * arrived after the wait is computed with the same columns as one
+    * aggregate over the frame that was written: `records`, `enriched`,
+    * or `results` (the persisted outcomes, never the sink plan). */
   private def buildReport(targetDate: String, scheduled: Boolean,
-      sessionCount: Long, enriched: DataFrame, results: DataFrame,
-      totalsObs: Observation, histogramObs: Observation): BatchReport = {
+      records: DataFrame, sessionsObs: Observation, enriched: DataFrame,
+      finalObs: Observation, results: DataFrame,
+      histogramObs: Observation): BatchReport = {
     def figures(obs: Observation, frame: DataFrame, cols: Seq[Column]) =
       LogStore.awaitObservation(obs)
         .getOrElse(frame.agg(cols.head, cols.tail: _*).head())
     def long(r: Row, i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-    // the top-N job runs first: meanwhile the listener bus delivers the
-    // observations, so the wait below is rarely a wait
-    val top = BillingOps.topShops(enriched, BillingJob.maxShopsToShow)
-      .select($"shop", $"page_views", $"billing_amount",
-        $"shopify_billing_status")
-      .collect().toSeq.map(r => ShopReportRow(r.getString(0), r.getLong(1),
-        r.getDouble(2), r.getString(3)))
-    val t =
-      figures(totalsObs, enriched, BillingJob.totalsAndActiveColumns)
+    val sessionCount =
+      figures(sessionsObs, records, BillingJob.sessionCountColumns).getLong(0)
+    val t = figures(finalObs, enriched, BillingJob.finalColumns)
     val h = figures(histogramObs, results, BillingJob.histogramColumns)
     val (ok, ko, skip) = (long(h, 0), long(h, 1), long(h, 2))
     val activeCount = long(t, 3)
+    val top = t.getSeq[Row](4).map(r => ShopReportRow(r.getString(0),
+      r.getLong(1), r.getDouble(2), r.getString(3)))
     BatchReport(success = ko == 0, targetDate, scheduled, sessionCount,
       recordCount = t.getLong(0),
       totalPageViews = long(t, 1),
@@ -242,12 +249,25 @@ object BillingJob {
     * paths: happy (topShops) and failure (context reconstruction). */
   val maxShopsToShow: Int = 10
 
+  /** The pending append's row count: one record per session. */
+  private val sessionCountColumns: Seq[Column] =
+    Seq(count(lit(1)).as("sessions"))
+
   /** The report's figures over `enriched`: [[BillingOps.totals]]'
-    * record count, page views and rounded amount, then the active-shop
-    * count. */
-  private val totalsAndActiveColumns: Seq[Column] =
-    BillingOps.totalsColumns :+
-    count(when(col("page_views") > 0, true)).as("active_shops")
+    * record count, page views and rounded amount, the active-shop
+    * count, then the top shops — [[BillingOps.topShops]]' rows (page
+    * views > 0, amount desc, shop asc) kept by a k-bounded aggregator,
+    * so no more than `maxShopsToShow` rows reach the driver. */
+  private val finalColumns: Seq[Column] = BillingOps.totalsColumns ++ Seq(
+    count(when(col("page_views") > 0, true)).as("active_shops"),
+    udaf(new TopKAggregator[ShopReportRow](maxShopsToShow,
+        Ordering.by((r: ShopReportRow) => (r.billingAmount, r.shop))(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse,
+            Ordering.String)),
+        keep = _.pageViews > 0)).apply(
+      col("shop"), col("page_views"), col("billing_amount"),
+      col("shopify_billing_status"), lit(null).cast("string"),
+      lit(null).cast("string")).as("top_shops"))
 
   /** A4 histogram over the charge outcomes (successful, failed,
     * skipped): three counters, never the rows. */

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -101,30 +103,35 @@ object BillingOps {
   // ---- joins ----------------------------------------------------------
 
   /** J1 + X6: sessions ⟕ pageViews on shop, missing key → 0 views
-    * (reference `src/services/billing.ts:249-280`). The aggregated
-    * page-view side is orders of magnitude smaller than the event log, so
-    * it is broadcast explicitly — at 100 TB of events the per-shop daily
-    * aggregate is still ≤ number-of-shops rows. */
+    * (reference `src/services/billing.ts:249-280`), one row per session.
+    * The aggregated page-view side is orders of magnitude smaller than
+    * the event log, so it is broadcast explicitly — at 100 TB of events
+    * the per-shop daily aggregate is still ≤ number-of-shops rows. The
+    * session columns named in `carry` ride along after the record's own
+    * (the batch carries `accessToken` to its charge inputs, J2). */
   def billingRecords(sessions: DataFrame, pageViews: DataFrame,
-      targetDate: String, cfg: BillingConfig = BillingConfig()): DataFrame =
-    sessions.select(normalizeShop(col("shop")).as("shop"))
+      targetDate: String, cfg: BillingConfig = BillingConfig(),
+      carry: Seq[String] = Nil): DataFrame =
+    sessions.select(normalizeShop(col("shop")).as("shop") +:
+        carry.map(col): _*)
       .join(broadcast(pageViews), Seq("shop"), "left_outer")
       .withColumn("page_views", coalesce(col("event_count"), lit(0L)))
-      .select(
+      .select(Seq(
         col("shop"),
         to_date(lit(targetDate)).as("billing_date"),
         col("page_views"),
         chargeAmount(col("page_views"), cfg.ratePerMillion)
           .as("billing_amount"),
-        lit(cfg.ratePerMillion).as("rate_per_million"))
+        lit(cfg.ratePerMillion).as("rate_per_million")) ++
+        carry.map(col): _*)
 
   /** status ← pending (reference `src/services/billing.ts:85-88`). */
   def withPendingStatus(records: DataFrame): DataFrame =
-    records
-      .withColumn("shopify_charge_id", lit(null).cast("string"))
-      .withColumn("shopify_billing_status", lit(Status.Pending))
-      .withColumn("shopify_error_message", lit(null).cast("string"))
-      .withColumn("shopify_processed_at", lit(null).cast("timestamp"))
+    records.withColumns(ListMap(
+      "shopify_charge_id" -> lit(null).cast("string"),
+      "shopify_billing_status" -> lit(Status.Pending),
+      "shopify_error_message" -> lit(null).cast("string"),
+      "shopify_processed_at" -> lit(null).cast("timestamp")))
 
   /** J3: enrich billing records with charge outcomes — left join on shop,
     * unmatched records keep their prior status (reference
@@ -141,15 +148,16 @@ object BillingOps {
       col("chargeId").as("charge_id"),
       col("error").as("charge_error")))
     records.join(r, Seq("shop"), "left_outer")
-      .withColumn("shopify_billing_status",
-        coalesce(col("charge_status"), col("shopify_billing_status")))
-      .withColumn("shopify_charge_id",
-        coalesce(col("charge_id"), col("shopify_charge_id")))
-      .withColumn("shopify_error_message",
-        coalesce(col("charge_error"), col("shopify_error_message")))
-      .withColumn("shopify_processed_at",
-        when(col("charge_status").isNotNull, current_timestamp())
-          .otherwise(col("shopify_processed_at")))
+      .withColumns(ListMap(
+        "shopify_billing_status" ->
+          coalesce(col("charge_status"), col("shopify_billing_status")),
+        "shopify_charge_id" ->
+          coalesce(col("charge_id"), col("shopify_charge_id")),
+        "shopify_error_message" ->
+          coalesce(col("charge_error"), col("shopify_error_message")),
+        "shopify_processed_at" ->
+          when(col("charge_status").isNotNull, current_timestamp())
+            .otherwise(col("shopify_processed_at"))))
       .drop("charge_status", "charge_id", "charge_error")
   }
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -8,40 +10,46 @@ import org.apache.spark.sql.functions._
 /** One scored item inside the top-k buffer. */
 final case class Scored(id: Long, score: Long)
 
-/** Typed per-group top-k as an `Aggregator` (SURVEY §2.10's typed custom
-  * aggregate surface). Why not `row_number` + filter: the window form
-  * shuffles and sorts EVERY row of every group; this aggregator's
-  * reduce/merge runs map-side, so each partition ships at most k rows
-  * per group to the shuffle — at 100 TB the difference between moving
-  * the dataset and moving k × |groups| rows.
+/** Typed top-k as an `Aggregator` (SURVEY §2.10's typed custom
+  * aggregate surface): the `k` least rows under `ord` among those
+  * `keep` admits, in `ord` order. Why not `row_number` + filter: the
+  * window form shuffles and sorts EVERY row of every group; this
+  * aggregator's reduce/merge runs map-side, so each partition ships at
+  * most k rows per group to the shuffle — at 100 TB the difference
+  * between moving the dataset and moving k × |groups| rows. The same
+  * bound makes it a global top-k a `Dataset.observe` can carry: the
+  * daily billing report takes its top shops from the final append.
   *
-  * Ordering is (score desc, id asc) — ties pinned for deterministic
-  * output. Buffer stays a sorted k-capped Vector: k is small (report
-  * top-10s, per-type leaderboards), so O(k) insertion beats heap
-  * bookkeeping.
+  * `ord` must be total (ties pinned) for deterministic output. Buffer
+  * stays a sorted k-capped Vector: k is small (report top-10s, per-type
+  * leaderboards), so O(k) insertion beats heap bookkeeping.
   */
-final class TopKAggregator(k: Int)
-    extends Aggregator[Scored, Seq[Scored], Seq[Scored]] {
+final class TopKAggregator[T: TypeTag](k: Int, ord: Ordering[T],
+    keep: T => Boolean = (_: T) => true)
+    extends Aggregator[T, Seq[T], Seq[T]] {
 
-  private val ord: Ordering[Scored] =
-    Ordering.by((s: Scored) => (-s.score, s.id))
+  override def zero: Seq[T] = Vector.empty
 
-  override def zero: Seq[Scored] = Vector.empty
-
-  override def reduce(buf: Seq[Scored], x: Scored): Seq[Scored] =
-    if (buf.size < k) (buf :+ x).sorted(ord)
+  override def reduce(buf: Seq[T], x: T): Seq[T] =
+    if (!keep(x)) buf
+    else if (buf.size < k) (buf :+ x).sorted(ord)
     else if (ord.lt(x, buf.last)) (buf.init :+ x).sorted(ord)
     else buf
 
-  override def merge(a: Seq[Scored], b: Seq[Scored]): Seq[Scored] =
+  override def merge(a: Seq[T], b: Seq[T]): Seq[T] =
     (a ++ b).sorted(ord).take(k)
 
-  override def finish(buf: Seq[Scored]): Seq[Scored] = buf.sorted(ord)
+  override def finish(buf: Seq[T]): Seq[T] = buf.sorted(ord)
 
-  override def bufferEncoder: Encoder[Seq[Scored]] =
-    ExpressionEncoder[Seq[Scored]]()
-  override def outputEncoder: Encoder[Seq[Scored]] =
-    ExpressionEncoder[Seq[Scored]]()
+  private val seqEncoder: Encoder[Seq[T]] = ExpressionEncoder[Seq[T]]()
+  override def bufferEncoder: Encoder[Seq[T]] = seqEncoder
+  override def outputEncoder: Encoder[Seq[T]] = seqEncoder
+}
+
+object TopKAggregator {
+  /** Top-k [[Scored]] items, ordered (score desc, id asc). */
+  def scored(k: Int): TopKAggregator[Scored] =
+    new TopKAggregator(k, Ordering.by((s: Scored) => (-s.score, s.id)))
 }
 
 object TopK {
@@ -58,7 +66,7 @@ object TopK {
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapValues(t => Scored(t._2, t._3))
-      .agg(new TopKAggregator(k).toColumn.name("topk"))
+      .agg(TopKAggregator.scored(k).toColumn.name("topk"))
       .flatMap { case (g, xs) =>
         xs.zipWithIndex.map { case (s, i) => (g, (i + 1).toLong, s.id, s.score) }
       }

@@ -73,17 +73,23 @@ object Retry {
   * Distribution model: at most `concurrency` charges are in flight at
   * once, whatever the task slots, like the reference's
   * `pLimit(BATCH_SIZE=5)` event-loop gate (`shopifyBilling.ts:53,64-78`,
-  * U1). The rows are spread over `p = min(concurrency,
-  * defaultParallelism)` partitions, and each partition streams its rows
-  * through a window of in-flight calls on its own daemon threads; the
-  * windows sum to `concurrency` (`concurrency / p` each, the remainder
-  * to the low partition ids). While a partition has rows left, a
-  * finished call frees its slot for the next row, so with enough rows
-  * in every partition the peak in flight is `concurrency`, and it is
-  * never more. Outcomes leave in completion order, one per input row. The per-partition client is
-  * constructed once (connection reuse) and shared by the window's
-  * threads; the Q1 line-item lookup is cached per (shop, token) within
-  * a partition, mirroring how the reference pays Q1 once per shop.
+  * U1). The input is coalesced to at most `min(concurrency,
+  * defaultParallelism)` partitions — a narrow dependency, so the calls
+  * run in the tasks that produce the rows and no shuffle precedes them
+  * — and each partition streams its rows through a window of in-flight
+  * calls on its own daemon threads. The windows are sized from the
+  * partition count the tasks actually see (`TaskContext.numPartitions`,
+  * which is below the target when the input has fewer partitions):
+  * `concurrency / n` each, the remainder to the low partition ids, so
+  * they always sum to `concurrency`, and an input that arrives in one
+  * partition gets one window of `concurrency`. While a partition has
+  * rows left, a finished call frees its slot for the next row, so with
+  * enough rows in every partition the peak in flight is `concurrency`,
+  * and it is never more. Outcomes leave in completion order, one per
+  * input row. The per-partition client is constructed once (connection
+  * reuse) and shared by the window's threads; the Q1 line-item lookup
+  * is cached per (shop, token) within a partition, mirroring how the
+  * reference pays Q1 once per shop.
   *
   * Semantics preserved from the reference: zero/negative amounts short-
   * circuit to `skipped` BEFORE any API call (F5, `shopifyBilling.ts:
@@ -100,9 +106,10 @@ final class ChargeSink(clientFactory: () => ChargeClient,
     val parts = math.min(concurrency, spark.sparkContext.defaultParallelism)
     val (factory, total, retries, delay, slp) =
       (clientFactory, concurrency, maxRetries, baseDelayMs, sleep)
-    charges.repartition(parts).mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val width = total / parts + (if (pid < total % parts) 1 else 0)
+    charges.coalesce(parts).mapPartitions { it =>
+      val task = TaskContext.get()
+      val (pid, n) = (task.partitionId(), task.numPartitions())
+      val width = total / n + (if (pid < total % n) 1 else 0)
       val client = factory()
       val lineItems = new LineItemCache(client)
       new InFlightWindow(it, width, s"charge-sink-p$pid")({ c =>

@@ -50,6 +50,40 @@ class AppendStoreSpec extends AnyFunSuite {
     assert(store.missingNullableFields(Schemas.usageRecords).isEmpty)
   }
 
+  /** A store partitioned by `run_id`, holding two runs whose ids need
+    * escaping in a directory name, as the billing run ids do. */
+  private def twoRuns(): AppendStore = {
+    val store = new AppendStore(spark, tmp() + "/runs",
+      partitionCol = Some("run_id"))
+    store.append(Seq(("shop-a", 1L, "d#1:a"), ("shop-b", 2L, "d#1:a"))
+      .toDF("shop", "n", "run_id"))
+    store.append(Seq(("shop-a", 3L, "d#2:b")).toDF("shop", "n", "run_id"))
+    store
+  }
+
+  private val runRows = Seq(("", 0L)).toDF("shop", "n").schema
+
+  test("readPartition: an absent partition reads as an empty frame with " +
+      "the caller's schema") {
+    val df = twoRuns().readPartition(runRows, "d#3:c")
+    assert(df.count() == 0)
+    assert(df.schema == runRows)
+  }
+
+  test("readPartition: a present partition returns only its own rows") {
+    val got = twoRuns().readPartition(runRows, "d#1:a")
+      .as[(String, Long)].collect().toSet
+    assert(got == Set(("shop-a", 1L), ("shop-b", 2L)))
+  }
+
+  test("readPartition: building the frame starts no Spark job") {
+    val store = twoRuns()
+    assert(org.apache.spark.TestBus.jobsOf(spark.sparkContext) {
+      store.readPartition(runRows, "d#2:b")
+      store.readPartition(runRows, "d#3:c")
+    } == 0)
+  }
+
   test("S4: caller-provided created_at is preserved, not overwritten") {
     val store = new AppendStore(spark, tmp() + "/preserve")
     val t = Timestamp.valueOf("2020-06-01 12:00:00")

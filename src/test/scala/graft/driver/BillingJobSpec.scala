@@ -3,6 +3,8 @@ package graft.driver
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -288,6 +290,35 @@ class BillingJobSpec extends AnyFunSuite {
     assert(report.topShops.size == BillingJob.maxShopsToShow)
   }
 
+  test("J2: one charge per session row, each with its own token, and " +
+      "no token reaches the usage log or the charge results") {
+    TokenChargeClient.reset()
+    val base = Files.createTempDirectory("graft-j2").toString
+    val store = new AppendStore(spark, base + "/usage")
+    val sink = new ChargeSink(() => new TokenChargeClient, concurrency = 2,
+      sleep = _ => ())
+    val job = new BillingJob(spark, store, sink,
+      new CollectingReportSink, cfg)
+    // two sessions normalize to one shop: the reference's charge loop
+    // iterates sessions, so each is charged once, with its own token
+    val t0 = ts("2024-01-01 00:00:00")
+    val twoTokens = Seq(("shop-x", "tok-a", t0, t0),
+        ("shop-x.myshopify.com", "tok-b", t0, t0))
+      .toDF("shop", "accessToken", "createdAt", "updatedAt")
+    val events = Seq(
+      ("shop-x.myshopify.com", "page_viewed", ts("2024-01-15 10:00:00")),
+      ("shop-x", "page_viewed", ts("2024-01-15 11:00:00"))
+    ).toDF("shop", "name", "created_at")
+    val report = job.processDailyBilling(twoTokens, events, D)
+    assert(report.error.isEmpty && report.sessionCount == 2)
+    assert(TokenChargeClient.calls.asScala.toSeq.sorted ==
+      Seq(("shop-x", "tok-a"), ("shop-x", "tok-b")))
+    Seq("/usage", "/usage__charge_results").foreach { dir =>
+      assert(!spark.read.parquet(base + dir).columns
+        .contains("accessToken"), dir)
+    }
+  }
+
   test("replay of the same billing date cannot double-charge: " +
       "idempotency keys collapse re-runs to one creation per shop") {
     CountingChargeClient.reset()
@@ -342,4 +373,24 @@ object CountingChargeClient {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   val creations = new java.util.concurrent.atomic.AtomicInteger(0)
   def reset(): Unit = { charged.clear(); creations.set(0) }
+}
+
+/** A [[graft.sinks.ChargeClient]] that records, JVM-wide, the (shop,
+  * token) of every charge it is asked to create. */
+class TokenChargeClient extends graft.sinks.ChargeClient with Serializable {
+  override def lookupSubscriptionLineItem(shop: String, token: String) =
+    s"gid://fake/LineItem/$shop"
+  override def createUsageCharge(shop: String, token: String, li: String,
+      amount: Double, description: String,
+      idempotencyKey: String = ""): String = {
+    TokenChargeClient.calls.add((shop, token))
+    s"gid://fake/AppUsageRecord/$shop/$token"
+  }
+  override def testConnection(shop: String, token: String): Boolean = true
+}
+
+object TokenChargeClient {
+  val calls =
+    new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+  def reset(): Unit = calls.clear()
 }

@@ -9,14 +9,14 @@ class TopKSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("aggregator keeps top-k with (score desc, id asc) tie-break") {
-    val agg = new TopKAggregator(2)
+    val agg = TopKAggregator.scored(2)
     val buf = Seq(Scored(5L, 10L), Scored(3L, 10L), Scored(9L, 20L),
       Scored(1L, 1L)).foldLeft(agg.zero)(agg.reduce)
     assert(agg.finish(buf) === Seq(Scored(9L, 20L), Scored(3L, 10L)))
   }
 
   test("merge of partial buffers equals global top-k") {
-    val agg = new TopKAggregator(3)
+    val agg = TopKAggregator.scored(3)
     val all = (1L to 10L).map(i => Scored(i, i * 2))
     val (p1, p2) = all.splitAt(4)
     val merged = agg.merge(

@@ -5,12 +5,15 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.model.ChargeInput
+import graft.model.{ChargeInput, UsageChargeResult}
 
-class ChargeSinkSpec extends AnyFunSuite {
+class ChargeSinkSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -80,16 +83,21 @@ class ChargeSinkSpec extends AnyFunSuite {
   }
 
   /** U1 on the `local[4]` session: every configured in-flight slot is
-    * used, whether `concurrency` exceeds the task slots or not. */
-  private def peakOf(concurrency: Int): Unit = {
+    * used, whether `concurrency` exceeds the task slots or not, and
+    * however many partitions the input arrives in. Returns the charged
+    * plan. */
+  private def peakOf(concurrency: Int,
+      input: Seq[ChargeInput] => Dataset[ChargeInput] = _.toDS())
+      : Dataset[UsageChargeResult] = {
     PeakChargeClient.reset()
     val sink = new ChargeSink(() => new PeakChargeClient, concurrency,
       maxRetries = 3, baseDelayMs = 1L, sleep = noSleep)
     // every fifth shop fails its first charge with a retryable 503
-    val charges = (1 to 60).map(i =>
+    val charges = input((1 to 60).map(i =>
       ChargeInput(f"s$i%02d", if (i % 5 == 0) "flaky" else "t", 1.0,
-        f"s$i%02d:d")).toDS()
-    val out = sink.chargeAll(spark, charges).collect()
+        f"s$i%02d:d")))
+    val charged = sink.chargeAll(spark, charges)
+    val out = charged.collect()
     assert(out.length == 60 && out.forall(r => r.success && !r.skipped))
     assert(out.map(_.shop).toSet.size == 60)
     assert(PeakChargeClient.peak.get() == concurrency)
@@ -100,6 +108,7 @@ class ChargeSinkSpec extends AnyFunSuite {
       PeakChargeClient.lookups.values().asScala.forall(_.get() == 1),
       "Q1 runs once per (shop, token), retries included")
     assert(PeakChargeClient.retried.get() == 12)
+    charged
   }
 
   test("U1: concurrency above the task slots keeps that many calls in " +
@@ -110,6 +119,15 @@ class ChargeSinkSpec extends AnyFunSuite {
   test("U1: concurrency below the task slots keeps that many calls in " +
       "flight") {
     peakOf(3)
+  }
+
+  test("U1: an input in one partition (the billing shape) keeps " +
+      "`concurrency` calls in flight with no shuffle") {
+    val charged = peakOf(4,
+      xs => spark.createDataset(spark.sparkContext.parallelize(xs, 1)))
+    val plan = charged.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty,
+      plan.toString)
   }
 
   test("idempotency key collapses a replayed charge to one creation") {
