@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Par.par2
+import graft.sources.{LogDataWriterFactory, LogWriteMessage,
+  SegmentStatsSpec}
 
 /** A log-structured table with snapshot isolation, time travel,
   * compaction, checkpointing and vacuum — the lakehouse transaction
@@ -1429,8 +1431,8 @@ class LogStore(spark: SparkSession, val root: String,
   /** Position `i` (0..3) of [[bloomPositions]] as a Spark expression
     * over a column: md5 of the value's string spelling, hex slice
     * `i`, mod [bloomBits] — NULL for a NULL value. The one definition
-    * both Bloom builds use: the in-write observation
-    * ([[writeObserved]]) and [[segmentsMeta]]'s read-back job. (The
+    * of the positions a segment's Bloom filter holds: every write
+    * task evaluates it, bound to its rows ([[segmentWriter]]). (The
     * hex serialization lives in [[LogStore.bloomHexOf]].) */
   private def bloomPosCol(c: org.apache.spark.sql.Column,
       i: Int): org.apache.spark.sql.Column = {
@@ -1440,335 +1442,74 @@ class LogStore(spark: SparkSession, val root: String,
       16, 10).cast("long"), flit(bloomBits.toLong)).cast("int")
   }
 
-  /** Exact row count — and, when `statCols` is non-empty, exact
-    * column BOUNDS — of a written segment directory from its parquet
-    * FOOTERS, read driver-side: a handful of small metadata reads, no
-    * Spark job. `written.count()` + a min/max aggregation compute the
-    * same values but schedule full jobs to do it; at one-plus jobs per
-    * segment write that was a fixed tax on every commit in the system.
-    *
-    * Bounds are requested only for types whose footer value spells
-    * IDENTICALLY to Spark's `cast(min(col) AS STRING)`: the integral
-    * family (decimal integer digits either way) and strings (the
-    * footer stores the exact bytes; parquet's STRING comparator and
-    * Spark's UTF8String ordering are both unsigned-lexicographic).
-    * Dates are footer INT32 epoch days, spelled here the way
-    * `cast(min(d) AS STRING)` spells them (`yyyy-MM-dd`, proleptic
-    * Gregorian) — but only where the two provably agree: years
-    * 0001–9999, and either a file Spark 3+ wrote without the legacy
-    * calendar rebase or days on or after the 1582-10-15 cutover (where
-    * the rebase is the identity); any other date falls back to the
-    * job. Floating point (NaN poisons footer stats), decimals and
-    * timestamps keep the aggregation-job path: timestamps because
-    * Spark writes them as INT96, which carries no footer statistics.
-    * Returns (rows, None) when any requested chunk lacks usable
-    * statistics (e.g. oversized string bounds dropped by the writer)
-    * — the caller falls back to the job. */
-  private def footerMeta(name: String,
-      statCols: Seq[(String, String, org.apache.spark.sql.types.DataType)])
-      : (Long, Option[Map[String, (String, String)]]) = {
-    import org.apache.spark.sql.types.{DateType, StringType}
-    val conf = spark.sparkContext.hadoopConfiguration
-    var rows = 0L
-    // accumulated per LOGICAL column name: (min, max) as raw values
-    val longB = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-    val strB = scala.collection.mutable.HashMap
-      .empty[String, (Array[Byte], Array[Byte])]
-    var usable = true
-    // every file's footer days are the proleptic days Spark reads
-    var prolepticDays = true
-    fs.listStatus(new Path(s"$root/$name")).map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(p, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          rows += r.getRecordCount
-          if (statCols.exists(_._3 == DateType)) {
-            val kv = r.getFooter.getFileMetaData.getKeyValueMetaData
-            // Spark's own read-side rule (DataSourceUtils.
-            // datetimeRebaseSpec): no rebase for a Spark 3+ file that
-            // does not carry the legacy-calendar key (the keys are
-            // Spark's SPARK_VERSION_METADATA_KEY and
-            // SPARK_LEGACY_DATETIME_METADATA_KEY)
-            prolepticDays = prolepticDays &&
-              Option(kv.get("org.apache.spark.version"))
-                .exists(_ >= "3.0.0") &&
-              !kv.containsKey("org.apache.spark.legacyDateTime")
-          }
-          if (statCols.nonEmpty) {
-            val blocks = r.getFooter.getBlocks
-            blocks.forEach { b =>
-              val byPath = new scala.collection.mutable.HashMap[String,
-                org.apache.parquet.hadoop.metadata.ColumnChunkMetaData]()
-              b.getColumns.forEach(cc =>
-                byPath(cc.getPath.toDotString) = cc)
-              statCols.foreach { case (logical, phys, dt) =>
-                byPath.get(phys) match {
-                  case Some(cc) =>
-                    val st = cc.getStatistics
-                    if (st == null || st.isEmpty) usable = false
-                    else if (st.hasNonNullValue) {
-                      if (dt == StringType) {
-                        val lo = st.genericGetMin
-                          .asInstanceOf[org.apache.parquet.io.api.Binary]
-                          .getBytes
-                        val hi = st.genericGetMax
-                          .asInstanceOf[org.apache.parquet.io.api.Binary]
-                          .getBytes
-                        strB.get(logical) match {
-                          case Some((plo, phi)) => strB(logical) = (
-                            if (java.util.Arrays.compareUnsigned(lo, plo)
-                              < 0) lo else plo,
-                            if (java.util.Arrays.compareUnsigned(hi, phi)
-                              > 0) hi else phi)
-                          case None => strB(logical) = (lo, hi)
-                        }
-                      } else {
-                        val lo = st.genericGetMin
-                          .asInstanceOf[Number].longValue()
-                        val hi = st.genericGetMax
-                          .asInstanceOf[Number].longValue()
-                        longB.get(logical) match {
-                          case Some((plo, phi)) => longB(logical) =
-                            (math.min(lo, plo), math.max(hi, phi))
-                          case None => longB(logical) = (lo, hi)
-                        }
-                      }
-                    } else if (st.getNumNulls != cc.getValueCount)
-                      // not all-null yet no values: stats were dropped
-                      usable = false
-                  case None => usable = false
-                }
-              }
-            }
-          }
-        } finally r.close()
-      }
-    val dates = statCols.collect { case (c, _, DateType) => c }.toSet
-    def day(d: Long) = java.time.LocalDate.ofEpochDay(d)
-    val cutover = java.time.LocalDate.of(1582, 10, 15).toEpochDay
-    val datesSpellable = longB.forall { case (c, (lo, hi)) =>
-      !dates(c) || (day(lo).getYear >= 1 && day(hi).getYear <= 9999 &&
-        (prolepticDays || lo >= cutover))
-    }
-    if (statCols.isEmpty) (rows, None)
-    else if (!usable || !datesSpellable) (rows, None)
-    else (rows, Some(
-      longB.map { case (c, (lo, hi)) =>
-        c -> (if (dates(c)) (day(lo).toString, day(hi).toString)
-          else (lo.toString, hi.toString)) }.toMap ++
-      strB.map { case (c, (lo, hi)) =>
-        c -> (new String(lo, StandardCharsets.UTF_8),
-          new String(hi, StandardCharsets.UTF_8)) }.toMap))
-  }
-
-  /** The add actions (rows, stats, Bloom) of a BATCH of ALREADY-written
-    * segment directories sharing one write schema. Rows always come
-    * from the parquet footers, and so do the bounds wherever
-    * [[footerMeta]] can spell them; otherwise every segment's bounds
-    * come out of ONE grouped aggregation over the read-back files.
-    *
-    * Bloom filters: `observed` carries the (rows, (segment, Bloom
-    * column) → bits) the write job itself observed
-    * ([[writeObserved]] — the engine's own write kernels, whose rows
-    * it plans), and then no Bloom job runs; its row count must equal
-    * the footers' total, else the publish throws before any commit (a
-    * filter that missed a row would be a false negative). Without it
-    * (the connector's executor-staged files) every segment × column
-    * Bloom comes out of ONE bit_or-word job over the read-back files.
-    * Either way, publish cost is one fixed set of jobs at most,
-    * however many segments the commit carries. */
-  private def segmentsMeta(names: Seq[String], columns: Seq[String],
-      mapping: Map[String, String] = Map.empty,
-      physSchema: Option[org.apache.spark.sql.types.StructType] = None,
-      observed: Option[(Long, Map[(String, String), Array[Boolean]])] =
-        None)
-      : Seq[Segment] = {
-    import org.apache.spark.sql.functions.{array, col => fcol,
-      element_at, explode, expr => fexpr, lit => flit, max => fmax,
-      min => fmin, split => fsplit}
-    import org.apache.spark.sql.types.{DateType, NumericType, StringType,
-      TimestampType}
-    // `columns` and the configured stats/bloom names are LOGICAL;
-    // the written parquet holds PHYSICAL names under column mapping
-    def phys(c: String): String = mapping.getOrElse(c, c)
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
-      ShortType}
+  /** The add actions of staged segments — each a fresh segment name
+    * with the messages of the files moved into it — from what the
+    * write tasks recorded ([[graft.sources.LogDataWriter]]): no Spark
+    * job, no file read. `schema` is the write's LOGICAL schema. Per
+    * segment:
+    *  - rows: the sum of its files' rows;
+    *  - each stats column's bounds: the least min and the greatest max
+    *    of its files under Spark's ordering for the type, spelled as
+    *    `cast(min(c) AS STRING)` spells them in the session time zone
+    *    ([[LogStore.spellBound]]). None when every value is NULL or a
+    *    file did not record the column; string bounds only when
+    *    [[LogStore.safeStringBound]] passes both, else reads of that
+    *    segment-column degrade to always-scan;
+    *  - each Bloom column's filter: its files' bits OR-ed — the
+    *    all-zero filter when it holds no non-NULL key, none when a file
+    *    did not record the column (a filter that missed a file would
+    *    be a false negative). */
+  private def segmentsMeta(segments: Seq[(String, Seq[LogWriteMessage])],
+      schema: org.apache.spark.sql.types.StructType): Seq[Segment] = {
+    val columns = schema.fieldNames.toSeq
     val wanted = (statsCol.toSeq ++ statsCols).distinct
       .filter(columns.contains)
-    val wantedBlooms = (bloomCol.toSeq ++ bloomCols).distinct
-      .filter(columns.contains)
-    // footer-derivable bounds (integral/string/date — see
-    // [[footerMeta]]) need the physical types WITHOUT building the
-    // read-back relation; only writers that passed their physical
-    // schema qualify
-    val footerCols: Seq[(String, String,
-        org.apache.spark.sql.types.DataType)] =
-      physSchema match {
-        case Some(sc) if wanted.nonEmpty &&
-            wanted.forall(c => sc(phys(c)).dataType match {
-              case ByteType | ShortType | IntegerType | LongType |
-                   StringType | DateType => true
-              case _ => false
-            }) =>
-          wanted.map(c => (c, phys(c), sc(phys(c)).dataType))
-        case _ => Nil
-      }
-    // exact row counts (and, when derivable, bounds) straight from the
-    // parquet footers (driver-side, zero Spark jobs): ride the add
-    // actions so COUNT(*) — and most stats publishes — cost no job
-    val footerOf = names.map(n => n -> footerMeta(n, footerCols)).toMap
-    val rowsOf = footerOf.map { case (n, (r, _)) => n -> r }
-    if (wanted.isEmpty && wantedBlooms.isEmpty)
-      return names.map(n =>
-        Segment(n, None, None, num = false, rows = Some(rowsOf(n))))
-    // callers that know the files' physical schema pass it, skipping
-    // the read-back footer inference
-    lazy val raw = physSchema match {
-      case Some(sc) =>
-        spark.read.schema(sc).parquet(names.map(n => s"$root/$n"): _*)
-      case None =>
-        spark.read.parquet(names.map(n => s"$root/$n"): _*)
-    }
-    lazy val sch = physSchema.getOrElse(raw.schema)
-    wanted.foreach { c =>
-      val dt = sch(phys(c)).dataType
-      require(dt.isInstanceOf[NumericType] || dt == DateType ||
-          dt == TimestampType || dt == StringType,
-        s"statsCol '$c' is $dt; only numeric/date/timestamp/string " +
-          "columns can carry segment stats (numeric/date/timestamp " +
-          "spellings are grammar-safe by type; string bounds are " +
-          "gated per-segment by safeStringBound)")
-    }
-    def isNum(c: String): Boolean =
-      sch(phys(c)).dataType.isInstanceOf[NumericType]
-    lazy val tagged = raw.withColumn("_seg_",
-      element_at(fsplit(fcol("_metadata.file_path"), "/"), -2))
-    // every segment's footer bounds usable → the whole publish skips
-    // the stats aggregation job (values identical by construction —
-    // FooterStatsSpec pins the equivalence per type)
-    val footerBounds: Option[Map[String, Map[String, (String, String)]]] =
-      if (footerCols.nonEmpty && names.forall(n => footerOf(n)._2.nonEmpty))
-        Some(footerOf.map { case (n, (_, b)) => n -> b.get }.toMap)
-      else None
-    // ONE grouped agg covers every segment × stats column (the
-    // fallback for non-footer-derivable types or dropped footer stats)
-    val statRows: Map[String, org.apache.spark.sql.Row] =
-      if (wanted.isEmpty || footerBounds.nonEmpty) Map.empty
-      else {
-        val exprs = wanted.flatMap(c => Seq(
-          fmin(fcol(phys(c))).cast("string"),
-          fmax(fcol(phys(c))).cast("string")))
-        tagged.groupBy(fcol("_seg_")).agg(exprs.head, exprs.tail: _*)
-          .collect().map(r => r.getString(0) -> r).toMap
-      }
-    observed.foreach { case (seen, _) =>
-      val footerRows = rowsOf.values.sum
-      if (seen != footerRows)
-        throw new IllegalStateException(s"segment write observed $seen " +
-          s"rows but its parquet footers hold $footerRows — refusing to " +
-          "publish Bloom filters that may miss rows")
-    }
-    // Without an observation: ONE bit_or-slot aggregation job covers
-    // every segment × bloom column. Each position folds into its
-    // 64-bit word driver-free: slot = p div 64, bit = p mod 64 — a
-    // bijection onto the bit array. Map-side partial aggregation
-    // collapses every partition to ≤ segments × columns ×
-    // ⌈bloomBits/64⌉ words BEFORE the exchange, and the driver
-    // collect stays O(bits).
-    val bloomHex: Map[(String, String), String] =
-      if (wantedBlooms.isEmpty) Map.empty
-      else {
-        val bits = scala.collection.mutable.HashMap
-          .empty[(String, String), Array[Boolean]]
-        observed match {
-          case Some((_, seen)) => bits ++= seen
-          case None =>
-            wantedBlooms.map { c =>
-              tagged.where(fcol(phys(c)).isNotNull)
-                .select(fcol("_seg_"), flit(c).as("_bcol_"),
-                  explode(array((0 until 4)
-                    .map(bloomPosCol(fcol(phys(c)), _)): _*)).as("_p_"))
-            }.reduce(_.unionByName(_))
-              .groupBy(fcol("_seg_"), fcol("_bcol_"),
-                fexpr("_p_ div 64").cast("int").as("_s_"))
-              .agg(fexpr("bit_or(shiftleft(1L, _p_ % 64))").as("_w_"))
-              .collect()
-              .foreach { r =>
-                val arr = bits.getOrElseUpdate(
-                  (r.getString(0), r.getString(1)),
-                  new Array[Boolean](bloomBits))
-                val base = r.getInt(2) * 64
-                val w = r.getLong(3)
-                var k = 0
-                while (k < 64) {
-                  if (((w >>> k) & 1L) != 0L) arr(base + k) = true
-                  k += 1
-                }
-              }
-        }
-        bits.map { case (k, arr) =>
-          k -> LogStore.bloomHexOf(arr)
-        }.toMap
-      }
-    val zeroHex = LogStore.bloomHexOf(new Array[Boolean](bloomBits))
-    names.map { name =>
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    def isNum(c: String): Boolean = schema(c).dataType
+      .isInstanceOf[org.apache.spark.sql.types.NumericType]
+    segments.map { case (name, files) =>
+      val rows = Some(files.map(_.rows).sum)
+      val perCol = wanted.flatMap { c =>
+        val dt = schema(c).dataType
+        val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType
+          .ordering(dt)
+        val fileBounds =
+          if (files.forall(_.bounds.contains(c)))
+            files.map(_.bounds(c)).filter(_._1 != null)
+          else Nil
+        fileBounds.reduceOption { (a, b) =>
+          (if (ord.lt(b._1, a._1)) b._1 else a._1,
+            if (ord.gt(b._2, a._2)) b._2 else a._2)
+        }.map { case (lo, hi) =>
+          (LogStore.spellBound(lo, dt, tz), LogStore.spellBound(hi, dt, tz))
+        }.filter { case (lo, hi) =>
+          dt != org.apache.spark.sql.types.StringType ||
+            (LogStore.safeStringBound(lo) && LogStore.safeStringBound(hi))
+        }.map { case (lo, hi) => c -> (lo, hi, isNum(c)) }
+      }.toMap
       val base =
-        if (wanted.isEmpty)
-          Segment(name, None, None, num = false, rows = Some(rowsOf(name)))
+        if (wanted.isEmpty) Segment(name, None, None, num = false, rows = rows)
         else {
-          // a zero-row (or all-null) segment records no bounds —
-          // either source agrees
-          val row = statRows.get(name)
-          val bounds: Map[String, (String, String)] =
-            footerBounds match {
-              case Some(fb) => fb(name)
-              case None => wanted.zipWithIndex.flatMap { case (c, i) =>
-                row match {
-                  case Some(r) if !r.isNullAt(1 + 2 * i) =>
-                    Some(c -> (r.getString(1 + 2 * i),
-                      r.getString(2 + 2 * i)))
-                  case _ => None
-                }
-              }.toMap
-            }
-          val perCol = wanted.flatMap { c =>
-            bounds.get(c) match {
-              case Some((lo, hi)) =>
-                // string bounds only when BOTH spellings are inert in
-                // the line grammar AND order-stable — else this
-                // segment-column records nothing and reads degrade to
-                // always-scan
-                if (sch(phys(c)).dataType == StringType &&
-                    !(LogStore.safeStringBound(lo) &&
-                      LogStore.safeStringBound(hi))) None
-                else Some(c -> (lo, hi, isNum(c)))
-              case None => None
-            }
-          }.toMap
-          val primaryNum = statsCol.exists(c => columns.contains(c) &&
-            isNum(c))
           val prim = statsCol.flatMap(perCol.get)
-          Segment(name, prim.map(_._1), prim.map(_._2), primaryNum,
-            extra = perCol -- statsCol.toSeq, rows = Some(rowsOf(name)))
+          Segment(name, prim.map(_._1), prim.map(_._2),
+            statsCol.exists(c => columns.contains(c) && isNum(c)),
+            extra = perCol -- statsCol.toSeq, rows = rows)
+        }
+      def bloomOf(c: String): Option[String] =
+        if (!files.forall(_.blooms.contains(c))) None
+        else {
+          val bits = new Array[Boolean](bloomBits)
+          files.foreach(_.blooms(c).stream().forEach(bits(_) = true))
+          Some(LogStore.bloomHexOf(bits))
         }
       // extra bloom columns land NAME-KEYED (bxs) — same per-column
-      // independence as the extra stats; a segment with zero non-null
-      // keys still records the empty (all-zero) filter
-      val withBxs = {
-        val extras = bloomCols.filter(columns.contains)
-          .map(c => c -> bloomHex.getOrElse((name, c), zeroHex)).toMap
-        if (extras.isEmpty) base else base.copy(bxs = extras)
-      }
+      // independence as the extra stats
+      val extras = bloomCols.filter(columns.contains)
+        .flatMap(c => bloomOf(c).map(c -> _)).toMap
+      val withBxs = if (extras.isEmpty) base else base.copy(bxs = extras)
       bloomCol match {
         case Some(c) if columns.contains(c) =>
-          withBxs.copy(bloom =
-            Some(bloomHex.getOrElse((name, c), zeroHex)))
+          withBxs.copy(bloom = bloomOf(c))
         case _ => withBxs
       }
     }
@@ -1819,105 +1560,101 @@ class LogStore(spark: SparkSession, val root: String,
     }
   }
 
-  /** The configured Bloom columns a write of `columns` carries, as
-    * (logical, physical) pairs under the write's column mapping `m`. */
-  private def bloomsOf(columns: Seq[String],
-      m: Map[String, String]): Seq[(String, String)] =
-    (bloomCol.toSeq ++ bloomCols).distinct.filter(columns.contains)
-      .map(c => c -> m.getOrElse(c, c))
-
-  /** What a segment write observed in its own job: its row count and
-    * the Bloom bits per (bucket, logical Bloom column). */
-  private final case class ObservedWrite(rows: Long,
-      bits: Map[(Int, String), Array[Boolean]])
-
-  /** Run `write` over `physDf` — segment rows as they land, under
-    * PHYSICAL names — and observe, in that same job, the row count and
-    * every (bucket, Bloom column)'s bit positions: the per-file
-    * statistics the Delta Lake paper collects inside the write tasks,
-    * so the publish ([[segmentsMeta]]) needs no read-back job.
-    * `blooms` are [[bloomsOf]]'s pairs; `bucket` names an int column
-    * of `physDf` in [0, `buckets`) saying which output segment a row
-    * lands in (none: one segment, bucket 0). Positions are
-    * [[bloomPosCol]]'s, computed once per row in a projection below
-    * the observation; a NULL value sets no bit. Bucket b's position p
-    * is bit b × bloomBits + p of a run of `bitmap_construct_agg`
-    * bitmaps ([[LogStore.BitmapBits]] bits each), one aggregate per
-    * position × bitmap.
-    *
-    * Returns the rows and the bits keyed by (bucket, logical column),
-    * or None — and the publish reads the files back as before — when
-    * the write carries no Bloom column (then no observe node is added
-    * and the write plan is the plain one), when its buckets would need
-    * more than [[LogStore.ObservedBitmaps]] bitmaps, or when the
-    * observation has not arrived [[LogStore.ObservationWait]] after
-    * the write returned. */
-  private def writeObserved(physDf: DataFrame, blooms: Seq[(String, String)],
-      bucket: Option[String] = None, buckets: Int = 1)(
-      write: DataFrame => Unit): Option[ObservedWrite] = {
-    import org.apache.spark.sql.functions.{bitmap_construct_agg,
-      col => fcol, count => fcount, lit => flit, when => fwhen}
-    val width = LogStore.BitmapBits.toLong
-    val bitmaps =
-      ((buckets.toLong * bloomBits + width - 1) / width).toInt
-    if (blooms.isEmpty || bitmaps > LogStore.ObservedBitmaps) {
-      write(physDf)
-      return None
-    }
-    val posNames = for (k <- blooms.indices; i <- 0 until 4)
-      yield s"_graft_bloom_pos_${k}_$i"
-    val withPos = physDf.select(fcol("*") +: posNames.indices.map { n =>
-      val p = bloomPosCol(fcol(blooms(n / 4)._2), n % 4).cast("long")
-      bucket.fold(p)(b => p + fcol(b).cast("long") * bloomBits.toLong)
-        .as(posNames(n))
-    }: _*)
-    val aggs = for (n <- posNames; j <- 0 until bitmaps) yield {
-      val g = fcol(n)
-      bitmap_construct_agg(
-        fwhen(g >= j * width && g < (j + 1) * width, g - j * width))
-        .as(s"${n}_$j")
-    }
-    val obs = org.apache.spark.sql.Observation()
-    write(withPos.observe(obs, fcount(flit(1)).as("_rows_"), aggs: _*)
-      .drop(posNames: _*))
-    LogStore.awaitObservation(obs).map { r =>
-      val bits = scala.collection.mutable.HashMap
-        .empty[(Int, String), Array[Boolean]]
-      for ((n, k) <- posNames.zipWithIndex; j <- 0 until bitmaps) {
-        val bm = r.getAs[Array[Byte]](s"${n}_$j")
-        for (b <- bm.indices if bm(b) != 0; t <- 0 until 8
-            if ((bm(b) >> t) & 1) != 0) {
-          val g = j * width + b * 8 + t
-          bits.getOrElseUpdate(((g / bloomBits).toInt, blooms(k / 4)._1),
-            new Array[Boolean](bloomBits))((g % bloomBits).toInt) = true
-        }
+  /** The one segment writer ([[LogDataWriterFactory]]) for rows of
+    * `physical` — the schema the files hold, under physical names —
+    * whose logical names are `logical`, by position; files stage under
+    * `stageDir`. Its tasks record the rows, the bounds of this store's
+    * stats columns and the Bloom bits of its Bloom columns among them
+    * ([[bloomPosCol]]'s positions, bound to the rows' ordinals), which
+    * [[segmentsMeta]] turns into add actions. Every segment write runs
+    * it: the engine's ([[writeStaged]]) and the connector's. */
+  private[graft] def segmentWriter(stageDir: String,
+      physical: org.apache.spark.sql.types.StructType,
+      logical: Seq[String]): LogDataWriterFactory = {
+    import org.apache.spark.sql.types.{DateType, NumericType, StringType,
+      TimestampType}
+    val at = logical.zipWithIndex.toMap
+    val bounds = (statsCol.toSeq ++ statsCols).distinct.filter(at.contains)
+      .map { c =>
+        val dt = physical(at(c)).dataType
+        require(dt.isInstanceOf[NumericType] || dt == DateType ||
+            dt == TimestampType || dt == StringType,
+          s"statsCol '$c' is $dt; only numeric/date/timestamp/string " +
+            "columns can carry segment stats (numeric/date/timestamp " +
+            "spellings are grammar-safe by type; string bounds are " +
+            "gated per-segment by safeStringBound)")
+        (c, at(c), dt)
       }
-      ObservedWrite(r.getLong(0), bits.toMap)
+    val blooms = (bloomCol.toSeq ++ bloomCols).distinct.filter(at.contains)
+    val positions = org.apache.spark.sql.GraftSqlBridge.bound(spark, physical,
+      for (c <- blooms; i <- 0 until 4) yield bloomPosCol(
+        org.apache.spark.sql.functions.col(
+          "`" + physical(at(c)).name.replace("`", "``") + "`"), i))
+    LogDataWriterFactory.of(spark, stageDir, physical,
+      SegmentStatsSpec(bounds, blooms.zip(positions.grouped(4).toSeq),
+        bloomBits))
+  }
+
+  /** Write `physDf` — rows under PHYSICAL names whose logical names are
+    * `logical` — through [[segmentWriter]] in ONE Spark job, and move
+    * the written files into fresh segments: one per task with
+    * `perTask` (a clustered rewrite: one task is one bucket is one
+    * segment; a task with no rows lands none), else one for all, with
+    * partition 0 landing a file even when every partition is empty.
+    * Returns each segment with its files' messages; nothing is
+    * published until the caller commits. */
+  private def writeStaged(physDf: DataFrame, logical: Seq[String],
+      perTask: Boolean): Seq[(String, Seq[LogWriteMessage])] = {
+    val stage =
+      s"$root/_stage-${java.util.UUID.randomUUID().toString.take(12)}"
+    try stageToSegments(segmentWriter(stage, physDf.schema, logical)
+        .writeRows(physDf, firstAlways = !perTask), perTask)
+    finally fs.delete(new Path(stage), true)
+  }
+
+  /** Move the files `staged` names into fresh `seg-*` directories — one
+    * segment for all of them (the append shape) or one per file
+    * (`fileAsSegment`: each file keeps its own tight bounds) — and
+    * return each segment with the messages of its files. Only
+    * message-named files move, so a failed or speculated task
+    * attempt's file stays in staging, which the caller drops (vacuum
+    * reclaims it after a crash). No file, no segment. */
+  private[graft] def stageToSegments(staged: Seq[LogWriteMessage],
+      fileAsSegment: Boolean): Seq[(String, Seq[LogWriteMessage])] = {
+    val written = staged.filter(_.file.nonEmpty)
+    val groups =
+      if (fileAsSegment) written.map(Seq(_))
+      else if (written.isEmpty) Nil
+      else Seq(written)
+    groups.map { group =>
+      val name = s"seg-${java.util.UUID.randomUUID().toString.take(12)}"
+      fs.mkdirs(new Path(s"$root/$name"))
+      group.foreach { m =>
+        val from = new Path(m.file.get)
+        if (!fs.rename(from, new Path(s"$root/$name/${from.getName}")))
+          throw new java.io.IOException(s"staging rename of $from failed")
+      }
+      name -> group
     }
   }
 
   /** Write `df` as a fresh immutable segment and return its add action
     * — NOT yet visible; publication happens in [[commit]]. Defaults
-    * and CHECK constraints apply first, then column mapping; the
-    * write job itself observes the Bloom bits ([[writeObserved]]), so
-    * with footer-spellable stats (see [[footerMeta]]) the whole call
-    * is ONE Spark job. Every engine write of one segment lands here:
-    * append, appendStream, mergeKeyed, applyChangesKeyed,
-    * deleteWhere/deleteRange and compact. */
+    * and CHECK constraints apply first, then column mapping; the write
+    * job's tasks record the rows, bounds and Bloom bits
+    * ([[writeStaged]]), so the whole call is ONE Spark job. Every
+    * engine write of one segment lands here: append, appendStream,
+    * mergeKeyed, applyChangesKeyed, deleteWhere/deleteRange and
+    * compact. */
   private def writeSegment(df: DataFrame,
       evolvedB64: Option[String] = None): Segment = {
-    val name = s"seg-${java.util.UUID.randomUUID().toString.take(12)}"
-    val m = writeMapping(evolvedB64)
     // defaults BEFORE the CHECK gate: a constraint over a
     // default-bearing column must see the value that lands
     val padded = padDefaults(df)
-    val physDf = toPhysicalDf(enforceChecks(padded), m)
-    val observed = writeObserved(physDf, bloomsOf(padded.columns, m))(
-      _.write.parquet(s"$root/$name"))
-    segmentsMeta(Seq(name), padded.columns, m, Some(physDf.schema),
-      observed.map(o =>
-        o.rows -> o.bits.map { case ((_, c), a) => (name, c) -> a }))
-      .head
+    val physDf =
+      toPhysicalDf(enforceChecks(padded), writeMapping(evolvedB64))
+    segmentsMeta(writeStaged(physDf, padded.columns.toSeq, perTask = false),
+      padded.schema).head
   }
 
   /** CREATE-time column DEFAULTs materialize at write: a programmatic
@@ -3158,14 +2895,13 @@ class LogStore(spark: SparkSession, val root: String,
     * commit — the programmatic ingest twin of the DSv2 `clusterBy`
     * sink for writers whose payloads that sink refuses (array
     * columns: embeddings, token vectors). One range shuffle, one
-    * partitioned parquet write (every bucket lands as its own
-    * directory in a single pass — [[rewriteClustered]], the
-    * [[optimize]] kernel), one batched stats pass, one commit; the
-    * serial alternative is one commit per range slice, each paying
-    * its own write + metadata jobs. Defaults and CHECK constraints
-    * apply exactly as [[append]]; column mapping resolves against the
-    * recorded schema like every staged write. Blind-append retry
-    * semantics on a lost commit race. */
+    * write job whose every task lands one bucket as its own segment
+    * and records its stats ([[rewriteClustered]], the [[optimize]]
+    * kernel), one commit; the serial alternative is one commit per
+    * range slice, each paying its own write. Defaults and CHECK
+    * constraints apply exactly as [[append]]; column mapping resolves
+    * against the recorded schema like every staged write.
+    * Blind-append retry semantics on a lost commit race. */
   def appendClustered(df: DataFrame,
       clusterBy: org.apache.spark.sql.Column,
       targetSegments: Int): Long = {
@@ -3289,10 +3025,9 @@ class LogStore(spark: SparkSession, val root: String,
     *
     * Scale shape: cost ∝ rewritten bytes — exactly one shuffle (the
     * range partitioner over the cluster key) across the live data and
-    * one parquet write, partitioned so each range bucket lands as its
-    * own directory in a single pass (never one filtered scan per
-    * output segment), which also observes every bucket's Bloom bits;
-    * rows and footer-spellable bounds are then footer reads. */
+    * one write job, each range bucket landing as its own segment in
+    * one task (never one filtered scan per output segment), which
+    * records the bucket's rows, bounds and Bloom bits. */
   def optimize(targetSegments: Int, clusterBy: org.apache.spark.sql.Column*)
       : OptimizeResult = {
     require(targetSegments >= 1, "targetSegments must be positive")
@@ -3311,59 +3046,21 @@ class LogStore(spark: SparkSession, val root: String,
   /** The clustered-rewrite kernel shared by [[optimize]],
     * [[optimizeWhere]] (and so [[maintainLayout]]) and
     * [[appendClustered]]: one range shuffle (or round-robin when no
-    * cluster key) across `data` and ONE partitioned parquet write —
-    * every bucket (`_opt_bucket`, the output partition) lands as its
-    * own directory in a single pass, never one filtered scan per
-    * output segment — then each bucket renamed into place. The write
-    * job observes every bucket's Bloom bits ([[writeObserved]]); rows
-    * and footer-spellable bounds come from the footers, so only other
-    * stats types cost a read-back job. Returns the add actions;
+    * cluster key) across `data` into `targetSegments` partitions, then
+    * ONE write job in which each task writes its partition as one
+    * segment — one task is one bucket is one segment, never one
+    * filtered scan per output segment — and records its rows, bounds
+    * and Bloom bits ([[writeStaged]]). Returns the add actions;
     * nothing is published until the caller commits. */
   private def rewriteClustered(data: DataFrame, targetSegments: Int,
       clusterBy: Seq[org.apache.spark.sql.Column]): Seq[Segment] = {
-    import org.apache.spark.sql.functions.{col => fcol,
-      spark_partition_id}
     val arranged =
       if (clusterBy.isEmpty) data.repartition(targetSegments)
       else data.repartitionByRange(targetSegments, clusterBy: _*)
-    val tmpName = s"opt-${java.util.UUID.randomUUID().toString.take(12)}"
-    val tmp = s"$root/_$tmpName"
-    // under column mapping the rewrite must land PHYSICAL names —
-    // bucket first (the projection must not disturb the range
-    // partitioning capture), then rename
-    val m = writeMapping(None)
-    val bucketed = arranged.withColumn("_opt_bucket",
-      spark_partition_id())
-    val physical =
-      if (m.isEmpty) bucketed
-      else bucketed.select(data.columns.toSeq.map(c =>
-        fcol(c).as(m.getOrElse(c, c))) :+ fcol("_opt_bucket"): _*)
-    val observed = writeObserved(physical, bloomsOf(data.columns, m),
-      Some("_opt_bucket"), targetSegments)(
-      _.write.partitionBy("_opt_bucket").parquet(tmp))
-    val buckets = fs.listStatus(new Path(tmp))
-      .map(_.getPath.getName).filter(_.startsWith("_opt_bucket="))
-      .map(_.stripPrefix("_opt_bucket=").toInt).sorted.toSeq
-    val names = buckets.map { b =>
-      val name = s"seg-${java.util.UUID.randomUUID().toString.take(12)}"
-      if (!fs.rename(new Path(s"$tmp/_opt_bucket=$b"),
-          new Path(s"$root/$name")))
-        throw new java.io.IOException(s"rename of bucket $b to $name failed")
-      name
-    }
-    val nameOf = buckets.zip(names).toMap
-    // one batched stats pass over every bucket; the bucket files hold
-    // the physical projection minus the partition column — that schema
-    // is known, skip re-inference. The observed Bloom bits are keyed by
-    // bucket (the observation covers buckets below targetSegments only:
-    // any other bucket reads its files back)
-    val adds = segmentsMeta(names, data.columns, m,
-      Some(org.apache.spark.sql.types.StructType(physical.schema.fields
-        .filterNot(_.name == "_opt_bucket"))),
-      observed.filter(_ => buckets.forall(_ < targetSegments)).map(o =>
-        o.rows -> o.bits.map { case ((b, c), a) => (nameOf(b), c) -> a }))
-    fs.delete(new Path(tmp), true)
-    adds
+    // under column mapping the rewrite lands PHYSICAL names; the
+    // renaming projection keeps the partitions
+    segmentsMeta(writeStaged(toPhysicalDf(arranged, writeMapping(None)),
+      data.columns.toSeq, perTask = true), data.schema)
   }
 
   /** Physical size of one live segment directory — an ops-command
@@ -4206,11 +3903,14 @@ class LogStore(spark: SparkSession, val root: String,
   }
 
   /** Publish a copy-on-write REPLACE as one commit: already-written
-    * segment directories (`adds` — staged by a distributed write,
-    * e.g. the DSv2 row-level-operation path behind SQL UPDATE /
-    * MERGE INTO) replace exactly `removes`, the live segments the
-    * writing query READ at `readVersion`. Read-modify-write
-    * concurrency: the commit lands at readVersion+1 or throws
+    * segments (`adds`, each with the messages of its files — staged by
+    * a distributed write through [[segmentWriter]], e.g. the DSv2
+    * row-level-operation path behind SQL UPDATE / MERGE INTO, and
+    * moved in by [[stageToSegments]]) replace exactly `removes`, the
+    * live segments the writing query READ at `readVersion`. Their add
+    * actions come from the messages ([[segmentsMeta]]: no job).
+    * Read-modify-write concurrency: the commit lands at readVersion+1
+    * or throws
     * [[ConcurrentCommitException]] — a racing writer can never have
     * its rows silently dropped by a rewrite that never read them.
     *
@@ -4224,7 +3924,8 @@ class LogStore(spark: SparkSession, val root: String,
     * lone delete, a new row a lone insert. Cost: one exceptAll each
     * way over the REPLACED bytes only — the same ∝-selected economics
     * as the rewrite itself. */
-  def publishReplace(adds: Seq[String], removes: Seq[String],
+  def publishReplace(adds: Seq[(String, Seq[LogWriteMessage])],
+      removes: Seq[String],
       writeSchema: org.apache.spark.sql.types.StructType,
       readVersion: Long,
       range: Option[(String, String, String)] = None): Long = {
@@ -4233,15 +3934,11 @@ class LogStore(spark: SparkSession, val root: String,
     // land here with executor-written files — the staged gate is the
     // only thing standing between a violating UPDATE and the commit
     if (adds.nonEmpty) requireStagedDefaults(writeSchema)
-    validateStagedChecks(adds, writeSchema)
+    val names = adds.map(_._1)
+    validateStagedChecks(names, writeSchema)
     val (schemaAct, propsAct) = enforceSchema(writeSchema, readVersion)
     val replMapping = writeMapping(None)
-    val addMeta =
-      if (adds.isEmpty) Nil
-      else segmentsMeta(adds, writeSchema.fieldNames.toSeq,
-        replMapping, Some(org.apache.spark.sql.types.StructType(
-          writeSchema.fields.map(f =>
-            f.copy(name = replMapping.getOrElse(f.name, f.name))))))
+    val addMeta = segmentsMeta(adds, writeSchema)
     // the diff is aligned on the post-write table shape: old segments
     // read null in evolved columns (the usual evolution semantics)
     val target = schemaAct.map(decodeSchema)
@@ -4274,7 +3971,7 @@ class LogStore(spark: SparkSession, val root: String,
         .schema(org.apache.spark.sql.types.StructType(
           writeSchema.fields.map(f =>
             f.copy(name = replMapping.getOrElse(f.name, f.name)))))
-        .parquet(adds.map(d => s"$root/$d"): _*))
+        .parquet(names.map(d => s"$root/$d"): _*))
     // `range` is the writing query's selection bound on a stats
     // column (the row-level scan's pushed-predicate range): a
     // concurrent ADD outside it cannot hold a row this rewrite should
@@ -4306,35 +4003,29 @@ class LogStore(spark: SparkSession, val root: String,
       .unionByName(a.exceptAll(b).withColumn("_change_type", flit("insert")))
   }
 
-  /** Publish ALREADY-WRITTEN segment directories as ONE append
-    * commit — the driver-side commit half of a distributed write path
-    * (the DSv2 `graft-log` sink): executors write parquet files into
-    * staged `seg-*` directories, the driver calls this once with the
-    * directory names. Per segment the usual add-action metadata is
-    * computed (skipping stats + Bloom per this store's config by
-    * [[segmentsMeta]]; the executors' rows were never planned here, so
-    * the Bloom filters come from its read-back job), schema
-    * enforcement runs against the recorded metadata action, and the
-    * commit lands with blind-append retry semantics (content does not
-    * depend on the snapshot, so rebase-and-retry is safe). With `txn`
-    * this is the exactly-once streaming-epoch form: a replayed epoch
-    * (txn ≤ the recorded fence) publishes NOTHING and returns -1 — the
-    * caller owns deleting its staged directories. Until this returns,
-    * the staged segments are invisible to every reader; if the caller
-    * dies first they are crash orphans [[vacuum]] reclaims. */
-  def publishSegments(names: Seq[String],
+  /** Publish ALREADY-WRITTEN segments as ONE append commit — the
+    * driver-side commit half of a distributed write path (the DSv2
+    * `graft-log` sink): executors stage parquet files through
+    * [[segmentWriter]], [[stageToSegments]] moves the message-named
+    * ones into fresh `seg-*` directories, and the driver calls this
+    * once with each segment and its files' messages. The add actions
+    * come from what the tasks recorded ([[segmentsMeta]]: rows, stats
+    * and Bloom filters with no job), schema enforcement runs against
+    * the recorded metadata action, and the commit lands with
+    * blind-append retry semantics (content does not depend on the
+    * snapshot, so rebase-and-retry is safe). With `txn` this is the
+    * exactly-once streaming-epoch form: a replayed epoch (txn ≤ the
+    * recorded fence) publishes NOTHING and returns -1 — the caller
+    * owns deleting its staged directories. Until this returns, the
+    * staged segments are invisible to every reader; if the caller dies
+    * first they are crash orphans [[vacuum]] reclaims. */
+  def publishSegments(segments: Seq[(String, Seq[LogWriteMessage])],
       writeSchema: org.apache.spark.sql.types.StructType,
       txn: Option[Long] = None): Long = {
-    require(names.nonEmpty, "nothing to publish")
+    require(segments.nonEmpty, "nothing to publish")
     requireStagedDefaults(writeSchema)
-    validateStagedChecks(names, writeSchema)
-    val columns = writeSchema.fieldNames.toSeq
-    lazy val adds = {
-      val m = writeMapping(None)
-      segmentsMeta(names, columns, m,
-        Some(org.apache.spark.sql.types.StructType(writeSchema.fields
-          .map(f => f.copy(name = m.getOrElse(f.name, f.name))))))
-    }
+    validateStagedChecks(segments.map(_._1), writeSchema)
+    val adds = segmentsMeta(segments, writeSchema)
     retryCommits() {
       // a fenced replay: the batch already landed
       if (txn.exists(_ <= lastTxn())) -1L
@@ -4374,27 +4065,15 @@ object LogStore {
     * the table's `checkpointShardRows`). */
   private val CheckpointBucketRows = 1024
 
-  /** Bits of one `bitmap_construct_agg` bitmap (Spark's fixed size). */
-  private val BitmapBits = 32768
-
-  /** Most bitmaps per observed Bloom position a segment write may use
-    * — buckets × bloomBits up to 8 × 32,768 bits (64 output segments at
-    * the default 4,096 bits); wider rewrites read their files back. */
-  private val ObservedBitmaps = 8
-
-  /** How long a caller waits, after its observed action returned, for
-    * the observed metrics to arrive over the listener bus before it
-    * falls back to computing them another way (a write reads its files
-    * back; the billing report runs its aggregates). */
-  private val ObservationWait = scala.concurrent.duration.Duration(30, "s")
-
-  /** The metrics `obs` collected, or None when they have not arrived
-    * [[ObservationWait]] after the observed action returned. */
-  private[graft] def awaitObservation(
-      obs: org.apache.spark.sql.Observation)
-      : Option[org.apache.spark.sql.Row] =
-    try Some(scala.concurrent.Await.result(obs.future, ObservationWait))
-    catch { case _: java.util.concurrent.TimeoutException => None }
+  /** A stats bound spelled as `cast(min(c) AS STRING)` spells it in
+    * the session time zone `tz`: `v` is the Catalyst value of a
+    * column of type `dt`, evaluated through Spark's own cast. */
+  private def spellBound(v: Any, dt: org.apache.spark.sql.types.DataType,
+      tz: String): String = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    Cast(Literal(v, dt), org.apache.spark.sql.types.StringType, Some(tz))
+      .eval().toString
+  }
 
   /** Hex serialization of a Bloom bit array — 4 bits per hex digit,
     * bit (4j+k) contributing 2^k to digit j (the grammar every probe

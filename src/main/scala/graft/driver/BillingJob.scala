@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row,
   SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{AppendStore, LogStore}
+import graft.catalog.AppendStore
 import graft.model._
 import graft.operators.{BillingOps, TopKAggregator}
 import graft.sinks._
@@ -216,7 +216,7 @@ final class BillingJob(
       finalObs: Observation, results: DataFrame,
       histogramObs: Observation): BatchReport = {
     def figures(obs: Observation, frame: DataFrame, cols: Seq[Column]) =
-      LogStore.awaitObservation(obs)
+      BillingJob.awaitObservation(obs)
         .getOrElse(frame.agg(cols.head, cols.tail: _*).head())
     def long(r: Row, i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
     val sessionCount =
@@ -244,6 +244,17 @@ final class BillingJob(
 }
 
 object BillingJob {
+  /** How long the report waits, after an observed append returned, for
+    * the observed figures to arrive over the listener bus before it
+    * computes them over the frame written. */
+  private val ObservationWait = scala.concurrent.duration.Duration(30, "s")
+
+  /** The metrics `obs` collected, or None when they have not arrived
+    * [[ObservationWait]] after the observed action returned. */
+  private def awaitObservation(obs: Observation): Option[Row] =
+    try Some(scala.concurrent.Await.result(obs.future, ObservationWait))
+    catch { case _: java.util.concurrent.TimeoutException => None }
+
   /** Report detail cap (reference shows ≤10 shops; remainder is a
     * count line) — also the driver-side row bound on BOTH report
     * paths: happy (topShops) and failure (context reconstruction). */

@@ -137,16 +137,29 @@ object BillingOps {
     * unmatched records keep their prior status (reference
     * `src/services/billing.ts:133-149`; the reference's O(n·m)
     * nested-loop `find` becomes a broadcast hash join). Expects `results`
-    * columns: shop, success, chargeId, error, skipped. */
+    * columns: shop, success, chargeId, error, skipped.
+    *
+    * The reference's `find` gives each record ONE outcome, the first
+    * match. Two sessions that normalize to one shop leave two outcomes
+    * for it, so the outcomes collapse to one per shop first — the least
+    * (status, charge id, error), a success before a failure before a
+    * skip — or each record would meet each outcome. The collapse runs
+    * in one partition (the outcomes are the broadcast side), so it
+    * adds no shuffle. */
   def enrichWithChargeResults(records: DataFrame,
       results: DataFrame): DataFrame = {
-    val r = broadcast(results.select(
-      col("shop"),
+    val outcome = struct(
+      when(col("success") && !col("skipped"), 0)
+        .when(col("skipped"), 2).otherwise(1).as("rank"),
+      col("chargeId").as("charge_id"),
+      col("error").as("charge_error"),
       when(col("skipped"), Status.Skipped)
         .when(col("success"), Status.Success)
-        .otherwise(Status.Failed).as("charge_status"),
-      col("chargeId").as("charge_id"),
-      col("error").as("charge_error")))
+        .otherwise(Status.Failed).as("charge_status"))
+    val r = broadcast(results.coalesce(1).groupBy(col("shop"))
+      .agg(min(outcome).as("o"))
+      .select(col("shop"), col("o.charge_status"), col("o.charge_id"),
+        col("o.charge_error")))
     records.join(r, Seq("shop"), "left_outer")
       .withColumns(ListMap(
         "shopify_billing_status" ->

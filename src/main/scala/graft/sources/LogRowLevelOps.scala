@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
@@ -353,14 +352,12 @@ final class GraftReplaceBatchWrite(root: String, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val files = messages.collect { case LogWriteMessage(Some(f)) => f }
+    val staged = LogWriteMessage.staged(messages)
     val scan = op.scanRef
     require(scan != null,
       "row-level write committed without its scan — not a ReplaceData plan")
     val removes = scan.selected
-    if (files.isEmpty && removes.isEmpty) {
+    if (staged.isEmpty && removes.isEmpty) {
       // nothing matched anywhere (e.g. UPDATE whose condition selects
       // no group): version unchanged, no junk commit — PROVIDED the
       // table really is unchanged in any way this DML could have
@@ -386,23 +383,11 @@ final class GraftReplaceBatchWrite(root: String, schema: StructType,
       }
       return
     }
-    val adds =
-      if (files.isEmpty) Nil // every row of the groups deleted
-      else {
-        val segName = s"seg-${UUID.randomUUID().toString.take(12)}"
-        fs.mkdirs(new Path(s"$root/$segName"))
-        files.foreach { f =>
-          val from = new Path(f)
-          if (!fs.rename(from,
-              new Path(s"$root/$segName/${from.getName}")))
-            throw new java.io.IOException(
-              s"staging rename of $f failed")
-        }
-        Seq(segName)
-      }
+    // no staged file (every row of the groups deleted) adds nothing
     val store = LogStore.configured(spark, root)
-    store.publishReplace(adds, removes, schema, scan.readVersion,
-      range = scan.predRange)
+    store.publishReplace(
+      store.stageToSegments(staged, fileAsSegment = false), removes,
+      schema, scan.readVersion, range = scan.predRange)
     LogSinkCommit.cleanup(spark, s"$root/$stage")
   }
 

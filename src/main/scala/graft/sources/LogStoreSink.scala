@@ -8,8 +8,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, NullOrdering, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder, WriterCommitMessage}
@@ -136,8 +139,33 @@ final class LogWrite(root: String, schema: StructType,
   }
 }
 
-final case class LogWriteMessage(file: Option[String])
+/** What one write task staged: its file (None when the task had no
+  * rows and was not asked for an empty file) and the statistics of
+  * that file, recorded by [[LogDataWriter]] as the rows went by:
+  *  - `rows`: the row count;
+  *  - `bounds`: per configured stats column (logical name), its least
+  *    and greatest value as Catalyst values under Spark's ordering for
+  *    the type — (null, null) when every value was NULL;
+  *  - `blooms`: per configured Bloom column, the bit positions its
+  *    non-NULL values set.
+  * A column the write was not configured to record is absent. */
+final case class LogWriteMessage(file: Option[String], rows: Long,
+    bounds: Map[String, (Any, Any)], blooms: Map[String, java.util.BitSet])
   extends WriterCommitMessage
+
+object LogWriteMessage {
+  /** The messages of the tasks that staged a file. */
+  def staged(messages: Array[WriterCommitMessage]): Seq[LogWriteMessage] =
+    messages.toSeq.collect { case m: LogWriteMessage if m.file.nonEmpty => m }
+}
+
+/** The statistics every task of a segment write records: `bounds` as
+  * (logical name, ordinal, type) of the stats columns in the write
+  * schema; `blooms` as (logical name, the column's 4 Bloom positions
+  * bound to the write schema's ordinals), each position in
+  * [0, `bloomBits`). */
+final case class SegmentStatsSpec(bounds: Seq[(String, Int, DataType)],
+    blooms: Seq[(String, Seq[Expression])], bloomBits: Int)
 
 /** One batch append: all task files → one `seg-*` directory → one
   * committed version. */
@@ -207,10 +235,8 @@ private[sources] object LogSinkCommit {
     val spark = SparkSession.active
     val fs = new Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val files = messages.collect {
-      case LogWriteMessage(Some(f)) => f
-    }
-    if (files.isEmpty) {
+    val staged = LogWriteMessage.staged(messages)
+    if (staged.isEmpty) {
       // nothing written: an EMPTY epoch still advances the stream
       // fence (txn-only commit, no junk segment); an empty batch
       // write of a not-yet-existing table is a no-op
@@ -221,11 +247,11 @@ private[sources] object LogSinkCommit {
       cleanup(spark, stageDir)
       return
     }
-    val segNames = stageToSegments(fs, root, files.toSeq, fileAsSegment)
     val store = LogStore.configured(spark, root)
-    val v = store.publishSegments(segNames, schema, txn = txn)
+    val segs = store.stageToSegments(staged, fileAsSegment)
+    val v = store.publishSegments(segs, schema, txn = txn)
     if (v == -1L) // fenced replay: the epoch already landed
-      segNames.foreach(s => fs.delete(new Path(s"$root/$s"), true))
+      segs.foreach(s => fs.delete(new Path(s"$root/${s._1}"), true))
     cleanup(spark, stageDir)
     // post-commit maintenance: below the threshold it is a commit-free
     // no-op; NOTHING here may fail the epoch that already landed —
@@ -237,28 +263,6 @@ private[sources] object LogSinkCommit {
         case scala.util.control.NonFatal(e) => System.err.println(
           s"[graft-log] post-commit maintainLayout at $root skipped: $e")
       }
-    }
-  }
-
-  /** Move the message-named staged files into fresh `seg-*`
-    * directories — one segment per commit (the append shape) or one
-    * per task file (clustered ingest: each range-partitioned file
-    * carries its own tight bounds in the log). */
-  private def stageToSegments(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, files: Seq[String],
-      fileAsSegment: Boolean): Seq[String] = {
-    val groups: Seq[Seq[String]] =
-      if (fileAsSegment) files.map(Seq(_)) else Seq(files)
-    groups.map { group =>
-      val segName = s"seg-${UUID.randomUUID().toString.take(12)}"
-      fs.mkdirs(new Path(s"$root/$segName"))
-      group.foreach { f =>
-        val from = new Path(f)
-        if (!fs.rename(from,
-            new Path(s"$root/$segName/${from.getName}")))
-          throw new java.io.IOException(s"staging rename of $f failed")
-      }
-      segName
     }
   }
 
@@ -274,23 +278,19 @@ private[sources] object LogSinkCommit {
       schema: StructType, messages: Array[WriterCommitMessage],
       fileAsSegment: Boolean = false): Unit = {
     val spark = SparkSession.active
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val files = messages.collect { case LogWriteMessage(Some(f)) => f }
+    val staged = LogWriteMessage.staged(messages)
     val store = LogStore.configured(spark, root)
     val readVersion = store.latestVersion()
     val removes =
       if (readVersion < 0) Nil else store.liveSegments(readVersion)
-    if (files.isEmpty && removes.isEmpty) {
+    if (staged.isEmpty && removes.isEmpty) {
       cleanup(spark, stageDir) // overwriting nothing with nothing
       return
     }
-    // zero staged files = atomic truncate: no segment directory may
-    // be created (an empty seg dir is unreadable and unreferenced)
-    val segNames =
-      if (files.isEmpty) Nil
-      else stageToSegments(fs, root, files.toSeq, fileAsSegment)
-    store.publishReplace(segNames, removes, schema, readVersion)
+    // zero staged files = atomic truncate: no segment directory is
+    // created (an empty seg dir is unreadable and unreferenced)
+    store.publishReplace(store.stageToSegments(staged, fileAsSegment),
+      removes, schema, readVersion)
     cleanup(spark, stageDir)
   }
 
@@ -301,38 +301,76 @@ private[sources] object LogSinkCommit {
   }
 }
 
+/** The one segment writer's factory: every `graft-log` connector
+  * write and every engine segment write (`LogStore`'s appends, merges
+  * and clustered rewrites) stages its files through it. Each task
+  * writes one parquet file with Spark's [[OutputWriter]] and records
+  * its statistics per `stats` ([[LogDataWriter]]). */
 final class LogDataWriterFactory(stageDir: String, schema: StructType,
-    writer: OutputWriterFactory, confEntries: Array[(String, String)])
+    writer: OutputWriterFactory, confEntries: Array[(String, String)],
+    stats: SegmentStatsSpec)
     extends DataWriterFactory with StreamingDataWriterFactory {
   private def conf: Configuration = {
     val c = new Configuration(false)
     confEntries.foreach { case (k, v) => c.set(k, v) }
     c
   }
+  private def writerAt(file: String): LogDataWriter =
+    new LogDataWriter(file, schema, writer, conf, stats)
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new LogDataWriter(s"$stageDir/part-$partitionId-$taskId.parquet",
-      schema, writer, conf)
+    writerAt(s"$stageDir/part-$partitionId-$taskId.parquet")
   // the streaming form: stageDir is the QUERY prefix — the epoch id
   // completes it to the per-epoch staging directory the driver's
   // commit(epochId)/abort(epochId) operate on, so epochs never share
   // a staging dir and abort cleanup actually removes what was written
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new LogDataWriter(
-      s"$stageDir-e$epochId/part-$partitionId-$taskId.parquet", schema,
-      writer, conf)
+    writerAt(s"$stageDir-e$epochId/part-$partitionId-$taskId.parquet")
+
+  /** Run this writer over the rows of `df` — already in this factory's
+    * schema, by position — in ONE Spark job: one task per partition,
+    * each staging at most one file. Returns every task's message in
+    * partition order. `firstAlways` keeps Spark's empty-write rule:
+    * partition 0 lands a file even with no rows, so a zero-row write
+    * still leaves a readable file of the schema. */
+  def writeRows(df: DataFrame,
+      firstAlways: Boolean = false): Seq[LogWriteMessage] =
+    GraftSqlBridge.withExecution(df, s"graft segment write to $stageDir") {
+      val sc = df.sparkSession.sparkContext
+      val rdd = df.queryExecution.toRdd
+      val tasks =
+        if (rdd.partitions.nonEmpty) rdd
+        else sc.parallelize(Seq.empty[InternalRow], 1)
+      sc.runJob(tasks, (ctx: TaskContext, rows: Iterator[InternalRow]) => {
+        val w = writerAt(
+          s"$stageDir/part-${ctx.partitionId}-${ctx.taskAttemptId}.parquet")
+        try {
+          if (firstAlways && ctx.partitionId == 0) w.open()
+          rows.foreach(w.write)
+          w.commit()
+        } catch { case t: Throwable => w.abort(); throw t }
+      }).toSeq
+    }
 }
 
 object LogDataWriterFactory {
-  /** The executor writers for a write of `schema` into the table at
-    * `root`, staging under `stageDir`: Spark's own parquet writer
-    * ([[ParquetFileFormat.prepareWrite]], the one `df.write.parquet`
-    * and `LogStore.append` run), configured here on the driver for
-    * the table's physical schema. */
+  /** The connector's writers for a write of `schema` into the table
+    * at `root`, staging under `stageDir`: the table's own segment
+    * writer ([[graft.catalog.LogStore.segmentWriter]], configured from
+    * the log) for its physical schema. */
   def apply(spark: SparkSession, root: String, stageDir: String,
       schema: StructType): LogDataWriterFactory = {
-    val physical = physicalFor(spark, root, schema)
+    val store = LogStore.configured(spark, root)
+    store.segmentWriter(stageDir, physicalFor(store, schema),
+      schema.fieldNames.toSeq)
+  }
+
+  /** Spark's own parquet writer ([[ParquetFileFormat.prepareWrite]],
+    * the one `df.write.parquet` runs) for `physical`, configured here
+    * on the driver, with tasks recording `stats`. */
+  def of(spark: SparkSession, stageDir: String, physical: StructType,
+      stats: SegmentStatsSpec): LogDataWriterFactory = {
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val writer = new ParquetFileFormat().prepareWrite(spark, job,
       Map.empty, physical)
@@ -341,24 +379,22 @@ object LogDataWriterFactory {
     // codec) from its entries
     new LogDataWriterFactory(stageDir, physical, writer,
       job.getConfiguration.iterator().asScala
-        .map(e => (e.getKey, e.getValue)).toArray)
+        .map(e => (e.getKey, e.getValue)).toArray, stats)
   }
 
-  /** The PHYSICAL write schema for a write of `schema` into the table
-    * at `root`: field names swapped per the table's RECORDED column
-    * mapping, matched by LOGICAL name — a plain DataFrame append
-    * carries no mapping metadata of its own, so the table's schema is
-    * the source of truth; fields unknown to the table (a write-side
-    * evolution) keep their own name. Identity for unmapped tables and
-    * first writes. Rows arrive in the logical schema's POSITIONS, so
-    * renaming the fields is the whole translation. */
-  private def physicalFor(spark: SparkSession,
-      root: String, schema: StructType): StructType = {
+  /** The PHYSICAL write schema for a write of `schema` into `store`:
+    * field names swapped per the table's RECORDED column mapping,
+    * matched by LOGICAL name — a plain DataFrame append carries no
+    * mapping metadata of its own, so the table's schema is the source
+    * of truth; fields unknown to the table (a write-side evolution)
+    * keep their own name. Identity for unmapped tables and first
+    * writes. Rows arrive in the logical schema's POSITIONS, so renaming
+    * the fields is the whole translation. */
+  private def physicalFor(store: LogStore,
+      schema: StructType): StructType = {
     val recorded =
-      try {
-        val st = new LogStore(spark, root)
-        if (st.latestVersion() < 0) None else st.recordedSchema()
-      } catch { case scala.util.control.NonFatal(_) => None }
+      try if (store.latestVersion() < 0) None else store.recordedSchema()
+      catch { case scala.util.control.NonFatal(_) => None }
     val byName = recorded
       .map(_.fields.iterator
         .map(f => f.name -> LogStore.physicalName(f)).toMap)
@@ -370,24 +406,68 @@ object LogDataWriterFactory {
 }
 
 /** Executor-side writer: one task, one parquet file, opened LAZILY on
-  * the first row (an empty task stages nothing), written by Spark's
-  * parquet [[OutputWriter]] — the same encodings as every other
-  * segment file of the table. */
+  * the first row (an empty task stages nothing unless [[open]] is
+  * called), written by Spark's parquet [[OutputWriter]] — the same
+  * encodings as every other segment file of the table. As the rows go
+  * by it records what the publish needs ([[LogWriteMessage]]): the row
+  * count, each stats column's least and greatest value under Spark's
+  * ordering for its type, and each Bloom column's bit positions,
+  * evaluated by the bound position expressions of `stats` — the per-
+  * file statistics the Delta Lake paper collects inside the write
+  * tasks, so no publish reads a file back. */
 final class LogDataWriter(file: String, schema: StructType,
-    factory: OutputWriterFactory, conf: Configuration)
+    factory: OutputWriterFactory, conf: Configuration,
+    stats: SegmentStatsSpec)
     extends DataWriter[InternalRow] {
   private var writer: OutputWriter = _
+  private var rows = 0L
+  private val ords = stats.bounds.map(_._2).toArray
+  private val types = stats.bounds.map(_._3).toArray
+  private val orderings = types.map(PhysicalDataType.ordering)
+  private val lo = new Array[Any](ords.length)
+  private val hi = new Array[Any](ords.length)
+  private val bits =
+    stats.blooms.map(_ => new java.util.BitSet(stats.bloomBits)).toArray
+  private lazy val positions =
+    UnsafeProjection.create(stats.blooms.flatMap(_._2))
 
-  override def write(row: InternalRow): Unit = {
+  /** Open the file now, rows or not. */
+  def open(): Unit =
     if (writer == null)
       writer = factory.newInstance(file, schema,
         new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+
+  override def write(row: InternalRow): Unit = {
+    open()
     writer.write(row)
+    rows += 1
+    var i = 0
+    while (i < ords.length) {
+      if (!row.isNullAt(ords(i))) {
+        val v = row.get(ords(i), types(i))
+        if (lo(i) == null || orderings(i).lt(v, lo(i)))
+          lo(i) = InternalRow.copyValue(v)
+        if (hi(i) == null || orderings(i).gt(v, hi(i)))
+          hi(i) = InternalRow.copyValue(v)
+      }
+      i += 1
+    }
+    if (bits.nonEmpty) {
+      val p = positions(row)
+      var k = 0
+      while (k < p.numFields) {
+        if (!p.isNullAt(k)) bits(k / 4).set(p.getInt(k))
+        k += 1
+      }
+    }
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): LogWriteMessage = {
     if (writer != null) writer.close()
-    LogWriteMessage(Option(writer).map(_ => file))
+    LogWriteMessage(Option(writer).map(_ => file), rows,
+      stats.bounds.indices.map(i => stats.bounds(i)._1 -> (lo(i), hi(i)))
+        .toMap,
+      stats.blooms.indices.map(k => stats.blooms(k)._1 -> bits(k)).toMap)
   }
 
   override def abort(): Unit = {

@@ -16,16 +16,25 @@ import org.scalatest.funsuite.AnyFunSuite
   * Parquet encoding: every segment file is read and written through
   * Spark's `ParquetFileFormat`. A second, hand-written codec over
   * parquet-hadoop's example `Group` model must not come back.
+  *
+  * Segment statistics: the task that writes a segment file records its
+  * rows, bounds and Bloom bits (`LogDataWriter`). No footer read, no
+  * observed write and no bitmap Bloom build may come back in the table
+  * layer (`graft/catalog`, `graft/sources`).
   */
 class StateProtocolLintSpec extends AnyFunSuite {
 
-  /** Every `src/main` line containing one of `banned`, as
-    * `file:line: text`. */
-  private def sitesOf(banned: Seq[String]): Seq[String] = {
+  /** Every `src/main` line — under `dirs` of `src/main/scala` when
+    * given — containing one of `banned`, as `file:line: text`. */
+  private def sitesOf(banned: Seq[String],
+      dirs: Seq[String] = Nil): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root")
+    dirs.foreach(d => assert(Files.isDirectory(root.resolve(d)), d))
     Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => dirs.isEmpty ||
+        dirs.exists(d => p.startsWith(root.resolve(d))))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
           case (l, i) if banned.exists(l.contains) =>
@@ -49,6 +58,15 @@ class StateProtocolLintSpec extends AnyFunSuite {
       "GroupReadSupport", "ExampleParquetWriter"))
     assert(sites.isEmpty,
       s"parquet outside Spark's ParquetFileFormat: " +
+        sites.mkString("\n", "\n", ""))
+  }
+
+  test("one segment-statistics path in the table layer: no footer " +
+      "read, no observed write, no bitmap Bloom build") {
+    val sites = sitesOf(Seq("ParquetFileReader", ".observe(",
+      "bitmap_construct_agg"), dirs = Seq("graft/catalog", "graft/sources"))
+    assert(sites.isEmpty,
+      s"segment statistics outside the write tasks (LogDataWriter): " +
         sites.mkString("\n", "\n", ""))
   }
 }

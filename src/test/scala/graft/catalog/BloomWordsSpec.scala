@@ -9,18 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Differential pin for the bit_or-word Bloom build in segmentsMeta:
-  * the recorded hex of every segment × bloom column must be
-  * BIT-IDENTICAL to an independent driver-side rebuild over the
-  * segment's distinct key strings through [[LogStore.bloomPositions]]
-  * — the same positions the point-lookup probe computes, so equality
-  * here IS the zero-false-negative contract. Covers multi-segment
-  * publishes, a numeric bloom column (cast-to-string spelling), an
-  * all-null segment (must record the all-zero filter), and the
-  * clustered multi-segment ingest path; since the Bloom bits are
-  * observed inside the write job, also every engine write kernel that
-  * observes them (merge, optimize, maintainLayout), a zero-row write
-  * and a Bloom column stored under a mapped physical name. */
+/** Differential pin for the Bloom filters the write tasks record
+  * (`LogDataWriter`): the recorded hex of every segment × bloom column
+  * must be BIT-IDENTICAL to an independent driver-side rebuild over
+  * the segment's distinct key strings through
+  * [[LogStore.bloomPositions]] — the same positions the point-lookup
+  * probe computes, so equality here IS the zero-false-negative
+  * contract. Covers multi-segment publishes, a numeric bloom column
+  * (cast-to-string spelling), an all-null segment (must record the
+  * all-zero filter), the clustered multi-segment ingest path, every
+  * engine write kernel (merge, optimize, maintainLayout), a zero-row
+  * write, a Bloom column stored under a mapped physical name, and a
+  * SQL INSERT through the connector. */
 class BloomWordsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -139,14 +139,13 @@ class BloomWordsSpec extends AnyFunSuite {
     assert(store.pointLookup("key-650")._1.count() == 1)
   }
 
-  test("a zero-row write records the all-zero filter and its " +
-      "observation resolves (no read-back job)") {
+  test("a zero-row write records the all-zero filter, no read-back job") {
     val root = tmp() + "/t"
     val store = churn(root)
     store.append(seg(0, 10))
     val zero = LogStore.bloomHexOf(new Array[Boolean](4096))
     // an empty local relation and a filter that keeps nothing: one
-    // job each — the write — so the observation arrived
+    // job each — the write, whose partition 0 lands an empty file
     assert(TestBus.jobsOf(spark.sparkContext)(
       store.append(seg(0, 0))) == 1)
     assert(TestBus.jobsOf(spark.sparkContext)(
@@ -158,6 +157,24 @@ class BloomWordsSpec extends AnyFunSuite {
       assert(s.bloom.contains(zero) && s.bxs.get("n").contains(zero))
     }
     checkHexes(store, root, Seq("k", "n"))
+  }
+
+  test("a SQL INSERT through the connector records hexes identical " +
+      "to the driver rebuild (DOUBLE stats beside the Bloom column)") {
+    val root = tmp()
+    spark.conf.set("spark.sql.catalog.gbwords",
+      "graft.sources.GraftLogCatalog")
+    spark.conf.set("spark.sql.catalog.gbwords.root", root)
+    spark.sql("CREATE TABLE gbwords.t (d DOUBLE, k STRING) " +
+      "TBLPROPERTIES ('statsCol' = 'd', 'bloomCol' = 'k')")
+    spark.sql("INSERT INTO gbwords.t VALUES (1.5, 'a'), " +
+      "(CAST('NaN' AS DOUBLE), 'b'), (-1e300, NULL), (NULL, 'c')")
+    spark.sql("INSERT INTO gbwords.t SELECT CAST(id AS DOUBLE) / 7, " +
+      "concat('key-', id) FROM range(0, 300)")
+    val store = LogStore.configured(spark, s"$root/t")
+    checkHexes(store, s"$root/t", Seq("k"))
+    val (df, opened, live) = store.pointLookup("key-77")
+    assert(df.count() == 1 && opened == 1 && live == 2)
   }
 
   test("a Bloom column under column mapping hashes its physical bytes " +

@@ -7,13 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Differential pin for the footer-derived segment bounds (the
-  * zero-job stats path in segmentsMeta): for every type the footer
-  * path claims, the recorded add-action bounds must be BYTE-IDENTICAL
-  * to an independent Spark min/max-cast-to-string recomputation of the
-  * same segment — the exact values the aggregation-job fallback would
-  * have recorded. Types the footer path does not claim (double here)
-  * must still produce correct bounds through the fallback. */
+/** Differential pin for the recorded segment bounds: the bounds the
+  * write tasks record (`LogDataWriter`, spelled by segmentsMeta) must
+  * be BYTE-IDENTICAL to an independent Spark
+  * min/max-cast-to-string recomputation over the same segment's
+  * files, for every stats type — integral, string, date, double with
+  * NaN and infinities — through the engine's writes and a SQL INSERT
+  * through the connector. (The suite's name says "footer": the bounds
+  * were once read from parquet footers, with an aggregation job as
+  * the fallback.) */
 class FooterStatsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -70,8 +72,8 @@ class FooterStatsSpec extends AnyFunSuite {
   test("non-ASCII string bounds stay gated like the aggregation's") {
     val root = tmp() + "/uni"
     val store = new LogStore(spark, root, statsCol = Some("k"))
-    // the max ("é中") fails safeStringBound — the footer path must
-    // record nothing for the column, exactly as the aggregation path
+    // the max ("é中") fails safeStringBound — the segment records
+    // nothing for the column
     store.append(Seq("00000123", "émile", "é中").toDF("k"))
     assert(store.liveSegmentInfos().forall(_.min.isEmpty))
     val (df, scanned, live) = store.readRange("0", "1")
@@ -81,8 +83,7 @@ class FooterStatsSpec extends AnyFunSuite {
   test("unsafe string bounds are still gated (no bounds recorded)") {
     val root = tmp() + "/unsafe"
     val store = new LogStore(spark, root, statsCol = Some("k"))
-    // a quote is grammar-unsafe — safeStringBound must reject it on
-    // the footer path exactly as on the aggregation path
+    // a quote is grammar-unsafe — safeStringBound must reject it
     store.append(Seq("\"quoted\"", "plain").toDF("k"))
     assert(store.liveSegmentInfos().forall(_.min.isEmpty))
     // and the read stays exact: no bounds = always scanned
@@ -118,6 +119,38 @@ class FooterStatsSpec extends AnyFunSuite {
     checkBounds(store, root, "k")
   }
 
+  test("double bounds with NaN and infinities match the aggregation's " +
+      "(Spark's ordering puts NaN last)") {
+    val root = tmp() + "/nan"
+    val store = new LogStore(spark, root, statsCol = Some("k"))
+    store.append(Seq(1.5, Double.NaN, Double.NegativeInfinity, -0.25)
+      .toDF("k"))
+    store.append(Seq(Double.PositiveInfinity, 2.0, -3.0).toDF("k"))
+    store.append(Seq(Double.NaN, Double.NaN).toDF("k"))
+    checkBounds(store, root, "k")
+    assert(store.liveSegmentInfos().map(_.boundsOf("k").map(b =>
+      (b._1, b._2))) == Seq(Some(("-Infinity", "NaN")),
+        Some(("-3.0", "Infinity")), Some(("NaN", "NaN"))))
+  }
+
+  test("a SQL INSERT through the connector records the bounds its " +
+      "tasks saw (DOUBLE stats beside a Bloom column)") {
+    val root = tmp()
+    spark.conf.set("spark.sql.catalog.gfstats",
+      "graft.sources.GraftLogCatalog")
+    spark.conf.set("spark.sql.catalog.gfstats.root", root)
+    spark.sql("CREATE TABLE gfstats.d (d DOUBLE, k STRING) " +
+      "TBLPROPERTIES ('statsCol' = 'd', 'bloomCol' = 'k')")
+    spark.sql("INSERT INTO gfstats.d VALUES (1.5, 'a'), " +
+      "(CAST('NaN' AS DOUBLE), 'b'), (-1e300, NULL), " +
+      "(CAST('-Infinity' AS DOUBLE), 'c'), (NULL, 'd')")
+    spark.sql("INSERT INTO gfstats.d SELECT CAST(id AS DOUBLE) / 7, " +
+      "CAST(id AS STRING) FROM range(0, 50)")
+    val store = LogStore.configured(spark, s"$root/d")
+    assert(store.liveSegmentInfos().size == 2)
+    checkBounds(store, s"$root/d", "d")
+  }
+
   test("clustered multi-segment publish: every segment's bounds match") {
     val root = tmp() + "/clu"
     val store = new LogStore(spark, root, statsCol = Some("k"))
@@ -143,8 +176,8 @@ class FooterStatsSpec extends AnyFunSuite {
       Some("1970-01-01"), None, Some("2024-02-29")))
     store.append(dates(Some("1583-01-01"), Some("9999-12-31")))
     store.append(dates(Some("1969-07-20")))
-    // before the 1582 Gregorian cutover: Spark writes proleptic days
-    // (no legacy rebase), which the footer spells as the cast does
+    // before the 1582 Gregorian cutover: proleptic days, spelled as
+    // the cast spells them
     store.append(dates(Some("0001-01-01"), Some("1000-06-15")))
     checkBounds(store, root, "d")
     assert(store.liveSegmentInfos().head.boundsOf("d").map(b =>
@@ -167,7 +200,7 @@ class FooterStatsSpec extends AnyFunSuite {
         b._1 == "1931-01-02" && b._2 == "1955-05-05")))
   }
 
-  test("a multi-file date segment folds every file's footer bounds") {
+  test("a multi-file date segment folds every file's bounds") {
     val root = tmp() + "/dmulti"
     val store = new LogStore(spark, root, statsCol = Some("d"),
       statsCols = Seq("id"))
@@ -181,11 +214,10 @@ class FooterStatsSpec extends AnyFunSuite {
     checkBounds(store, root, "id")
   }
 
-  test("dates the footer cannot spell identically fall back to the " +
-      "aggregation and stay byte-identical") {
+  test("far-year dates stay byte-identical to the aggregation's") {
     val root = tmp() + "/dfar"
     val store = new LogStore(spark, root, statsCol = Some("d"))
-    // year 10000 spells "+10000-01-01": outside 0001-9999, the job path
+    // year 10000 spells "+10000-01-01", as the cast spells it
     store.append(spark.range(0, 3).select(col("id"),
       date_add(lit(java.sql.Date.valueOf("9999-12-31")),
         col("id").cast("int")).as("d")))

@@ -49,7 +49,7 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(jobsOf(store.append(rows(201L to 400L))) == 1)
   }
 
-  test("append with DATE stats is one job (footer bounds)") {
+  test("append with DATE stats is one job (the write records the bounds)") {
     val root = Files.createTempDirectory("graft-budget").toString + "/d"
     val store = new LogStore(spark, root, statsCol = Some("d"))
     def days(lo: Int) = (lo until lo + 100).map(i => (i.toLong, i))
@@ -59,6 +59,51 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(jobsOf(store.append(days(100))) == 1)
     assert(store.liveSegmentInfos().last.boundsOf("d").map(b =>
       (b._1, b._2)).contains(("1970-03-11", "1970-06-18")))
+  }
+
+  test("append with DOUBLE, DECIMAL or TIMESTAMP stats is one job " +
+      "(the write's tasks record the bounds)") {
+    Seq("CAST(id AS DOUBLE) / 3", "CAST(id AS DECIMAL(12, 2))",
+        "TIMESTAMP_SECONDS(id * 3600)").foreach { e =>
+      val root = Files.createTempDirectory("graft-budget").toString + "/s"
+      val store = new LogStore(spark, root, statsCol = Some("s"))
+      def batch(lo: Long) = spark.range(lo, lo + 100)
+        .selectExpr("id", s"$e AS s")
+      store.append(batch(0))
+      assert(jobsOf(store.append(batch(100))) == 1, e)
+      assert(store.liveSegmentInfos().forall(_.boundsOf("s").nonEmpty), e)
+    }
+  }
+
+  /** A `graft-log` SQL catalog over a fresh directory, its table `t`
+    * created with stats on `id` and a Bloom filter on `v` and holding
+    * one INSERT's rows. */
+  private def sqlTable(): String = {
+    spark.conf.set("spark.sql.catalog.gbudget",
+      "graft.sources.GraftLogCatalog")
+    spark.conf.set("spark.sql.catalog.gbudget.root",
+      Files.createTempDirectory("graft-budget").toString)
+    spark.sql("DROP TABLE IF EXISTS gbudget.t")
+    spark.sql("CREATE TABLE gbudget.t (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('statsCol' = 'id', 'bloomCol' = 'v')")
+    spark.sql("INSERT INTO gbudget.t SELECT id, CAST(id AS STRING) " +
+      "FROM range(0, 100)")
+    "gbudget.t"
+  }
+
+  test("SQL INSERT into a stats + Bloom table is one job (the write)") {
+    val t = sqlTable()
+    assert(jobsOf(spark.sql(s"INSERT INTO $t SELECT id, " +
+      "CAST(id AS STRING) FROM range(100, 200)")) == 1)
+    assert(spark.sql(s"SELECT count(*) FROM $t").head().getLong(0) == 200L)
+  }
+
+  test("SQL UPDATE on a stats + Bloom table is 6 jobs") {
+    val t = sqlTable()
+    assert(jobsOf(spark.sql(s"UPDATE $t SET v = concat('u-', v) " +
+      "WHERE id < 10")) == 6)
+    assert(spark.sql(s"SELECT count(*) FROM $t WHERE v LIKE 'u-%'")
+      .head().getLong(0) == 10L)
   }
 
   test("mergeKeyed on the churn table is 10 jobs") {

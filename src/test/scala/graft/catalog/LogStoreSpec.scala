@@ -1499,6 +1499,13 @@ class LogStoreSpec extends AnyFunSuite {
 
   // ---- publishSegments (the DSv2 sink's commit half) ----
 
+  /** `df` written into the table's directory `seg` by the table's own
+    * segment writer, with its tasks' messages. */
+  private def staged(root: String, df: org.apache.spark.sql.DataFrame,
+      seg: String) = seg ->
+    graft.sources.LogDataWriterFactory(spark, root, s"$root/$seg",
+      df.schema).writeRows(df)
+
   test("publishSegments: staged directories become ONE visible commit " +
       "with full stats/bloom metadata; invisible before, fenced on " +
       "txn replay") {
@@ -1509,11 +1516,10 @@ class LogStoreSpec extends AnyFunSuite {
     // stage two segment dirs the way a distributed writer would
     val df2 = Seq((10L, "x"), (11L, "y")).toDF("id", "k")
     val df3 = Seq((20L, "z")).toDF("id", "k")
-    df2.write.parquet(s"$root/seg-pub-a")
-    df3.write.parquet(s"$root/seg-pub-b")
+    val a = staged(root, df2, "seg-pub-a")
+    val b = staged(root, df3, "seg-pub-b")
     assert(ids(t.read()) == Set(1L), "staged segments must be invisible")
-    val v = t.publishSegments(Seq("seg-pub-a", "seg-pub-b"),
-      df2.schema, txn = Some(7L))
+    val v = t.publishSegments(Seq(a, b), df2.schema, txn = Some(7L))
     assert(v == t.latestVersion())
     assert(ids(t.read()) == Set(1L, 10L, 11L, 20L))
     // both published segments carry stats + bloom like any internal write
@@ -1524,9 +1530,8 @@ class LogStoreSpec extends AnyFunSuite {
     val (_, scanned, live) = t.readRange("10", "11")
     assert(live == 3 && scanned == 1)
     // exactly-once: a replayed epoch publishes nothing
-    df3.write.parquet(s"$root/seg-pub-c")
-    assert(t.publishSegments(Seq("seg-pub-c"), df3.schema,
-      txn = Some(7L)) == -1L)
+    assert(t.publishSegments(Seq(staged(root, df3, "seg-pub-c")),
+      df3.schema, txn = Some(7L)) == -1L)
     assert(ids(t.read()) == Set(1L, 10L, 11L, 20L))
   }
 
@@ -1535,9 +1540,9 @@ class LogStoreSpec extends AnyFunSuite {
     val t = fresh()
     t.append(Seq(1L).toDF("id"))
     val bad = Seq("oops").toDF("id")
-    bad.write.parquet(s"${t.root}/seg-pub-bad")
+    val seg = staged(t.root, bad, "seg-pub-bad")
     val e = intercept[IllegalArgumentException] {
-      t.publishSegments(Seq("seg-pub-bad"), bad.schema)
+      t.publishSegments(Seq(seg), bad.schema)
     }
     assert(e.getMessage.contains("never mutates types"))
     assert(ids(t.read()) == Set(1L))

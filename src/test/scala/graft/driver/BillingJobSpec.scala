@@ -319,6 +319,33 @@ class BillingJobSpec extends AnyFunSuite {
     }
   }
 
+  test("J3: two sessions that normalize to one shop meet one outcome " +
+      "each, so the final append and the report count each session once") {
+    TokenChargeClient.reset()
+    val store = new AppendStore(spark,
+      Files.createTempDirectory("graft-j3").toString + "/usage")
+    val sink = new ChargeSink(() => new TokenChargeClient, concurrency = 2,
+      sleep = _ => ())
+    val job = new BillingJob(spark, store, sink,
+      new CollectingReportSink, cfg)
+    val t0 = ts("2024-01-01 00:00:00")
+    val twoTokens = Seq(("shop-x", "tok-a", t0, t0),
+        ("shop-x.myshopify.com", "tok-b", t0, t0))
+      .toDF("shop", "accessToken", "createdAt", "updatedAt")
+    val events = Seq(("shop-x", "page_viewed", ts("2024-01-15 10:00:00")))
+      .toDF("shop", "name", "created_at")
+    val report = job.processDailyBilling(twoTokens, events, D)
+    assert(report.error.isEmpty)
+    assert(report.recordCount == 2 && report.sessionCount == 2)
+    assert(report.totalPageViews == 2)
+    val finals = store.readOrEmpty(Schemas.usageRecords)
+      .where($"shopify_billing_status" =!= graft.model.Status.Pending)
+    assert(finals.count() == 2)
+    // the outcome kept is the least one, whichever charge ran first
+    assert(finals.select($"shopify_charge_id").as[String].collect().toSet ==
+      Set("gid://fake/AppUsageRecord/shop-x/tok-a"))
+  }
+
   test("replay of the same billing date cannot double-charge: " +
       "idempotency keys collapse re-runs to one creation per shop") {
     CountingChargeClient.reset()

@@ -110,15 +110,11 @@ class GraftSqlDmlSpec extends AnyFunSuite {
           scan.selected.map(s => s"$dir/$s"): _*)
         .withColumn("v", concat(lit("u-"), col("v")))
       val staged = Files.createTempDirectory("graft-dml-stage").toString
-      rewritten.coalesce(1).write.mode("overwrite").parquet(staged)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(staged))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-        .map(_.toString)
+      val messages = LogDataWriterFactory(spark, dir, staged,
+        rewritten.schema).writeRows(rewritten.coalesce(1))
       new GraftReplaceBatchWrite(dir, store.recordedSchema().get, op)
-        .commit(files.map(f => LogWriteMessage(Some(f)): org.apache
-          .spark.sql.connector.write.WriterCommitMessage))
+        .commit(messages.toArray[org.apache.spark.sql.connector.write
+          .WriterCommitMessage])
     }
     // the pushed bounds statically prune the group selection to the
     // one overlapping segment — no runtime subquery needed
@@ -243,15 +239,11 @@ class GraftSqlDmlSpec extends AnyFunSuite {
           scan.selected.map(s => s"$dir/$s"): _*)
         .withColumn("v", concat(lit("u-"), col("v")))
       val staged = Files.createTempDirectory("graft-dml-stage").toString
-      rewritten.coalesce(1).write.mode("overwrite").parquet(staged)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(staged))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-        .map(_.toString)
+      val messages = LogDataWriterFactory(spark, dir, staged,
+        rewritten.schema).writeRows(rewritten.coalesce(1))
       new GraftReplaceBatchWrite(dir, store.recordedSchema().get, op)
-        .commit(files.map(f => LogWriteMessage(Some(f)): org.apache
-          .spark.sql.connector.write.WriterCommitMessage))
+        .commit(messages.toArray[org.apache.spark.sql.connector.write
+          .WriterCommitMessage])
     }
     // static 1-of-N prune on the string bounds + the pushed range
     val (op1, scan1) = plannedUpdate("beta")
